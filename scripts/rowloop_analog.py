@@ -6,7 +6,7 @@ beats its single-node throughput" needs a measured stand-in. The
 reference's architecture is a row-at-a-time Python loop over SQLite
 (`script.py:67-116` iterates `osm_data` rows one by one; per-object
 work happens inside the loop, results are written back per row). This
-script runs the ENGINE'S OWN scaling job (`bench.py::run_scaling_job`:
+script runs the ENGINE'S OWN scaling job (`engine_rollup` below:
 synth → encode → decode → phash → XYZ tile assign → exact ray-cast PIP
 → per-(tile, region) rollup) in exactly that architecture:
 
@@ -189,7 +189,7 @@ def main() -> None:
 
         spark = get_spark(cores=1, shuffle_partitions=1)
         er = engine_rollup(spark, n)
-        # warm leg then timed leg, same discipline as bench.py
+        # untimed warm leg (JIT, plan caches), then the timed leg
         t0 = time.time()
         er2 = engine_rollup(spark, n)
         engine_wall = time.time() - t0

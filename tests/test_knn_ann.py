@@ -503,8 +503,9 @@ def test_knn_topk_block_fuzz_regimes():
             elon, elat = rng.uniform(-180, 180, ne), rng.uniform(-90, 90, ne)
         elif regime == 5:
             qlon, qlat = rng.uniform(-180, 180, nq), rng.uniform(-5, 5, nq)
-            elon = (qlon[rng.integers(0, nq, ne)] + 180) % 360 - 180
-            elat = -rng.uniform(-5, 5, ne)
+            idx = rng.integers(0, nq, ne)
+            elon = (qlon[idx] + 180) % 360 - 180
+            elat = -qlat[idx]
         elif regime == 6:
             elon, elat = rng.uniform(-180, 180, ne), rng.uniform(-85, 85, ne)
             idx = rng.integers(0, ne, nq)
