@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import cells as C
 from ..functions import geometry as G
+from ..session import snapshot_memo
 
 DEFAULT_RES = 7  # ~0.35° cells over the synthetic world; tune per dataset
 
@@ -52,7 +53,11 @@ MAX_POLYGON_DIM_ROWS = 100_000
 
 def collect_polygons(polygons: DataFrame) -> list[dict]:
     """Driver-side materialization of the polygon dim (small by design,
-    like regions_processed.yaml's 1218 rows). Guarded like the kNN/ANN
+    like regions_processed.yaml's 1218 rows). The PIP joins call it
+    through `_polygon_dim`, so it runs once per polygon snapshot: every
+    join over the same snapshot (the validator's `point_in_polygon_tag`,
+    the tile sink's `point_in_polygon_join`, run after run) shares one
+    collect. Guarded like the kNN/ANN
     matrix collects, but folded into the collect itself: the LIMIT
     bounds the driver transfer to MAX+1 rows in the SAME job (no extra
     probe job in the hot path), so an accidentally-huge dim fails fast
@@ -158,14 +163,25 @@ def point_in_polygon_join(
 _EDGE_EPS = 1e-12
 
 
-def _pip_join_native(points, polygons, lon_col, lat_col, res, how: str = "inner") -> DataFrame:
-    spark = points.sparkSession
+def _polygon_dim(
+    polygons: DataFrame, res: int
+) -> tuple[list[dict], pd.DataFrame, DataFrame | None]:
+    """(polys, cover rows, native cover DataFrame) of a polygon
+    snapshot at `res`: the collect, the cell cover and the edge rows
+    are built once per snapshot (`session.snapshot_memo`, slot
+    "polygon_dim") and shared by every PIP join over it. The cover
+    DataFrame is None for an empty polygon dim."""
+    return snapshot_memo(
+        "polygon_dim", polygons, lambda: _build_polygon_dim(polygons, res), res
+    )
+
+
+def _build_polygon_dim(polygons, res):
+    spark = polygons.sparkSession
     polys = collect_polygons(polygons)
-    if not polys:
-        pts = points.withColumn("cell", C.cell_col(F.col(lon_col), F.col(lat_col), res))
-        empty = spark.createDataFrame([], "cell long, polygon_id string, region string")
-        return pts.join(F.broadcast(empty), "cell", how)
     cover_pdf = build_cell_cover(polys, res)
+    if not polys:
+        return polys, cover_pdf, None
     # edges per polygon: all rings flattened (even-odd handles holes)
     edge_rows = []
     for p in polys:
@@ -205,8 +221,17 @@ def _pip_join_native(points, polygons, lon_col, lat_col, res, how: str = "inner"
         .withColumn("edges", F.when(~F.col("full"), F.col("edges")))
         .select("cell", "polygon_id", "region", "full", "edges")
     )
+    return polys, cover_pdf, cover
 
+
+def _pip_join_native(points, polygons, lon_col, lat_col, res, how: str = "inner") -> DataFrame:
+    _, _, cover = _polygon_dim(polygons, res)
     pts = points.withColumn("cell", C.cell_col(F.col(lon_col), F.col(lat_col), res))
+    if cover is None:
+        empty = points.sparkSession.createDataFrame(
+            [], "cell long, polygon_id string, region string"
+        )
+        return pts.join(F.broadcast(empty), "cell", how)
 
     lon = F.col(lon_col)
     lat = F.col(lat_col)
@@ -254,8 +279,7 @@ def _pip_join_native(points, polygons, lon_col, lat_col, res, how: str = "inner"
 
 def _pip_join_pandas(points, polygons, lon_col, lat_col, res) -> DataFrame:
     spark = points.sparkSession
-    polys = collect_polygons(polygons)
-    cover_pdf = build_cell_cover(polys, res)
+    polys, cover_pdf, _ = _polygon_dim(polygons, res)
     cover = spark.createDataFrame(cover_pdf)
     geom = {p["polygon_id"]: p["rings"] for p in polys}
     # STRtree over polygon bboxes, built ONCE per worker (closure):

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..session import snapshot_memo
 from ..sources.wiki_dim import assert_wiki_dim
 from .error_catalog import (
     CATEGORY_ORDER,
@@ -438,19 +439,79 @@ def join_wiki_entities(elements: DataFrame, wiki: DataFrame) -> DataFrame:
     code path with hundreds of constants, and the dim join keeps plan
     size independent of catalog breadth.
 
+    The pre-joined dim is built and cached ONCE per wiki snapshot
+    (`session.snapshot_memo`, slot "wiki_dim"): every validate over the
+    same snapshot reuses the one cached DataFrame, and all four joined
+    selections read it, so `build_wiki_entities_dim`'s dedupe window
+    and the phrase join run at fill time only — not once per selection
+    per query. A new snapshot (new manifest snapshot, or a parquet path
+    rewritten in place) misses and replaces the entry.
+
     `wiki` must satisfy `sources.wiki_dim.CONSUMED_COLUMNS` — the
     documented boundary between the validator and any real wiki-entity
     source; normalize arbitrary dumps with
     `sources.wiki_dim.build_wiki_entities_dim`."""
     wiki = assert_wiki_dim(wiki)
+    dim = snapshot_memo("wiki_dim", wiki, lambda: _fill_wiki_dim(wiki))
+    wp = F.broadcast(
+        dim.select(
+            F.col("article").alias("wikipedia_tag"),
+            F.col("qid").alias("wp_qid"),
+            F.col("exists").alias("wp_exists"),
+            F.col("redirect_to").alias("wp_redirect_to"),
+            F.col("is_disambiguation").alias("wp_is_disambiguation"),
+            F.col("instance_of").alias("wp_instance_of"),
+            F.col("secondary_phrase").alias("wp_phrase"),
+            F.col("sitelinks").alias("wp_sitelinks"),
+        )
+    )
+    wd = F.broadcast(
+        dim.select(
+            F.col("qid").alias("wikidata_tag"),
+            F.col("exists").alias("wd_exists"),
+            F.col("redirect_to").alias("wd_redirect_to"),
+            F.col("is_disambiguation").alias("wd_is_disambiguation"),
+            F.col("instance_of").alias("wd_instance_of"),
+            F.col("secondary_phrase").alias("wd_phrase"),
+            F.col("sitelinks").alias("wd_sitelinks"),
+        )
+    )
+    redir = F.broadcast(
+        dim.select(
+            F.col("qid").alias("wp_redirect_to"),
+            F.col("article").alias("wp_redirect_article"),
+        )
+    )
+    # secondary-wikidata existence (reference 'secondary wikidata tag
+    # links to 404' checks prefixed wikidata keys OUTSIDE the validated
+    # pair too)
+    sec = F.broadcast(
+        dim.select(
+            F.col("qid").alias("sec_wikidata_value"),
+            F.col("exists").alias("sec_wd_exists"),
+        )
+    )
+    return (
+        elements.join(wp, "wikipedia_tag", "left")
+        .join(wd, "wikidata_tag", "left")
+        .join(redir, "wp_redirect_to", "left")
+        .join(sec, "sec_wikidata_value", "left")
+    )
+
+
+def _fill_wiki_dim(wiki: DataFrame) -> DataFrame:
+    """`wiki` ⋈ the secondary-class phrase dim, cached. The first query
+    over it fills the cache inside its own jobs (no separate action:
+    Spark's per-partition cache lock computes each block once even
+    when the four broadcasts race into it); every later validate over
+    the snapshot reads the four broadcasts from the cache."""
     cache = _expr_cache()
     phrase_dim = cache.get("phrase_dim")
     if phrase_dim is None:
         # static 132-row literal dim — one LocalTableScan per JVM, not
-        # one createDataFrame round trip per validate() call. pandas +
-        # schema so it plans as LocalTableScan; the list-of-tuples form
-        # planned as a pickled ExistingRDD, whose TWO broadcast builds
-        # per validate (wp and wd sides) each ran a Python task.
+        # one createDataFrame round trip per fill. pandas + schema so it
+        # plans as LocalTableScan; the list-of-tuples form plans as a
+        # pickled ExistingRDD, whose scans each run a Python task.
         import pandas as _pd
 
         items = list(SECONDARY_CLASS_PHRASES.items())
@@ -466,56 +527,7 @@ def join_wiki_entities(elements: DataFrame, wiki: DataFrame) -> DataFrame:
             )
         )
         cache["phrase_dim"] = phrase_dim
-    # join the phrase dim only into the two selections that read
-    # secondary_phrase; the redirect-target and secondary-existence
-    # dims never use it, and Catalyst cannot prune a left join out of
-    # their lineage without uniqueness knowledge
-    wiki_raw = wiki
-    wiki = wiki.join(phrase_dim, "instance_of", "left")
-    wp = F.broadcast(
-        wiki.select(
-            F.col("article").alias("wikipedia_tag"),
-            F.col("qid").alias("wp_qid"),
-            F.col("exists").alias("wp_exists"),
-            F.col("redirect_to").alias("wp_redirect_to"),
-            F.col("is_disambiguation").alias("wp_is_disambiguation"),
-            F.col("instance_of").alias("wp_instance_of"),
-            F.col("secondary_phrase").alias("wp_phrase"),
-            F.col("sitelinks").alias("wp_sitelinks"),
-        )
-    )
-    wd = F.broadcast(
-        wiki.select(
-            F.col("qid").alias("wikidata_tag"),
-            F.col("exists").alias("wd_exists"),
-            F.col("redirect_to").alias("wd_redirect_to"),
-            F.col("is_disambiguation").alias("wd_is_disambiguation"),
-            F.col("instance_of").alias("wd_instance_of"),
-            F.col("secondary_phrase").alias("wd_phrase"),
-            F.col("sitelinks").alias("wd_sitelinks"),
-        )
-    )
-    redir = F.broadcast(
-        wiki_raw.select(
-            F.col("qid").alias("wp_redirect_to"),
-            F.col("article").alias("wp_redirect_article"),
-        )
-    )
-    # secondary-wikidata existence (reference 'secondary wikidata tag
-    # links to 404' checks prefixed wikidata keys OUTSIDE the validated
-    # pair too)
-    sec = F.broadcast(
-        wiki_raw.select(
-            F.col("qid").alias("sec_wikidata_value"),
-            F.col("exists").alias("sec_wd_exists"),
-        )
-    )
-    return (
-        elements.join(wp, "wikipedia_tag", "left")
-        .join(wd, "wikidata_tag", "left")
-        .join(redir, "wp_redirect_to", "left")
-        .join(sec, "sec_wikidata_value", "left")
-    )
+    return wiki.join(phrase_dim, "instance_of", "left").cache()
 
 
 def _lang_redirect_map_col() -> Column:

@@ -168,9 +168,7 @@ def materialize_concurrently(
     image-side scan feeding the tile join) overlaps the shared lineage.
     Spark's block-manager cache takes a per-partition compute lock, so a
     not-yet-materialized `.cache()` upstream is still computed exactly
-    once even when several sink jobs race into it. Measured on the
-    flagship (60k elements / 12k images, local[32]): serial 5.54 s →
-    concurrent 4.78 s min-of-4, identical row counts.
+    once even when several sink jobs race into it.
 
     Each sink runs under `inheritable_thread_target` so the caller's
     JVM thread-locals — job group (cancellation scope), fair-scheduler

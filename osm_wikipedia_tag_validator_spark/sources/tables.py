@@ -16,7 +16,11 @@ commits, incremental scans — SURVEY.md §4). `write_table`/`read_table`/
   the reference approximated with temp-file rename,
   `obtain_from_overpass.py:45-51`): snapshot isolation via per-snapshot
   data dirs + `os.replace` commit point, time travel via retained
-  snapshots, incremental scan via key+ts anti-join.
+  snapshots, incremental scan via key+ts anti-join. Every manifest (and
+  its `snapshots.jsonl` entry) carries the snapshot's `schema` — the
+  schema parquet inference would return — so a read plans with
+  `spark.read.schema(...)` and launches no inference job; an entry
+  written before the field existed falls back to inference.
 - ``backend="auto"`` (default) — iceberg when `iceberg_available`
   (jar on the JVM classpath AND catalog configured), else manifest.
 
@@ -46,6 +50,7 @@ import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 # match the Spark minor line: iceberg-spark-runtime-<spark>_<scala>
 ICEBERG_RUNTIME_PACKAGE = "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.10.0"
@@ -142,7 +147,8 @@ def write_table(
     backend: str = "auto",
 ) -> dict:
     """Snapshot-versioned table write; returns the commit manifest
-    {snapshot_id, committed_at, partition_by, meta[, parent_snapshot_id]}.
+    {snapshot_id, committed_at, partition_by, meta[, schema]
+    [, parent_snapshot_id]}.
 
     iceberg backend: `writeTo(ident).using("iceberg")` createOrReplace
     with `partitionedBy` — a real Iceberg snapshot commit; the returned
@@ -155,7 +161,11 @@ def write_table(
     approximated with temp-file + rename
     (`obtain_from_overpass.py:45-51`). Old snapshots remain readable
     (time travel) and the parent chain supports incremental "what
-    changed since snapshot X" reads.
+    changed since snapshot X" reads. `schema` (StructType JSON) is what
+    parquet inference over the data dir would return — the written
+    schema with every field nullable, nested fields included, partition
+    columns last — so `read_table` skips the inference job; manifests
+    without it (older writes) are read with inference.
     """
     if _resolve_backend(df.sparkSession, backend) == "iceberg":
         return _write_table_iceberg(df, path, partition_by, snapshot_meta)
@@ -169,6 +179,7 @@ def write_table(
         "committed_at": int(time.time()),
         "partition_by": partition_by or [],
         "meta": snapshot_meta or {},
+        "schema": _read_schema(df.schema, partition_by or []).jsonValue(),
     }
     prev = read_manifest(path)
     if prev:
@@ -181,6 +192,30 @@ def write_table(
     with open(os.path.join(path, "snapshots.jsonl"), "a") as f:
         f.write(json.dumps(manifest) + "\n")
     return manifest
+
+
+def _nullable(dt: DataType) -> DataType:
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _read_schema(written: StructType, partition_by: list[str]) -> StructType:
+    """The schema parquet inference returns for a dir written with
+    `written`: Spark writes file sources as nullable at every level, and
+    partition discovery appends the partition columns after the data
+    columns."""
+    fields = {f.name: f for f in _nullable(written).fields}
+    return StructType(
+        [f for name, f in fields.items() if name not in partition_by]
+        + [fields[c] for c in partition_by]
+    )
 
 
 def read_manifest(path: str) -> dict | None:
@@ -232,17 +267,28 @@ def read_table(
     spark: SparkSession, path: str, snapshot_id: str | None = None,
     backend: str = "auto",
 ) -> DataFrame:
-    """Read the current snapshot, or any retained one (time travel)."""
+    """Read the current snapshot, or any retained one (time travel).
+    Manifest backend: with the snapshot's recorded `schema`, no Spark
+    job runs until the DataFrame is used; without it, inference."""
     if _resolve_backend(spark, backend) == "iceberg":
         ident = iceberg_table_ident(path)
         reader = spark.read
         if snapshot_id is not None:
             reader = reader.option("snapshot-id", snapshot_id)
         return reader.table(ident)
-    sid = snapshot_id or (read_manifest(path) or {}).get("snapshot_id")
+    entry = read_manifest(path) or {}
+    if snapshot_id is not None and entry.get("snapshot_id") != snapshot_id:
+        entry = next(
+            (e for e in snapshots(path) if e["snapshot_id"] == snapshot_id),
+            {"snapshot_id": snapshot_id},
+        )
+    sid = entry.get("snapshot_id")
     if sid is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
-    return spark.read.parquet(os.path.join(path, "data", sid))
+    reader = spark.read
+    if "schema" in entry:
+        reader = reader.schema(StructType.fromJson(entry["schema"]))
+    return reader.parquet(os.path.join(path, "data", sid))
 
 
 def with_cell_partition(

@@ -99,11 +99,14 @@ def build_wiki_entities_dim(
       and therefore golden fixtures — are stable regardless of source
       ordering.
 
-    The result is driver-side-small by design (the validator broadcasts
-    four projections of it); a source that is NOT small must be
-    pre-filtered to the qids/articles referenced by the elements under
-    validation before being handed here — that semi-join is the
-    source's contract, not the validator's.
+    The result is driver-side-small by design: the validator joins the
+    phrase dim into it and caches that one pre-joined dim per wiki
+    snapshot (`operators.validator.join_wiki_entities`), so this
+    function's qid window runs once per snapshot, not once per validate.
+    A source that is NOT small must be pre-filtered to the
+    qids/articles referenced by the elements under validation before
+    being handed here — that semi-join is the source's contract, not
+    the validator's.
     """
     df = raw_wiki
     for src, dst in (column_map or {}).items():
@@ -219,7 +222,7 @@ def wikidata_dump_to_dim(
     Scale note: the parse is one pass of text → from_json; the dim
     contract's pre-filter rule applies unchanged (semi-join a full dump
     to the referenced qids BEFORE handing the result to the validator,
-    which broadcasts four projections of it). With `redirects_path` the
+    which caches and broadcasts it). With `redirects_path` the
     parsed projection is persisted (MEMORY_AND_DISK) by default so its
     two consumers share one parse. Cache lifecycle, honestly: the
     returned DataFrame is lazy, so this function has no point at which

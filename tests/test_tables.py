@@ -1,5 +1,9 @@
-import pyspark.sql.functions as F
+import json
 
+import pyspark.sql.functions as F
+import pytest
+
+from osm_wikipedia_tag_validator_spark.operators import validator as V
 from osm_wikipedia_tag_validator_spark.sources import tables as T
 
 
@@ -130,3 +134,65 @@ def test_iceberg_backend_real(spark, tmp_path):
     assert m2["parent_snapshot_id"] == m1["snapshot_id"]
     assert T.read_table(spark, path, backend="iceberg").count() == 2
     assert T.read_table(spark, path, m1["snapshot_id"], backend="iceberg").count() == 1
+
+
+def _flat(spark):
+    return spark.createDataFrame(
+        [("node", 1, 100, "a"), ("way", 2, 100, None), ("relation", 3, 150, "c")],
+        "type string, id long not null, download_timestamp long, payload string",
+    )
+
+
+def _nested(spark):
+    """The validated state's shape: the `REPORT_SCHEMA` struct (nested
+    arrays of structs) beside a map column, plus nested fields written
+    as non-nullable (which inference reads back as nullable)."""
+    base = _flat(spark).withColumn("tags", F.create_map(F.lit("wikidata"), F.col("payload")))
+    return (
+        base.withColumn("pairs", F.array(F.struct(F.col("id").alias("k"), F.lit("v").alias("v"))))
+        .withColumn("fixed", F.create_map(F.lit("k"), F.lit(1)))
+        .withColumn("status", F.lit("error"))
+        .withColumn("error_id", F.lit("malformed wikidata tag"))
+        .withColumn("report", F.lit(None).cast(V.REPORT_SCHEMA))
+        .withColumn("osm_object_url", F.lit("https://www.openstreetmap.org/node/1"))
+    )
+
+
+@pytest.mark.parametrize(
+    "make, partition_by",
+    [(_flat, None), (_nested, None), (_flat, ["type"]), (_nested, ["type"])],
+    ids=["flat", "nested", "partitioned", "nested-partitioned"],
+)
+def test_read_table_uses_manifest_schema(spark, tmp_path, count_jobs, make, partition_by):
+    """A `write_table` table reads without a schema-inference job, and
+    its recorded schema is exactly what inference returns."""
+    path = str(tmp_path / "tbl")
+    df = make(spark)
+    m1 = T.write_table(df, path, partition_by=partition_by)
+    m2 = T.write_table(df.filter(F.col("id") > 1), path, partition_by=partition_by)
+    assert m2["schema"] == T.snapshots(path)[1]["schema"]
+
+    for sid, n in ((None, 2), (m1["snapshot_id"], 3)):  # current, then time travel
+        got, jobs = count_jobs(lambda: T.read_table(spark, path, sid))
+        assert jobs == 0
+        inferred = spark.read.parquet(f"{path}/data/{sid or m2['snapshot_id']}")
+        assert got.schema == inferred.schema
+        assert got.count() == n
+    if partition_by:
+        assert got.columns[-1] == "type"
+
+
+def test_read_table_without_manifest_schema_infers(spark, tmp_path, count_jobs):
+    """Manifests written before the `schema` field still read."""
+    path = str(tmp_path / "tbl")
+    m = T.write_table(_flat(spark), path, partition_by=["type"])
+    for name in ("manifest.json", "snapshots.jsonl"):
+        p = tmp_path / "tbl" / name
+        entries = [json.loads(line) for line in p.read_text().splitlines()]
+        for e in entries:
+            del e["schema"]
+        p.write_text("\n".join(json.dumps(e) for e in entries) + "\n")
+    for sid in (None, m["snapshot_id"]):
+        got, jobs = count_jobs(lambda: T.read_table(spark, path, sid))
+        assert jobs >= 1  # schema inference
+        assert sorted(r["id"] for r in got.collect()) == [1, 2, 3]
