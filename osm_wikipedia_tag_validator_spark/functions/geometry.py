@@ -1,19 +1,18 @@
-"""Vectorized planar geometry: ray-casting PIP + STR-packed R-tree.
+"""Vectorized geometry: ray-casting point-in-polygon and great-circle distance.
 
 Replaces the reference's spatial tests — hardcoded per-country bboxes
 (`osm_editor_bot_for_approved_tasks.py:241-298`) and per-point Nominatim
-reverse-geocode network calls (`:210-220`) — with exact local math that
-runs vectorized inside Arrow-batched pandas UDFs.
+reverse-geocode network calls (`:210-220`) — with exact local math. The
+numpy functions here are the driver-side geometry (the cell cover's
+fully-inside test) and the oracle that the Catalyst refine in
+`operators/spatial_join.py` is checked against.
 
-Conventions (pinned by tests/test_geometry.py):
+Conventions (pinned by tests/test_spatial_join.py and
+tests/test_pip_property.py):
   * Ray casting, even-odd rule, ray shoots in +x direction.
   * A point exactly ON a polygon edge or vertex counts as INSIDE.
   * Rings may be given in either winding order; first ring is the
     shell, subsequent rings are holes (even-odd handles both).
-
-STRtree: Sort-Tile-Recursive bulk-packed R-tree (Leutenegger, Lopez &
-Edgington, ICDE 1997 — public algorithm). Built once per partition /
-cell group inside a grouped pandas UDF, never per row.
 """
 
 from __future__ import annotations
@@ -100,104 +99,6 @@ def ring_bbox(ring: np.ndarray) -> tuple[float, float, float, float]:
         float(r[:, 0].max()),
         float(r[:, 1].max()),
     )
-
-
-class STRtree:
-    """Sort-Tile-Recursive bulk-loaded R-tree over bboxes.
-
-    Query returns candidate item indices whose bbox intersects the
-    query bbox/point; exact tests (ray cast) refine afterwards. Pure
-    numpy; built once per UDF batch group, O(n log n) build.
-    """
-
-    def __init__(self, bboxes: np.ndarray, node_capacity: int = 16):
-        # bboxes: (n, 4) [xmin, ymin, xmax, ymax]
-        self.bboxes = np.asarray(bboxes, dtype=np.float64).reshape(-1, 4)
-        n = len(self.bboxes)
-        self.node_capacity = node_capacity
-        if n == 0:
-            self.levels: list[tuple[np.ndarray, np.ndarray]] = []
-            return
-        # STR packing: sort by center-x, slice into vertical strips,
-        # sort each strip by center-y, pack runs of `capacity`.
-        idx = np.arange(n)
-        cx = (self.bboxes[:, 0] + self.bboxes[:, 2]) / 2
-        cy = (self.bboxes[:, 1] + self.bboxes[:, 3]) / 2
-        order = np.lexsort((cy, cx))
-        leaf_count = int(np.ceil(n / node_capacity))
-        strips = int(np.ceil(np.sqrt(leaf_count)))
-        per_strip = int(np.ceil(n / strips))
-        packed = []
-        for s in range(strips):
-            strip = order[s * per_strip : (s + 1) * per_strip]
-            strip = strip[np.argsort(cy[strip], kind="stable")]
-            packed.append(strip)
-        order = np.concatenate(packed) if packed else order
-        self.order = idx[order]
-        # leaf level: groups of node_capacity in packed order
-        self.levels = []
-        cur_boxes = self.bboxes[self.order]
-        cur_ptr = self.order
-        while len(cur_boxes) > node_capacity:
-            ngroups = int(np.ceil(len(cur_boxes) / node_capacity))
-            gb = np.empty((ngroups, 4))
-            starts = np.arange(ngroups) * node_capacity
-            for g in range(ngroups):
-                sl = cur_boxes[g * node_capacity : (g + 1) * node_capacity]
-                gb[g] = [sl[:, 0].min(), sl[:, 1].min(), sl[:, 2].max(), sl[:, 3].max()]
-            self.levels.append((gb, starts))
-            cur_boxes = gb
-        self._leaf_boxes = self.bboxes[self.order]
-
-    def query_point(self, x: float, y: float) -> np.ndarray:
-        """Item indices whose bbox contains point (x, y)."""
-        return self.query_bbox(x, y, x, y)
-
-    def query_bbox(self, xmin, ymin, xmax, ymax) -> np.ndarray:
-        if len(self.bboxes) == 0:
-            return np.empty(0, dtype=np.int64)
-        # Walk levels top-down narrowing candidate leaf ranges. For the
-        # engine's group sizes (≤ thousands of polygons per cell group)
-        # a vectorized scan of the leaf boxes is already fast; levels
-        # bound the scan for bigger sets.
-        cand = np.arange(len(self.order))
-        if self.levels:
-            gb, _ = self.levels[-1]
-            # top level hit test
-            top_hit = (
-                (gb[:, 0] <= xmax)
-                & (gb[:, 2] >= xmin)
-                & (gb[:, 1] <= ymax)
-                & (gb[:, 3] >= ymin)
-            )
-            if not top_hit.any():
-                return np.empty(0, dtype=np.int64)
-        lb = self._leaf_boxes
-        hit = (
-            (lb[:, 0] <= xmax) & (lb[:, 2] >= xmin) & (lb[:, 1] <= ymax) & (lb[:, 3] >= ymin)
-        )
-        return self.order[hit]
-
-    def query_points(self, px: np.ndarray, py: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """Vectorized: all (point_idx, item_idx) bbox-containment pairs."""
-        if len(self.bboxes) == 0 or len(px) == 0:
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
-        lb = self._leaf_boxes
-        px = np.asarray(px, dtype=np.float64)
-        py = np.asarray(py, dtype=np.float64)
-        # (m, n) containment matrix in chunks to bound memory
-        chunk = max(1, int(4_000_000 / max(1, len(lb))))
-        pis, iis = [], []
-        for s in range(0, len(px), chunk):
-            sx = px[s : s + chunk][:, None]
-            sy = py[s : s + chunk][:, None]
-            hit = (lb[None, :, 0] <= sx) & (lb[None, :, 2] >= sx) & (
-                lb[None, :, 1] <= sy
-            ) & (lb[None, :, 3] >= sy)
-            pi, ii = np.nonzero(hit)
-            pis.append(pi + s)
-            iis.append(self.order[ii])
-        return np.concatenate(pis), np.concatenate(iis)
 
 
 def haversine_km(

@@ -11,32 +11,32 @@ Reference semantics replaced (SURVEY.md §2.3 J4/J5/J6):
 Spark-first plan (scales to 10^12 points / 1000 executors):
 
   1. Polygon set is a small dim (like the reference's region config) →
-     cover each polygon's bbox with grid cells at `res` on the driver
-     (numpy, functions/cells.cover_bbox) and BROADCAST the
-     (cell, polygon_id) cover table. Cells fully inside the shell and
-     outside every hole are marked `full` — points landing there skip
-     the exact test entirely.
+     collected once per snapshot, each polygon's bbox covered with grid
+     cells at `res` on the driver (numpy, functions/cells.cover_bbox).
+     Cells fully inside the shell and outside every hole are marked
+     `full` — points landing there skip the exact test entirely. The
+     dim is BROADCAST as one row per cell: `cands`, the cell's candidate
+     polygons sorted by polygon_id, each with its region, `full` flag
+     and edge array (NULL when full).
   2. Points get `cell = cell_col(lon, lat, res)` as a pure Catalyst
      expression (whole-stage codegen, no UDF, no shuffle).
-  3. Candidate join: `points ⋈ broadcast(cover) ON cell` — a broadcast
-     hash join; the 100 TB fact side is never shuffled. Hot-city skew
-     is irrelevant here (no shuffle); downstream groupBys use
-     `salted_*` helpers from this module.
-  4. Exact refine: `mapInPandas` batch filter. Polygon rings ride into
-     the workers via the broadcast cover payload (closure), an STRtree
-     prunes bbox candidates inside each Arrow batch, ray-casting
-     (on-edge = inside) decides. No per-row Python.
+  3. Candidate join: `points ⋈ broadcast(cells) ON cell` — a broadcast
+     hash join on a unique key; the 100 TB fact side is never shuffled.
+     Hot-city skew is irrelevant here (no shuffle).
+  4. Exact refine: `filter(cands, inside)` as Catalyst higher-order
+     functions — even-odd ray cast over the edge array, on-edge =
+     inside. No Python worker, no Arrow hop.
 
-The result is one row per (point, containing polygon).
+`point_in_polygon_join` explodes the hits into one row per (point,
+containing polygon); `point_in_polygon_tag` keeps every point row once,
+tagged with its first hit (lowest polygon_id).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions import cells as C
 from ..functions import geometry as G
@@ -132,107 +132,70 @@ def build_cell_cover(
     return pd.DataFrame(rows, columns=["cell", "polygon_id", "region", "full"])
 
 
-def point_in_polygon_join(
-    points: DataFrame,
-    polygons: DataFrame,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int = DEFAULT_RES,
-    strategy: str = "native",
-) -> DataFrame:
-    """points ⋈ polygons with exact containment (on-edge = inside).
-
-    Output: all `points` columns + (cell, polygon_id, region).
-    Points in no polygon are dropped (inner-join semantics); use
-    `point_in_polygon_tag` for left semantics.
-
-    strategy='native' (default): the ray-cast refine runs as Catalyst
-    higher-order functions over the polygon's edge array carried in the
-    broadcast cover rows — whole-stage codegen, no Python worker, no
-    Arrow hop. Cells marked fully-inside skip even that.
-    strategy='pandas': vectorized numpy refine in mapInPandas — the
-    fallback when polygons are too complex to inline as edge arrays
-    (the edge array is O(vertices) per candidate row in the broadcast,
-    so beyond ~10^4-vertex polygons prefer the grouped-numpy path).
-    """
-    if strategy == "native":
-        return _pip_join_native(points, polygons, lon_col, lat_col, res)
-    return _pip_join_pandas(points, polygons, lon_col, lat_col, res)
-
-
 _EDGE_EPS = 1e-12
 
+_CELL_DIM_SCHEMA = (
+    "cell long, cands array<struct<polygon_id:string, region:string, full:boolean, "
+    "edges:array<struct<x0:double,y0:double,x1:double,y1:double>>>>"
+)
 
-def _polygon_dim(
-    polygons: DataFrame, res: int
-) -> tuple[list[dict], pd.DataFrame, DataFrame | None]:
-    """(polys, cover rows, native cover DataFrame) of a polygon
-    snapshot at `res`: the collect, the cell cover and the edge rows
-    are built once per snapshot (`session.snapshot_memo`, slot
-    "polygon_dim") and shared by every PIP join over it. The cover
-    DataFrame is None for an empty polygon dim."""
+
+def _polygon_dim(polygons: DataFrame, res: int) -> DataFrame:
+    """The broadcast cell dim of a polygon snapshot at `res`: one row
+    per covered cell with its candidate polygons. The collect, the cell
+    cover and the edge arrays are built once per snapshot
+    (`session.snapshot_memo`, slot "polygon_dim") and shared by every
+    PIP join over it."""
     return snapshot_memo(
         "polygon_dim", polygons, lambda: _build_polygon_dim(polygons, res), res
     )
 
 
-def _build_polygon_dim(polygons, res):
-    spark = polygons.sparkSession
+def _build_polygon_dim(polygons: DataFrame, res: int) -> DataFrame:
     polys = collect_polygons(polygons)
-    cover_pdf = build_cell_cover(polys, res)
-    if not polys:
-        return polys, cover_pdf, None
     # edges per polygon: all rings flattened (even-odd handles holes)
-    edge_rows = []
+    edges = {}
     for p in polys:
-        edges = []
+        pe = []
         for ring in p["rings"]:
             r = np.asarray(ring, dtype=np.float64)
             if len(r) >= 2 and np.allclose(r[0], r[-1]):
                 r = r[:-1]
-            nxt = np.roll(r, -1, axis=0)
-            edges.extend(
-                (float(a[0]), float(a[1]), float(b[0]), float(b[1]))
-                for a, b in zip(r, nxt)
+            pe.extend(
+                {"x0": float(a[0]), "y0": float(a[1]), "x1": float(b[0]), "y1": float(b[1])}
+                for a, b in zip(r, np.roll(r, -1, axis=0))
             )
-        edge_rows.append((p["polygon_id"], edges))
+        edges[p["polygon_id"]] = pe
+    cover = build_cell_cover(polys, res).sort_values(["cell", "polygon_id", "region"])
+    cells = [
+        (
+            int(cell),
+            [
+                # fully-inside cells don't need the edge array at all
+                {"polygon_id": pid, "region": region, "full": bool(full),
+                 "edges": None if full else edges[pid]}
+                for pid, region, full in zip(g["polygon_id"], g["region"], g["full"])
+            ],
+        )
+        for cell, g in cover.groupby("cell", sort=False)
+    ]
     # pandas frame + explicit schema → driver-local LocalTableScan;
     # a plain list-of-tuples goes through applySchemaToPythonRDD (a
-    # pickled ExistingRDD) and every broadcast build of the cover then
+    # pickled ExistingRDD) and every broadcast build of the dim then
     # launches a Python task — one per PIP join per leg (visible as
     # `Scan ExistingRDD` in plans/r06/pip_convex_before.txt, gone in
     # the after plan). Same trick world.py's dim constructors use.
-    edges_df = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "polygon_id": [pid for pid, _ in edge_rows],
-                "edges": [
-                    [{"x0": a, "y0": b, "x1": c, "y1": d} for a, b, c, d in edges]
-                    for _, edges in edge_rows
-                ],
-            }
-        ),
-        "polygon_id string, edges array<struct<x0:double,y0:double,x1:double,y1:double>>",
+    return polygons.sparkSession.createDataFrame(
+        pd.DataFrame(cells, columns=["cell", "cands"]), _CELL_DIM_SCHEMA
     )
-    cover = (
-        spark.createDataFrame(cover_pdf)
-        .join(edges_df, "polygon_id")
-        # fully-inside cells don't need the edge array at all
-        .withColumn("edges", F.when(~F.col("full"), F.col("edges")))
-        .select("cell", "polygon_id", "region", "full", "edges")
-    )
-    return polys, cover_pdf, cover
 
 
-def _pip_join_native(points, polygons, lon_col, lat_col, res, how: str = "inner") -> DataFrame:
-    _, _, cover = _polygon_dim(polygons, res)
-    pts = points.withColumn("cell", C.cell_col(F.col(lon_col), F.col(lat_col), res))
-    if cover is None:
-        empty = points.sparkSession.createDataFrame(
-            [], "cell long, polygon_id string, region string"
-        )
-        return pts.join(F.broadcast(empty), "cell", how)
-
+def _hits(points: DataFrame, polygons: DataFrame, lon_col: str, lat_col: str,
+          res: int, how: str) -> DataFrame:
+    """`points` columns + `cell` + `_hits`: the polygons (polygon_id,
+    region; sorted by polygon_id) that contain each point. `how` is the
+    join with the cell dim: "inner" drops points outside every cell,
+    "left" keeps them with NULL `_hits`."""
     lon = F.col(lon_col)
     lat = F.col(lat_col)
 
@@ -263,65 +226,46 @@ def _pip_join_native(points, polygons, lon_col, lat_col, res, how: str = "inner"
             & (lat <= F.greatest(e["y0"], e["y1"]) + F.lit(_EDGE_EPS))
         )
 
-    cov = F.broadcast(cover).alias("_cov")
-    inside = F.col("_cov.full") | F.exists("_cov.edges", on_edge) | (
-        F.size(F.filter("_cov.edges", crossing)) % 2 == 1
+    def inside(c):
+        return c["full"] | F.exists(c["edges"], on_edge) | (
+            F.size(F.filter(c["edges"], crossing)) % 2 == 1
+        )
+
+    pts = points.withColumn("cell", C.cell_col(lon, lat, res)).alias("_pts")
+    dim = F.broadcast(_polygon_dim(polygons, res)).alias("_dim")
+    joined = pts.join(dim, F.col("_pts.cell") == F.col("_dim.cell"), how)
+    # the hits drop the O(vertices) edge arrays right away, so they are
+    # never copied into output rows
+    hits = F.transform(
+        F.filter("_dim.cands", inside),
+        lambda c: F.struct(c["polygon_id"].alias("polygon_id"), c["region"].alias("region")),
     )
-    # containment is part of the JOIN CONDITION, not a post-filter: the
-    # hash join evaluates it against the build-side row in place, so the
-    # O(vertices) edge array is never copied into output rows (copying
-    # it made the stage memory-bandwidth-bound at high DOP)
-    joined = pts.alias("_pts").join(
-        cov, (F.col("_pts.cell") == F.col("_cov.cell")) & inside, how
+    return joined.select("_pts.*", hits.alias("_hits"))
+
+
+def point_in_polygon_join(
+    points: DataFrame,
+    polygons: DataFrame,
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    res: int = DEFAULT_RES,
+) -> DataFrame:
+    """points ⋈ polygons with exact containment (on-edge = inside).
+
+    Output: all `points` columns + (cell, polygon_id, region), one row
+    per (point, containing polygon). Points in no polygon are dropped
+    (inner-join semantics); use `point_in_polygon_tag` for left
+    semantics."""
+    hits = _hits(points, polygons, lon_col, lat_col, res, "inner")
+    cols = [c for c in hits.columns if c != "_hits"]
+    # explode_outer + filter, not explode: for explode the optimizer
+    # infers `size(_hits) > 0` and pushes it into the join condition,
+    # which would run the whole refine twice per candidate row
+    return (
+        hits.select(*cols, F.explode_outer("_hits").alias("_hit"))
+        .filter(F.col("_hit").isNotNull())
+        .select(*cols, "_hit.polygon_id", "_hit.region")
     )
-    return joined.select("_pts.*", F.col("_cov.polygon_id"), F.col("_cov.region"))
-
-
-def _pip_join_pandas(points, polygons, lon_col, lat_col, res) -> DataFrame:
-    spark = points.sparkSession
-    polys, cover_pdf, _ = _polygon_dim(polygons, res)
-    cover = spark.createDataFrame(cover_pdf)
-    geom = {p["polygon_id"]: p["rings"] for p in polys}
-    # STRtree over polygon bboxes, built ONCE per worker (closure):
-    # inside each Arrow batch, bbox containment prunes which exact
-    # ray-cast tests run — the candidate filter for large polygon sets
-    # (north star: "STRtree candidate pruning + ray-casting inside the
-    # UDF").
-    pids = [p["polygon_id"] for p in polys]
-    bboxes = np.array([G.ring_bbox(p["rings"][0]) for p in polys])
-
-    pts = points.withColumn("cell", C.cell_col(F.col(lon_col), F.col(lat_col), res))
-    cand = pts.join(F.broadcast(cover), "cell")
-
-    out_schema = cand.drop("full").schema
-
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tree = G.STRtree(bboxes)
-        pid_index = {p: i for i, p in enumerate(pids)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            keep = pdf["full"].to_numpy(dtype=bool).copy()
-            todo = ~keep
-            if todo.any():
-                sub = pdf[todo]
-                px = sub[lon_col].to_numpy()
-                py = sub[lat_col].to_numpy()
-                sub_pid = sub["polygon_id"].map(pid_index).to_numpy()
-                # bbox prune: a row needs the exact test only if its own
-                # polygon's bbox contains the point
-                pi, ii = tree.query_points(px, py)
-                cand_rows = pi[ii == sub_pid[pi]]
-                ok = np.zeros(len(sub), dtype=bool)
-                for pidx in np.unique(sub_pid[cand_rows]):
-                    rows = cand_rows[sub_pid[cand_rows] == pidx]
-                    ok[rows] = G.points_in_polygon(
-                        px[rows], py[rows], geom[pids[pidx]]
-                    )
-                keep[todo] = ok
-            yield pdf.loc[keep].drop(columns=["full"])
-
-    return cand.mapInPandas(refine, out_schema)
 
 
 def point_in_polygon_tag(
@@ -330,54 +274,30 @@ def point_in_polygon_tag(
     lon_col: str = "lon",
     lat_col: str = "lat",
     res: int = DEFAULT_RES,
-    key_cols: list[str] | None = None,
-    unique_keys: bool = False,
 ) -> DataFrame:
-    """Left variant: every point row kept once, with the containing
-    region/polygon (first by polygon_id order) or NULLs.
+    """Left variant: every point row kept once, as it is, with the
+    containing polygon_id / containing_region (the lowest polygon_id if
+    several contain it) or NULLs.
 
     Used by the validator for the 'element outside declared region'
     check (the engine's exact replacement for the reference's
-    Nominatim-was-it-in-the-country gate). Pass `unique_keys=True`
-    ONLY when key_cols are unique per row (the validator's invariant —
-    points come out of latest_per_key): it enables the fused one-pass
-    plan, whose per-key window would silently collapse duplicate-keyed
-    rows. The default join-back path is safe for any input."""
-    key_cols = key_cols or ["type", "id"]
-    clash = {"cell", "region"} & set(points.columns)
+    Nominatim-was-it-in-the-country gate). Each row is tagged by its
+    own coordinates: no key, window or shuffle is involved, so
+    duplicate rows stay duplicates."""
+    clash = {"cell", "polygon_id", "region", "containing_region"} & set(points.columns)
     if clash:
-        # the PIP join's output contract appends cell/region columns;
-        # pre-existing ones would be clobbered (fused path) or become
-        # ambiguous (both paths) — fail loudly instead
+        # the names the PIP outputs add: pre-existing ones would be
+        # overwritten (`cell`) or duplicated — fail loudly instead
         raise ValueError(
             f"point_in_polygon_tag: points already has column(s) {sorted(clash)}; "
             "rename them before tagging"
         )
-    if unique_keys:
-        # fused single-pass plan: LEFT broadcast cover join (every
-        # point row survives with its 0..n candidate matches), then a
-        # row_number window picks min(polygon_id) per key. Because the
-        # broadcast join preserves the child's partitioning, a points
-        # side already hash-partitioned on key_cols (the flagship's
-        # latest_per_key window) needs NO further exchange — whereas
-        # the join-back formulation recomputed the whole points
-        # lineage twice around a sort-merge self-join.
-        hits = _pip_join_native(points, polygons, lon_col, lat_col, res, how="left")
-        w = Window.partitionBy(*key_cols).orderBy(F.asc_nulls_last("polygon_id"))
-        return (
-            hits.withColumn("_pip_rn", F.row_number().over(w))
-            .filter(F.col("_pip_rn") == 1)
-            .withColumnRenamed("region", "containing_region")
-            .drop("_pip_rn", "cell")
-        )
-    # general path (key_cols not unique per row): aggregate best match
-    # per key, join back — keeps duplicate-keyed rows intact
-    hits = point_in_polygon_join(points, polygons, lon_col, lat_col, res)
-    best = hits.groupBy(*key_cols).agg(
-        F.min("polygon_id").alias("polygon_id"),
-        F.min_by("region", "polygon_id").alias("containing_region"),
+    first = F.get("_hits", 0)
+    return _hits(points, polygons, lon_col, lat_col, res, "left").select(
+        *points.columns,
+        first["polygon_id"].alias("polygon_id"),
+        first["region"].alias("containing_region"),
     )
-    return points.join(best, key_cols, "left")
 
 
 def all_points_inside(
@@ -423,20 +343,8 @@ def all_points_inside(
 
 
 # ---------------------------------------------------------------------------
-# Skew helpers — salted two-stage aggregation/join
+# Skew helper — salted join
 # ---------------------------------------------------------------------------
-
-def salted_count(
-    df: DataFrame, key_cols: list[str], salt_buckets: int = 16
-) -> DataFrame:
-    """Two-stage count for skewed keys (hot city cells): local count per
-    (key, salt) then global sum. Spark's hash agg already does partial
-    aggregation map-side, so this matters for UDAF-style aggs and as a
-    template for salted joins; kept explicit per the north rule."""
-    salted = df.withColumn("_salt", (F.spark_partition_id() % salt_buckets))
-    stage1 = salted.groupBy(*key_cols, "_salt").agg(F.count(F.lit(1)).alias("_c"))
-    return stage1.groupBy(*key_cols).agg(F.sum("_c").alias("count"))
-
 
 def salted_join_skewed(
     big: DataFrame,

@@ -54,9 +54,9 @@ def build_inputs(spark, n_elements: int = 2000) -> dict[str, DataFrame]:
 def validated_elements(inputs: dict[str, DataFrame], res: int = SJ.DEFAULT_RES) -> DataFrame:
     """Latest snapshot per element → containment flag → validator."""
     latest = UP.latest_per_key(inputs["elements"])
-    # unique_keys: latest_per_key guarantees one row per (type, id),
-    # unlocking the fused single-shuffle tag plan
-    tagged = SJ.point_in_polygon_tag(latest, inputs["polygons"], res=res, unique_keys=True)
+    # the tag is a broadcast join + projection: it keeps latest_per_key's
+    # partitioning, so the tag adds no shuffle
+    tagged = SJ.point_in_polygon_tag(latest, inputs["polygons"], res=res)
     flagged = tagged.withColumn(
         "inside_declared_region",
         # unassigned elements have no declared region to contradict
@@ -132,8 +132,6 @@ def image_tile_assignments(
         "element_id", F.regexp_extract("image_id", r"img-0*([0-9]+)", 1).cast("long")
     )
     lineage = elements_validated.select(
-        F.col("id").alias("element_id"), "lon", "lat", "error_id", "status", "caption_region"
-    ) if "caption_region" in elements_validated.columns else elements_validated.select(
         F.col("id").alias("element_id"), "lon", "lat", "error_id", "status"
     )
     # both sides are fact-scale (images carry bytes; elements are the

@@ -2,9 +2,9 @@
 
 Local-mode testing uses ``local[N]``; the same configs are what we'd
 ship in ``spark-defaults.conf`` on a real cluster (AQE on, skew-join
-on, Arrow on). Partition counts are parameterized so the two-
-parallelism-level scaling benchmark (local[8] vs local[32]) exercises
-the same plan at different DOP.
+on, Arrow on). Cores and shuffle partitions are parameters, so one
+plan runs at any DOP; `perfbench` pins both through
+``SPARK_GRAFT_CPUS``.
 """
 
 from __future__ import annotations
@@ -158,9 +158,9 @@ def snapshot_memo(slot: str, df: DataFrame, build, *params):
     (`_input_files`) and passes equal `params`. The file check matters:
     a file relation compares by root path, so a parquet path overwritten
     in place is semantically "the same" plan, but its listing names new
-    files and misses. A hit on a DataFrame value that is no longer
-    cached (e.g. after ``spark.catalog.clearCache()``) also misses. None
-    of the checks launches a Spark job.
+    files and misses. A hit on a DataFrame value that was cached and no
+    longer is (e.g. after ``spark.catalog.clearCache()``) also misses.
+    None of the checks launches a Spark job.
 
     A miss unpersists the slot's previous value (if it is a DataFrame)
     BEFORE building: the cache manager matches plans by the same
@@ -178,7 +178,8 @@ def snapshot_memo(slot: str, df: DataFrame, build, *params):
             and src_files == files
             and src_params == params
             and src.sameSemantics(df)
-            and (not isinstance(value, DataFrame) or value.storageLevel.useMemory)
+            and not (isinstance(value, DataFrame) and value.is_cached
+                     and not value.storageLevel.useMemory)
         ):
             return value
         del _SNAPSHOT_MEMOS[slot]

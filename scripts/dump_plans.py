@@ -54,9 +54,10 @@ def main() -> None:
             cap(TI.assign_tiles(pts, 8)),
         ),
         (
-            "Point-in-polygon spatial join (J5, native strategy)",
-            "Broadcast cell-cover hash join; the exact ray-cast is PART OF THE JOIN CONDITION "
-            "(the edge array is never copied into output rows); fact side unshuffled. "
+            "Point-in-polygon spatial join (J5)",
+            "Broadcast hash join with one row per grid cell (its candidate polygons); the "
+            "exact ray-cast is `filter(cands, inside)` in the projection right after it, and "
+            "the hits drop the edge arrays before the explode; fact side unshuffled. "
             "The `/` inside the crossing lambda is `F.try_divide` — Spark prints "
             "Divide(evalMode=TRY) as plain `/`, so horizontal edges (y1==y0) yield NULL, "
             "not a DIVIDE_BY_ZERO under ANSI mode.",

@@ -62,7 +62,7 @@ def test_new_polygon_snapshot_is_seen(spark, tmp_path):
 
     def regions():
         polys = T.read_table(spark, path)
-        tag = SJ.point_in_polygon_tag(pts, polys, unique_keys=True).first()["containing_region"]
+        tag = SJ.point_in_polygon_tag(pts, polys).first()["containing_region"]
         join = [r["region"] for r in SJ.point_in_polygon_join(pts, polys).collect()]
         return tag, join
 

@@ -85,28 +85,39 @@ def test_pip_tag_column_collision_raises(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="region"):
-        SJ.point_in_polygon_tag(pts, world.spark_polygons(spark), key_cols=["id"])
+        SJ.point_in_polygon_tag(pts, world.spark_polygons(spark))
 
 
-def test_pip_tag_fused_matches_joinback_and_default_is_safe(spark):
-    """The fused (unique_keys=True) plan equals the join-back default on
-    unique-keyed input; on duplicate-keyed input the DEFAULT keeps
-    every row (the safe contract — the fused path is opt-in precisely
-    because its window would collapse duplicates)."""
-    uniq = spark.createDataFrame(
-        [(1, -10.0, 0.0), (2, 32.0, 9.5), (3, 8.0, 10.0)],
-        "id long, lon double, lat double",
+def test_pip_tag_tags_each_row_and_keeps_duplicates(spark):
+    """The tag answers per row, not per key: a key seen at two places
+    gets each place's polygon, duplicate rows stay duplicates, and a
+    point in no polygon (here: in gamma's hole) keeps NULL tags."""
+    pts = spark.createDataFrame(
+        [("node", 1, -10.0, 0.0), ("node", 1, -10.0, 0.0), ("node", 1, 25.0, 5.0),
+         ("node", 2, 32.0, 9.5)],
+        "type string, id long, lon double, lat double",
     )
-    polys = world.spark_polygons(spark)
-    cols = ["id", "polygon_id", "containing_region"]
-    a = SJ.point_in_polygon_tag(uniq, polys, key_cols=["id"], unique_keys=True)
-    b = SJ.point_in_polygon_tag(uniq, polys, key_cols=["id"])
-    pa = a.select(cols).toPandas().sort_values("id").reset_index(drop=True)
-    pb = b.select(cols).toPandas().sort_values("id").reset_index(drop=True)
-    pd.testing.assert_frame_equal(pa, pb)
-
-    dup = spark.createDataFrame(
-        [(1, -10.0, 0.0), (1, -10.0, 0.0), (2, 32.0, 9.5)],
-        "id long, lon double, lat double",
+    got = sorted(
+        (r["id"], r["lon"], r["polygon_id"], r["containing_region"])
+        for r in SJ.point_in_polygon_tag(pts, world.spark_polygons(spark)).collect()
     )
-    assert SJ.point_in_polygon_tag(dup, polys, key_cols=["id"]).count() == 3
+    assert got == [
+        (1, -10.0, "alpha-0", "alpha"),
+        (1, -10.0, "alpha-0", "alpha"),
+        (1, 25.0, "gamma-0", "gamma"),
+        (2, 32.0, None, None),
+    ]
+
+
+def test_pip_empty_polygon_dim(spark):
+    pts = spark.createDataFrame(
+        [("node", 1, -10.0, 0.0), ("way", 2, 25.0, 5.0), ("node", 3, None, None)],
+        "type string, id long, lon double, lat double",
+    )
+    polys = spark.createDataFrame([], world.POLYGONS_SCHEMA)
+    assert SJ.point_in_polygon_join(pts, polys).count() == 0
+    tagged = SJ.point_in_polygon_tag(pts, polys)
+    assert tagged.columns == ["type", "id", "lon", "lat", "polygon_id", "containing_region"]
+    rows = tagged.collect()
+    assert sorted(r["id"] for r in rows) == [1, 2, 3]
+    assert all(r["polygon_id"] is None and r["containing_region"] is None for r in rows)
