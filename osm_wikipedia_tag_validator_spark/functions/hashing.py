@@ -36,16 +36,3 @@ def u01(x: np.ndarray) -> np.ndarray:
     """uint64 hash → uniform float64 in [0, 1)."""
     return (np.asarray(x, dtype=_U64) >> _U64(11)).astype(np.float64) / float(1 << 53)
 
-
-def hash_bytes_rows(strings: "list[bytes] | np.ndarray", seed: int = 0) -> np.ndarray:
-    """FNV-1a 64 over each byte string (loop over rows, vectorized enough
-    for dim-table sizes; document-scale hashing uses the polynomial
-    rolling hash in textfns which is fully vectorized)."""
-    out = np.empty(len(strings), dtype=_U64)
-    for i, s in enumerate(strings):
-        h = _U64(0xCBF29CE484222325) ^ _U64(seed)
-        with np.errstate(over="ignore"):
-            for c in s:
-                h = ((h ^ _U64(c)) * _U64(0x100000001B3)) & _MASK
-        out[i] = h
-    return out

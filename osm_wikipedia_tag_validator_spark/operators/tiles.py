@@ -95,10 +95,3 @@ def tile_vector_assignment(
         [c for c in points.columns if c in joined.columns and c not in cols]
     ))
 
-
-def tile_rollup(assignment: DataFrame) -> DataFrame:
-    """Per-(tile, region) counts — the tile-level report aggregate."""
-    return assignment.groupBy("tile_id", "region").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.countDistinct("polygon_id").alias("n_polygons"),
-    )

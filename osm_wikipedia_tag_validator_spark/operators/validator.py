@@ -72,12 +72,6 @@ def _expr_cache() -> dict:
     return _EXPR_CACHE[1]
 
 
-# kept for callers/tests that reason about the canonical plain keys;
-# extraction itself is DYNAMIC over any `<prefix>:wikipedia` /
-# `<prefix>:wikidata` key (reference iterates all tag keys)
-PRIMARY_WIKIPEDIA_KEYS = ["wikipedia", "brand:wikipedia"]
-SECONDARY_WIKIDATA_KEYS = ["subject:wikidata", "name:etymology:wikidata"]
-
 REPORT_SCHEMA = (
     "struct<error_id:string,error_message:string,"
     "prerequisite:map<string,string>,"

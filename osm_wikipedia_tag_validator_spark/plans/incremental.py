@@ -26,28 +26,26 @@ from ..operators import validator as V
 STATE_COLS = ["status", "error_id", "report", "osm_object_url"]
 
 
+def _with_state(df: DataFrame, status: str) -> DataFrame:
+    """Append `STATE_COLS` in order: `status` set, the report NULL."""
+    return df.withColumns({
+        "status": F.lit(status),
+        "error_id": F.lit(None).cast("string"),
+        "report": F.lit(None).cast(V.REPORT_SCHEMA),
+        "osm_object_url": F.lit(None).cast("string"),
+    })
+
+
 def initial_state(elements: DataFrame) -> DataFrame:
     """All rows unchecked — validator_complaint NULL (`database.py:9-14`)."""
-    return (
-        UP.latest_per_key(elements)
-        .withColumn("status", F.lit("unchecked"))
-        .withColumn("error_id", F.lit(None).cast("string"))
-        .withColumn("report", F.lit(None).cast(V.REPORT_SCHEMA))
-        .withColumn("osm_object_url", F.lit(None).cast("string"))
-    )
+    return _with_state(UP.latest_per_key(elements), "unchecked")
 
 
 def ingest_delta(state: DataFrame, delta: DataFrame) -> DataFrame:
     """MERGE the new snapshot in; rows replaced by a newer download come
     back as unchecked (their stored report may describe a gone tag —
     `update_outdated_elements_and_reset_reports`, `script.py:191-229`)."""
-    delta_state = (
-        delta.withColumn("status", F.lit("unchecked"))
-        .withColumn("error_id", F.lit(None).cast("string"))
-        .withColumn("report", F.lit(None).cast(V.REPORT_SCHEMA))
-        .withColumn("osm_object_url", F.lit(None).cast("string"))
-    )
-    return UP.merge_upsert(state, delta_state)
+    return UP.merge_upsert(state, _with_state(delta, "unchecked"))
 
 
 def validate_unchecked(state: DataFrame, wiki: DataFrame, regions: DataFrame) -> DataFrame:
@@ -60,14 +58,7 @@ def validate_unchecked(state: DataFrame, wiki: DataFrame, regions: DataFrame) ->
     fresh_aligned = fresh.select(*done.columns)
     # relevance-filtered rows (no wiki tags) are checked-clean: the
     # reference writes '' for them (`database.py:12-13`)
-    irrelevant = (
-        todo.filter(~V.relevance_filter(todo))
-        .withColumn("status", F.lit("clean"))
-        .withColumn("error_id", F.lit(None).cast("string"))
-        .withColumn("report", F.lit(None).cast(V.REPORT_SCHEMA))
-        .withColumn("osm_object_url", F.lit(None).cast("string"))
-        .select(*done.columns)
-    )
+    irrelevant = _with_state(todo.filter(~V.relevance_filter(todo)), "clean").select(*done.columns)
     return done.unionByName(fresh_aligned).unionByName(irrelevant)
 
 

@@ -1,142 +1,39 @@
-"""Table IO: driver testdata loader + partitioned lakehouse-style writer.
+"""Snapshot-versioned, partitioned table writes with an atomic commit.
 
-On a production cluster the engine's tables are Iceberg (hidden
-partitioning on the grid-cell prefix + region, snapshot-isolated
-commits, incremental scans — SURVEY.md §4). `write_table`/`read_table`/
-`read_incremental` carry a BACKEND FLAG:
+The engine's tables are partitioned parquet plus a JSON manifest. Every
+write lands in its own `data/<snapshot_id>/` dir; the manifest flip
+(`os.replace`) is the commit point, the step the reference does with a
+temp file and a rename (`obtain_from_overpass.py:45-51`). Readers see
+the old or the new snapshot, never a partial write. Old snapshots stay
+readable through `snapshots.jsonl` (time travel), and `read_incremental`
+answers "what changed since snapshot X" with a key+ts anti-join. Every
+manifest (and its `snapshots.jsonl` entry) carries the snapshot's
+`schema`, the schema parquet inference would return, so a read plans
+with `spark.read.schema(...)` and launches no inference job; an entry
+written before the field existed falls back to inference.
 
-- ``backend="iceberg"`` — the real thing: ``writeTo(...).using
-  ("iceberg")``, ``option("snapshot-id", ...)`` time travel,
-  ``start-snapshot-id`` incremental scans. Requires the runtime jar
-  (`ICEBERG_RUNTIME_PACKAGE`) and a configured catalog
-  (`iceberg_spark_confs` — spark-submit-ready; `scripts/submit_job.py
-  --iceberg` wires both).
-- ``backend="manifest"`` — the sandbox stand-in: partitioned parquet +
-  an atomically-committed JSON manifest (the Iceberg-commit semantics
-  the reference approximated with temp-file rename,
-  `obtain_from_overpass.py:45-51`): snapshot isolation via per-snapshot
-  data dirs + `os.replace` commit point, time travel via retained
-  snapshots, incremental scan via key+ts anti-join. Every manifest (and
-  its `snapshots.jsonl` entry) carries the snapshot's `schema` — the
-  schema parquet inference would return — so a read plans with
-  `spark.read.schema(...)` and launches no inference job; an entry
-  written before the field existed falls back to inference.
-- ``backend="auto"`` (default) — iceberg when `iceberg_available`
-  (jar on the JVM classpath AND catalog configured), else manifest.
+The layout is an Iceberg table's, reduced to files (SURVEY.md §4). A
+port to an Iceberg catalog maps:
 
-GAP NOTE (r3 judge action #4): this container has no Iceberg runtime
-jar and no network to fetch one (`pyspark/jars` carries none; pip/ivy
-are offline), so the iceberg branch cannot execute here —
-`tests/test_tables.py::test_iceberg_backend_real` skips with that
-reason, while the flag plumbing, conf payload, and identifier mapping
-ARE tested. On a cluster:
-
-    spark-submit --packages $ICEBERG_RUNTIME_PACKAGE \
-      $(python -c 'from osm_wikipedia_tag_validator_spark.sources.tables \
-          import iceberg_submit_confs; print(iceberg_submit_confs("hdfs:///wh"))') \
-      scripts/submit_job.py --job flagship --iceberg
-
-Reference semantics preserved by BOTH backends: watermark/ledger
-(`database.py:33-39`) and atomic load commit
-(`obtain_from_overpass.py:45-51`).
+    manifest                      Iceberg
+    ----------------------------  ---------------------------------
+    snapshot id                   `<table>.snapshots.snapshot_id`
+    `parent_snapshot_id`          `snapshots.parent_id`
+    `data/<snapshot_id>/`         the snapshot's append files
+    `read_table(.., snapshot_id)` `option("snapshot-id", ...)`
+    `read_incremental`            `option("start-snapshot-id", ...)`
+    `with_cell_partition`         a `truncate` partition transform
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
-
-# match the Spark minor line: iceberg-spark-runtime-<spark>_<scala>
-ICEBERG_RUNTIME_PACKAGE = "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:1.10.0"
-ICEBERG_CATALOG = "graft"
-
-
-def iceberg_spark_confs(warehouse: str, catalog: str = ICEBERG_CATALOG) -> dict[str, str]:
-    """The exact session confs a real deployment needs — usable with
-    SparkSession.builder.config(map=...) or spark-submit --conf."""
-    return {
-        "spark.sql.extensions":
-            "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions",
-        f"spark.sql.catalog.{catalog}": "org.apache.iceberg.spark.SparkCatalog",
-        f"spark.sql.catalog.{catalog}.type": "hadoop",
-        f"spark.sql.catalog.{catalog}.warehouse": warehouse,
-    }
-
-
-def iceberg_submit_confs(warehouse: str, catalog: str = ICEBERG_CATALOG) -> str:
-    """`--conf k=v` string for spark-submit."""
-    return " ".join(
-        f"--conf {k}={v}" for k, v in iceberg_spark_confs(warehouse, catalog).items()
-    )
-
-
-def iceberg_available(spark: SparkSession, catalog: str = ICEBERG_CATALOG) -> bool:
-    """True iff the runtime jar is on the JVM classpath AND `catalog`
-    is configured in this session — the two preconditions of the real
-    backend."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.Snapshot")
-    except Exception:
-        return False
-    try:
-        return spark.conf.get(f"spark.sql.catalog.{catalog}", None) is not None
-    except Exception:
-        return False
-
-
-def iceberg_table_ident(path: str, catalog: str = ICEBERG_CATALOG) -> str:
-    """Map a stand-in filesystem path to a catalog table identifier:
-    the last two path segments become `<catalog>.<db>.<table>` (one
-    segment → db `default`), non-identifier chars folded to `_` — so a
-    call site written against the stand-in resolves to a stable Iceberg
-    table without edits."""
-    parts = [p for p in re.split(r"[/\\]+", path) if p and p != "."]
-    names = [re.sub(r"\W", "_", p) for p in parts[-2:]]
-    if len(names) == 1:
-        names = ["default"] + names
-    return ".".join([catalog] + names)
-
-
-def _resolve_backend(spark: SparkSession, backend: str) -> str:
-    if backend == "auto":
-        return "iceberg" if iceberg_available(spark) else "manifest"
-    if backend not in ("iceberg", "manifest"):
-        raise ValueError(f"unknown table backend {backend!r}")
-    if backend == "iceberg" and not iceberg_available(spark):
-        raise RuntimeError(
-            "backend='iceberg' requested but the runtime is not available: "
-            f"add --packages {ICEBERG_RUNTIME_PACKAGE} and "
-            "iceberg_spark_confs(...) to the session"
-        )
-    return backend
-
-TESTDATA_TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
-
-def load_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: spark.read.parquet(f"{sf_dir}/{t}.parquet") for t in TESTDATA_TABLES}
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> None:
-    for name, df in load_testdata(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def write_table(
@@ -144,31 +41,17 @@ def write_table(
     path: str,
     partition_by: list[str] | None = None,
     snapshot_meta: dict | None = None,
-    backend: str = "auto",
 ) -> dict:
     """Snapshot-versioned table write; returns the commit manifest
     {snapshot_id, committed_at, partition_by, meta[, schema]
     [, parent_snapshot_id]}.
 
-    iceberg backend: `writeTo(ident).using("iceberg")` createOrReplace
-    with `partitionedBy` — a real Iceberg snapshot commit; the returned
-    snapshot_id comes from the table's `.snapshots` metadata.
-
-    manifest backend: every write lands in its own `data/<snapshot_id>/`
-    directory; the manifest flip (`os.replace`, atomic) is the commit
-    point, carrying lineage (parent id, ts). Readers see either the old
-    or new snapshot, never a partial write — the property the reference
-    approximated with temp-file + rename
-    (`obtain_from_overpass.py:45-51`). Old snapshots remain readable
-    (time travel) and the parent chain supports incremental "what
-    changed since snapshot X" reads. `schema` (StructType JSON) is what
-    parquet inference over the data dir would return — the written
+    The data goes to a new `data/<snapshot_id>/` dir, then the manifest
+    flip commits it (module docstring). `schema` (StructType JSON) is
+    what parquet inference over the data dir would return — the written
     schema with every field nullable, nested fields included, partition
-    columns last — so `read_table` skips the inference job; manifests
-    without it (older writes) are read with inference.
+    columns last — so `read_table` skips the inference job.
     """
-    if _resolve_backend(df.sparkSession, backend) == "iceberg":
-        return _write_table_iceberg(df, path, partition_by, snapshot_meta)
     snapshot_id = uuid.uuid4().hex
     writer = df.write.mode("overwrite")
     if partition_by:
@@ -234,54 +117,18 @@ def snapshots(path: str) -> list[dict]:
         return [json.loads(line) for line in f if line.strip()]
 
 
-def _write_table_iceberg(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str] | None,
-    snapshot_meta: dict | None,
-) -> dict:
-    from pyspark.sql import functions as F
-
-    spark = df.sparkSession
-    ident = iceberg_table_ident(path)
-    writer = df.writeTo(ident)
-    if partition_by:
-        writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-    writer.using("iceberg").createOrReplace()
-    snaps = spark.sql(
-        f"SELECT snapshot_id, parent_id, committed_at FROM {ident}.snapshots "
-        "ORDER BY committed_at DESC LIMIT 1"
-    ).collect()[0]
-    manifest = {
-        "snapshot_id": str(snaps["snapshot_id"]),
-        "committed_at": int(snaps["committed_at"].timestamp()),
-        "partition_by": partition_by or [],
-        "meta": snapshot_meta or {},
-    }
-    if snaps["parent_id"] is not None:
-        manifest["parent_snapshot_id"] = str(snaps["parent_id"])
-    return manifest
-
-
-def read_table(
-    spark: SparkSession, path: str, snapshot_id: str | None = None,
-    backend: str = "auto",
-) -> DataFrame:
+def read_table(spark: SparkSession, path: str, snapshot_id: str | None = None) -> DataFrame:
     """Read the current snapshot, or any retained one (time travel).
-    Manifest backend: with the snapshot's recorded `schema`, no Spark
-    job runs until the DataFrame is used; without it, inference."""
-    if _resolve_backend(spark, backend) == "iceberg":
-        ident = iceberg_table_ident(path)
-        reader = spark.read
-        if snapshot_id is not None:
-            reader = reader.option("snapshot-id", snapshot_id)
-        return reader.table(ident)
+    With the snapshot's recorded `schema`, no Spark job runs until the
+    DataFrame is used; without it, inference. An id that neither the
+    manifest nor the snapshot log knows raises `FileNotFoundError`."""
     entry = read_manifest(path) or {}
     if snapshot_id is not None and entry.get("snapshot_id") != snapshot_id:
         entry = next(
-            (e for e in snapshots(path) if e["snapshot_id"] == snapshot_id),
-            {"snapshot_id": snapshot_id},
+            (e for e in snapshots(path) if e["snapshot_id"] == snapshot_id), None
         )
+        if entry is None:
+            raise FileNotFoundError(f"no snapshot {snapshot_id!r} at {path}")
     sid = entry.get("snapshot_id")
     if sid is None:
         raise FileNotFoundError(f"no committed snapshot at {path}")
@@ -299,13 +146,10 @@ def with_cell_partition(
     parent_res: int = 2,
     col: str = "cell_p",
 ) -> DataFrame:
-    """Iceberg hidden-partitioning: derive the partition value — the
-    COARSE parent of the fine grid cell — from the row itself, the way
-    an Iceberg partition transform (`truncate(cell, …)`) would. Under
-    the real backend, prefer declaring the transform in the table spec
-    (`writeTo(...).partitionedBy(F.expr("truncate(8, cell)"))`) so
-    writers can't forget it; this column-materializing form works on
-    BOTH backends.
+    """Hidden partitioning: derive the partition value — the COARSE
+    parent of the fine grid cell — from the row itself, the way an
+    Iceberg partition transform (`truncate(cell, …)`) would (see the
+    mapping table in the module docstring).
     Write with `write_table(..., partition_by=[col])`; a reader filter
     on `col` then prunes whole partition directories at planning time
     (FileSourceStrategy PartitionFilters — evidence in
@@ -326,23 +170,11 @@ def read_incremental(
     since_snapshot_id: str,
     key_cols: list[str],
     ts_col: str = "download_timestamp",
-    backend: str = "auto",
 ) -> DataFrame:
-    """Rows added or changed since a past snapshot.
-
-    iceberg backend: the engine-native incremental scan —
-    `start-snapshot-id` metadata read, touching only the append files
-    of newer snapshots.
-
-    manifest backend: current EXCEPT-by-key-and-ts old — an anti-join
-    on (keys + ts), so updated rows reappear with their new payload."""
-    if _resolve_backend(spark, backend) == "iceberg":
-        return (
-            spark.read.format("iceberg")
-            .option("start-snapshot-id", since_snapshot_id)
-            .load(iceberg_table_ident(path))
-        )
-    cur = read_table(spark, path, backend="manifest")
-    old = read_table(spark, path, since_snapshot_id, backend="manifest")
+    """Rows added or changed since a past snapshot: current EXCEPT-by-
+    key-and-ts old — an anti-join on (keys + ts), so updated rows
+    reappear with their new payload."""
+    cur = read_table(spark, path)
+    old = read_table(spark, path, since_snapshot_id)
     on = key_cols + [ts_col]
     return cur.join(old.select(*on), on, "left_anti")

@@ -16,9 +16,8 @@ committed to the ledger and skipped on restart — the T5 pattern
 ("log row written only AFTER data was safely loaded",
 `obtain_from_overpass.py:49-51`).
 
-Ledger storage is a parquet dir + atomic JSON manifest
-(sources/tables.py); on a cluster this is one Iceberg table with
-ACID commits.
+Ledger storage is one JSON-lines file, `ledger.jsonl`, that every
+commit rewrites whole through a temp file and `os.replace`.
 """
 
 from __future__ import annotations
@@ -34,10 +33,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 @dataclass
 class CheckpointLedger:
-    """Append-only ledger of completed (job, partition, snapshot) work
-    units with lineage + metrics. One JSON line per commit — atomic at
-    the record level via write-temp-then-rename, mirroring the
-    reference's `shutil.move` atomic load (`obtain_from_overpass.py:45`)."""
+    """Ledger of completed (job, partition, snapshot) work units with
+    lineage + metrics, one JSON line per commit. `commit` rewrites the
+    whole file (every record so far plus the new one) to a temp file
+    and renames it over `ledger.jsonl`, mirroring the reference's
+    `shutil.move` atomic load (`obtain_from_overpass.py:45`)."""
 
     path: str
 

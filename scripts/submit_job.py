@@ -32,27 +32,12 @@ def main() -> int:
     ap.add_argument("--n-images", type=int, default=5000)
     ap.add_argument("--checkpoint-dir", default="/tmp/owtv_ledger")
     ap.add_argument("--out-dir", default="/tmp/owtv_out")
-    ap.add_argument(
-        "--iceberg", metavar="WAREHOUSE", default=None,
-        help="configure the Iceberg catalog at this warehouse path "
-             "(requires spark-submit --packages "
-             "$ICEBERG_RUNTIME_PACKAGE; sources.tables then routes "
-             "write_table/read_table through the real backend)",
-    )
     args = ap.parse_args()
 
     # spark-submit provides master/conf; fall back to local for direct runs
     from pyspark.sql import SparkSession, functions as F
 
-    builder = SparkSession.builder.appName(f"owtv-{args.job}")
-    if args.iceberg:
-        from osm_wikipedia_tag_validator_spark.sources.tables import (
-            iceberg_spark_confs,
-        )
-
-        for k, v in iceberg_spark_confs(args.iceberg).items():
-            builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    spark = SparkSession.builder.appName(f"owtv-{args.job}").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     from osm_wikipedia_tag_validator_spark.datagen import world as W

@@ -75,67 +75,6 @@ def test_cell_prefix_partition_pruning(spark, tmp_path):
     assert pruned.count() == part.filter(F.col("cell_p") == one).count()
 
 
-def test_iceberg_flag_plumbing_without_runtime(spark, tmp_path):
-    """The backend switch is real even where the jar is absent: auto
-    resolves to the manifest stand-in, an explicit iceberg request
-    fails fast with the exact remediation, and the conf payload /
-    identifier mapping a cluster deployment needs are well-formed."""
-    import pytest
-
-    assert T.iceberg_available(spark) is False
-    assert T._resolve_backend(spark, "auto") == "manifest"
-    with pytest.raises(RuntimeError, match="--packages"):
-        T._resolve_backend(spark, "iceberg")
-    with pytest.raises(ValueError):
-        T._resolve_backend(spark, "hudi")
-
-    confs = T.iceberg_spark_confs("/wh")
-    assert confs["spark.sql.catalog.graft.type"] == "hadoop"
-    assert confs["spark.sql.catalog.graft.warehouse"] == "/wh"
-    assert "IcebergSparkSessionExtensions" in confs["spark.sql.extensions"]
-    submit = T.iceberg_submit_confs("/wh")
-    assert submit.count("--conf ") == 4
-
-    assert T.iceberg_table_ident("/data/owtv/elements") == "graft.owtv.elements"
-    assert T.iceberg_table_ident("elements") == "graft.default.elements"
-    assert T.iceberg_table_ident("/a/b-c/d.e") == "graft.b_c.d_e"
-
-    # and the auto path actually lands in the manifest implementation
-    path = str(tmp_path / "tbl")
-    df = spark.createDataFrame([("node", 1, 1, "x")],
-                               "type string, id long, download_timestamp long, payload string")
-    m = T.write_table(df, path)
-    assert (tmp_path / "tbl" / "manifest.json").exists()
-    assert T.read_table(spark, path, m["snapshot_id"]).count() == 1
-
-
-def test_iceberg_backend_real(spark, tmp_path):
-    """Mirror of test_snapshot_write_read_time_travel on the REAL
-    backend. Skips in this sandbox: no Iceberg runtime jar ships in
-    pyspark/jars and the container is offline (see the gap note in
-    sources/tables.py) — on a cluster, run under
-    spark-submit --packages $ICEBERG_RUNTIME_PACKAGE with
-    iceberg_spark_confs(warehouse)."""
-    import pytest
-
-    if not T.iceberg_available(spark):
-        pytest.skip("Iceberg runtime jar not available in this sandbox")
-    path = "tmp_iceberg_test/tbl"
-    df1 = spark.createDataFrame(
-        [("node", 1, 100, "a")],
-        "type string, id long, download_timestamp long, payload string",
-    )
-    m1 = T.write_table(df1, path, partition_by=["type"], backend="iceberg")
-    df2 = spark.createDataFrame(
-        [("node", 1, 200, "a2"), ("node", 2, 100, "b")],
-        "type string, id long, download_timestamp long, payload string",
-    )
-    m2 = T.write_table(df2, path, partition_by=["type"], backend="iceberg")
-    assert m2["parent_snapshot_id"] == m1["snapshot_id"]
-    assert T.read_table(spark, path, backend="iceberg").count() == 2
-    assert T.read_table(spark, path, m1["snapshot_id"], backend="iceberg").count() == 1
-
-
 def _flat(spark):
     return spark.createDataFrame(
         [("node", 1, 100, "a"), ("way", 2, 100, None), ("relation", 3, 150, "c")],
@@ -196,3 +135,26 @@ def test_read_table_without_manifest_schema_infers(spark, tmp_path, count_jobs):
         got, jobs = count_jobs(lambda: T.read_table(spark, path, sid))
         assert jobs >= 1  # schema inference
         assert sorted(r["id"] for r in got.collect()) == [1, 2, 3]
+
+
+def test_read_table_unknown_snapshot_fails_clearly(spark, tmp_path):
+    """An id in neither `manifest.json` nor `snapshots.jsonl` raises
+    `FileNotFoundError` naming the id and the table; an id only the log
+    knows still reads, by inference when its entry has no `schema`."""
+    path = str(tmp_path / "tbl")
+    with pytest.raises(FileNotFoundError, match="'nope'.*tbl"):
+        T.read_table(spark, path, "nope")  # no table yet
+    m1 = T.write_table(_flat(spark), path)
+    T.write_table(_flat(spark).filter(F.col("id") > 1), path)
+    with pytest.raises(FileNotFoundError, match="'nope'.*tbl"):
+        T.read_table(spark, path, "nope")
+    with pytest.raises(FileNotFoundError, match="'nope'"):
+        T.read_incremental(spark, path, "nope", key_cols=["type", "id"])
+
+    log = tmp_path / "tbl" / "snapshots.jsonl"
+    entries = [json.loads(line) for line in log.read_text().splitlines()]
+    for e in entries:
+        del e["schema"]
+    log.write_text("\n".join(json.dumps(e) for e in entries) + "\n")
+    old = T.read_table(spark, path, m1["snapshot_id"])
+    assert sorted(r["id"] for r in old.collect()) == [1, 2, 3]
