@@ -75,7 +75,10 @@ def main() -> None:
         ),
         (
             "Validator cascade (V1+J1)",
-            "The reference's per-row Python UDF as broadcast joins + a when-cascade: the only Python stage is the synthetic SOURCE (MapInPandas once); everything downstream is codegen.",
+            "The reference's per-row Python UDF as broadcast joins + one projection after them "
+            "holding the when-cascade: the only Python stage is the synthetic SOURCE "
+            "(MapInPandas once); everything downstream runs in the JVM (the lambdas over the "
+            "tag map are CodegenFallback, evaluated interpreted inside the generated code).",
             cap(
                 V.validate(
                     W.spark_elements(spark, 100),

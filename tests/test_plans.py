@@ -79,6 +79,23 @@ def test_validator_is_pure_codegen(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_validator_plan_stays_compact(spark):
+    """Each subexpression the validator's rules share is computed once
+    as a named column. The bounds sit above the counts that gives
+    (3 array_sort, 11 lambdafunction, 4 CASE WHEN in the default
+    rendering) and far below those of inlining every use (83, 199, 40)."""
+    from osm_wikipedia_tag_validator_spark.operators import validator as V
+
+    out = V.validate(
+        W.spark_elements(spark, 400), W.spark_wiki_entities(spark), W.spark_regions(spark)
+    )
+    plan = _optimized(out)
+    counts = {k: plan.count(k) for k in ("array_sort", "lambdafunction", "CASE WHEN")}
+    assert counts["array_sort"] <= 6, counts
+    assert counts["lambdafunction"] <= 20, counts
+    assert counts["CASE WHEN"] <= 12, counts
+
+
 def test_knn_bruteforce_has_no_shuffle(spark):
     from osm_wikipedia_tag_validator_spark.operators import knn as KNN
 

@@ -199,6 +199,34 @@ def test_ignored_problems_mark_not_drop(spark):
     assert not validated2.toPandas()["suppressed"].iloc[0]
 
 
+def test_suppressed_edge_cases(spark):
+    # `suppressed` is read off the element's joined region row
+    regions, wiki = _mini_world(spark)
+
+    def one(tags, area, regions=regions):
+        out = V.validate(_elem(spark, tags, area), wiki, regions).toPandas()
+        assert len(out) == 1
+        return out.iloc[0]
+
+    # an element in no region: not suppressed, no region language
+    row = one({"wikipedia": "en:Missing"}, "nowhere")
+    assert row["error_id"] == "wikipedia tag links to 404"
+    assert row["suppressed"] == False  # noqa: E712
+    assert row["language_code"] is None
+    # a clean row in a region that ignores some error id
+    row = one({"wikipedia": "en:Good"}, "delta")
+    assert row["error_id"] is None and row["suppressed"] == False  # noqa: E712
+    # a region listing the same ignored id twice: still one row out
+    err = "wikipedia tag links to 404"
+    twice = regions.withColumn(
+        "ignored_problems",
+        F.when(F.col("internal_region_name") == "delta", F.array(F.lit(err), F.lit(err)))
+        .otherwise(F.col("ignored_problems")),
+    )
+    row = one({"wikipedia": "en:Missing"}, "delta", twice)
+    assert row["error_id"] == err and row["suppressed"] == True  # noqa: E712
+
+
 def test_ignored_problems_survive_incremental_round(spark):
     # regression (round-1 ADVICE): suppressed rows must not vanish from
     # incremental state between rounds
