@@ -132,23 +132,24 @@ def compare_against_reference(
 VERIFY_SCHEMA = "image_id string, fmt string, psnr double, phash_match boolean, caption_ok boolean"
 
 
-def verify_invariants(images: DataFrame, reference_images: DataFrame | None = None,
-                      min_psnr_db: float = 40.0,
+def verify_invariants(images: DataFrame, min_psnr_db: float = 40.0,
                       caption_fn=None) -> DataFrame:
-    """The per-row invariant of BASELINE.json input_hint: decoded-pixel
-    allclose (PSNR ≥ 40 dB for lossy formats; exact for lossless) +
-    byte-exact caption equality vs the reference rows.
-
-    With reference_images=None the check is self-referential: re-encode
-    the decoded pixels with the row's own fmt and verify the round-trip
+    """Self-referential integrity check of each image row: re-encode the
+    decoded pixels with the row's own fmt and report the round-trip
     PSNR + stored-phash match — the engine-side integrity pass the
-    bench loop samples (SURVEY.md §7.3e). `caption_fn(image_ids) ->
+    bench loop samples (SURVEY.md §7.3e). The row-matched comparison
+    against a reference table (BASELINE.json input_hint) is
+    `compare_against_reference`.
+
+    `psnr` is reported, not thresholded: `min_psnr_db` names the bound
+    a caller holds it to (≥ 40 dB for lossy formats; lossless rows
+    round-trip exactly, psnr clipped to 1e9). `caption_fn(image_ids) ->
     list[str]` recomputes the expected caption from source of truth
     (e.g. the seeded generator, where caption is a pure function of
     image_id) so caption_ok is a byte-exact comparison, evaluated
-    batch-side inside the Arrow stage. Without it (and without a
-    reference table) caption integrity cannot be derived from the row
-    alone, so caption_ok only asserts presence."""
+    batch-side inside the Arrow stage. Without it caption integrity
+    cannot be derived from the row alone, so caption_ok only asserts
+    presence."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

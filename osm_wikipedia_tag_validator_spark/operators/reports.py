@@ -23,11 +23,8 @@ def report_pages(validated: DataFrame, error_catalog: DataFrame) -> DataFrame:
     `generate_webpage_with_error_output.py:265-275`)."""
     cat = F.broadcast(error_catalog.select("error_id", "category"))
     w = Window.partitionBy("area_identifier", "error_id").orderBy("osm_object_url")
-    errs = validated.filter(F.col("status") == "error")
-    if "suppressed" in validated.columns:
-        errs = errs.filter(~F.col("suppressed"))
     return (
-        errs
+        validated.filter((F.col("status") == "error") & ~F.col("suppressed"))
         .join(cat, "error_id", "left")
         .dropDuplicates(["area_identifier", "error_id", "osm_object_url"])
         .withColumn("row_in_class", F.row_number().over(w))
@@ -60,10 +57,12 @@ def note_unused_errors(validated: DataFrame, error_catalog: DataFrame) -> DataFr
 def index_rollup(validated: DataFrame, regions: DataFrame, error_catalog: DataFrame) -> DataFrame:
     """S9 index page: per-region counts split completed vs active
     (`write_index_and_merged_entries`,
-    `generate_webpage_with_error_output.py:1194-1258`)."""
+    `generate_webpage_with_error_output.py:1194-1258`). Suppressed rows
+    are not counted, like at every other report surface."""
     review = error_catalog.filter(F.col("category").isin("review", "obvious")).select("error_id")
     counted = (
-        validated.join(F.broadcast(review), "error_id", "left_semi")
+        validated.filter(~F.col("suppressed"))
+        .join(F.broadcast(review), "error_id", "left_semi")
         .groupBy("area_identifier")
         .agg(F.count(F.lit(1)).alias("problem_count"))
     )

@@ -3,7 +3,7 @@
 Reference: `update_problem_for_entry` (`script.py:318-347`) calls
 `get_the_most_important_problem_generic(tags, location, type, id)` per
 row in a Python loop (`script.py:304-315`), hitting a networked wiki
-cache per element. Here the wiki lookups become four broadcast JOINS
+cache per element. Here the wiki lookups become three broadcast JOINS
 against the `wiki_entities` dim table plus one against the regions,
 and the rule cascade becomes a priority-ordered `F.when` chain in one
 projection after them — JVM expressions, zero Python in the hot path
@@ -30,14 +30,23 @@ The tri-state complaint of the reference (`database.py:9-14`: NULL =
 unchecked, '' = clean, JSON = error) is promoted to a typed `status`
 enum + report struct (SURVEY.md §1.1).
 
-Output adds columns:
+`validate` returns the element plus its verdict, the way the
+reference writes `validator_complaint` back onto the `osm_data` row
+(`script.py:318-347`): the relevant input rows with the input columns
+in input order, then
+  language_code  string — the region's preferred language (NULL when
+                 the element's region is unknown)
+  hidden         boolean — the region is hidden (report sinks drop it)
   error_id       string (NULL = clean)
   status         'error' | 'clean'   (unchecked rows simply aren't here)
   suppressed     boolean — error class is region-ignored; the row STAYS
                  (reference keeps it and skips only the report,
-                 `script.py:309-313`); report sinks filter on this
+                 `script.py:309-313`); every report sink filters on this
+  osm_object_url string
   report         struct<error_id, error_message, prerequisite,
                         proposed_tagging_changes, osm_object_url>
+and nothing else: the tag extracts, wiki lookups and shared predicates
+the cascade reads are dropped by the final projection.
 """
 
 from __future__ import annotations
@@ -279,13 +288,6 @@ def catalog_rows() -> list[tuple[str, str, int, str]]:
     return rows
 
 
-# helper columns of the extract select — named so that each shared
-# subexpression is computed once; dropped by validate's final select
-_TAG_HELPERS = (
-    "_wp_pref", "_wd_pref", "_plain", "_pair", "_key_pfx", "_wp_key", "_wd_key", "_wp_split",
-)
-
-
 def extract_wiki_tags() -> list[Column]:
     """The select list that pulls the wikipedia/wikidata payloads out of
     the `tags` map, PAIR-COHERENTLY.
@@ -303,7 +305,7 @@ def extract_wiki_tags() -> list[Column]:
     Later items refer to earlier ones by name (lateral column
     aliases), so each shared subexpression — the prefixed key arrays,
     the pair prefix, the split payload — is one named column, not
-    inlined at every use. The `_TAG_HELPERS` columns are internal.
+    inlined at every use. The `_`-prefixed columns are helpers.
 
     Emitted columns:
       wikipedia_tag / wikidata_tag      the validated pair's payloads
@@ -404,10 +406,9 @@ def relevance_filter(df: DataFrame, tags_col: str = "tags") -> Column:
 
 def join_wiki_entities(elements: DataFrame, wiki: DataFrame) -> DataFrame:
     """J1 (SURVEY §2.3): the reference's per-row cached network lookup
-    (`script.py:329`) as broadcast joins — on the wikipedia article, on
-    the wikidata qid, on the wikipedia redirect target (to resolve the
-    redirect's article for proposed changes), and on the out-of-pair
-    secondary wikidata value.
+    (`script.py:329`) as three broadcast joins — on the wikipedia
+    article, on the wikidata qid, and on the out-of-pair secondary
+    wikidata value.
 
     The secondary-class phrase lookup (132 instance-of classes,
     `error_catalog.SECONDARY_TARGETS`) is joined into the wiki DIM here
@@ -417,13 +418,20 @@ def join_wiki_entities(elements: DataFrame, wiki: DataFrame) -> DataFrame:
     code path with hundreds of constants, and the dim join keeps plan
     size independent of catalog breadth.
 
+    The redirect target's article (the `to` side of a wikipedia-
+    redirect proposed change) is a dim⋈dim lookup too: `_fill_wiki_dim`
+    joins `redirect_to → qid` once per snapshot, so the article join
+    carries it as `wp_redirect_article`. That self-join assumes one row
+    per `qid`, which is what `build_wiki_entities_dim` returns.
+
     The pre-joined dim is built and cached ONCE per wiki snapshot
     (`session.snapshot_memo`, slot "wiki_dim"): every validate over the
-    same snapshot reuses the one cached DataFrame, and all four joined
-    selections read it, so `build_wiki_entities_dim`'s dedupe window
-    and the phrase join run at fill time only — not once per selection
-    per query. A new snapshot (new manifest snapshot, or a parquet path
-    rewritten in place) misses and replaces the entry.
+    same snapshot reuses the one cached DataFrame, and all three joined
+    selections read it, so `build_wiki_entities_dim`'s dedupe window,
+    the phrase join and the redirect lookup run at fill time only — not
+    once per selection per query. A new snapshot (new manifest
+    snapshot, or a parquet path rewritten in place) misses and replaces
+    the entry.
 
     `wiki` must satisfy `sources.wiki_dim.CONSUMED_COLUMNS` — the
     documented boundary between the validator and any real wiki-entity
@@ -437,8 +445,8 @@ def join_wiki_entities(elements: DataFrame, wiki: DataFrame) -> DataFrame:
             F.col("qid").alias("wp_qid"),
             F.col("exists").alias("wp_exists"),
             F.col("redirect_to").alias("wp_redirect_to"),
+            F.col("redirect_article").alias("wp_redirect_article"),
             F.col("is_disambiguation").alias("wp_is_disambiguation"),
-            F.col("instance_of").alias("wp_instance_of"),
             F.col("secondary_phrase").alias("wp_phrase"),
             F.col("sitelinks").alias("wp_sitelinks"),
         )
@@ -449,15 +457,8 @@ def join_wiki_entities(elements: DataFrame, wiki: DataFrame) -> DataFrame:
             F.col("exists").alias("wd_exists"),
             F.col("redirect_to").alias("wd_redirect_to"),
             F.col("is_disambiguation").alias("wd_is_disambiguation"),
-            F.col("instance_of").alias("wd_instance_of"),
             F.col("secondary_phrase").alias("wd_phrase"),
             F.col("sitelinks").alias("wd_sitelinks"),
-        )
-    )
-    redir = F.broadcast(
-        dim.select(
-            F.col("qid").alias("wp_redirect_to"),
-            F.col("article").alias("wp_redirect_article"),
         )
     )
     # secondary-wikidata existence (reference 'secondary wikidata tag
@@ -472,17 +473,18 @@ def join_wiki_entities(elements: DataFrame, wiki: DataFrame) -> DataFrame:
     return (
         elements.join(wp, "wikipedia_tag", "left")
         .join(wd, "wikidata_tag", "left")
-        .join(redir, "wp_redirect_to", "left")
         .join(sec, "sec_wikidata_value", "left")
     )
 
 
 def _fill_wiki_dim(wiki: DataFrame) -> DataFrame:
-    """`wiki` ⋈ the secondary-class phrase dim, cached. The first query
-    over it fills the cache inside its own jobs (no separate action:
-    Spark's per-partition cache lock computes each block once even
-    when the four broadcasts race into it); every later validate over
-    the snapshot reads the four broadcasts from the cache."""
+    """`wiki` ⋈ the secondary-class phrase dim ⋈ `wiki` itself on
+    `redirect_to = qid` (the target's article as `redirect_article`),
+    cached. The first query over it fills the cache inside its own jobs
+    (no separate action: Spark's per-partition cache lock computes each
+    block once even when the three broadcasts race into it); every
+    later validate over the snapshot reads the three broadcasts from
+    the cache."""
     cache = _expr_cache()
     phrase_dim = cache.get("phrase_dim")
     if phrase_dim is None:
@@ -505,7 +507,14 @@ def _fill_wiki_dim(wiki: DataFrame) -> DataFrame:
             )
         )
         cache["phrase_dim"] = phrase_dim
-    return wiki.join(phrase_dim, "instance_of", "left").cache()
+    targets = wiki.select(
+        F.col("qid").alias("redirect_to"), F.col("article").alias("redirect_article")
+    )
+    return (
+        wiki.join(phrase_dim, "instance_of", "left")
+        .join(targets, "redirect_to", "left")
+        .cache()
+    )
 
 
 def _lang_redirect_map_col() -> Column:
@@ -815,25 +824,6 @@ def classify(
     ]
 
 
-def apply_ignored_problems(df: DataFrame, regions: DataFrame,
-                           region_col: str = "area_identifier") -> DataFrame:
-    """P8 (`script.py:195-200,309-313`): drop per-region ignored error
-    classes — an anti-join against the exploded broadcast skip-list.
-
-    REPORT-SINK-ONLY semantics: the reference keeps the row in its
-    state table and merely `continue`s past it when rendering
-    (`script.py:309-313`), so this anti-join must never run inside the
-    state pipeline — there `validate` marks the row `suppressed`, and
-    the sinks filter on that."""
-    skip = F.broadcast(
-        regions.select(
-            F.col("internal_region_name").alias(region_col),
-            F.explode("ignored_problems").alias("error_id"),
-        )
-    )
-    return df.join(skip, [region_col, "error_id"], "left_anti")
-
-
 def build_report() -> list[Column]:
     """The select list that adds `osm_object_url` and the typed report
     struct (the reference's validator_complaint JSON,
@@ -1048,12 +1038,16 @@ def validate(
     request_missing_tags: bool = False,
 ) -> DataFrame:
     """Full V1 pipeline: relevance filter → pair-coherent tag extract →
-    entity joins (wp article, wd qid, redirect target, out-of-pair
-    secondary wd) → region join (language, hidden, ignored problems) →
-    ONE projection: cascade, ignored-problems MARK (not drop:
-    suppressed rows stay in state, reference `script.py:309-313`) and
-    report struct. Pure DataFrame ops; Catalyst broadcasts every dim.
-    Report sinks filter on `suppressed`."""
+    entity joins (wp article, wd qid, out-of-pair secondary wd) →
+    region join (language, hidden, ignored problems) → ONE projection:
+    cascade, ignored-problems MARK (not drop: suppressed rows stay in
+    state, reference `script.py:309-313`) and report struct. Pure
+    DataFrame ops; Catalyst broadcasts every dim.
+
+    Returns the relevant `elements` rows: their columns in input order,
+    then `language_code`, `hidden`, `error_id`, `status`, `suppressed`,
+    `osm_object_url`, `report` (see the module docstring). Report sinks
+    filter on `suppressed`."""
     tag_cols, rule_cols = _select_lists(inside_region_col, request_missing_tags)
     rel = elements.filter(relevance_filter(elements))
     rdim = F.broadcast(
@@ -1067,14 +1061,11 @@ def validate(
     joined = join_wiki_entities(rel.select("*", *tag_cols), wiki).join(
         rdim, "area_identifier", "left"
     )
-    # the output column order is part of the contract (sink digests
-    # hash rows in it): region key and error_id first, then the joined
-    # columns as the using-joins ordered them, then the verdict
-    internal = {"area_identifier", "ignored_problems", *_TAG_HELPERS}
     return joined.select("*", *rule_cols).select(
-        "area_identifier",
+        *elements.columns,
+        "language_code",
+        "hidden",
         "error_id",
-        *[c for c in joined.columns if c not in internal],
         "status",
         "suppressed",
         "osm_object_url",

@@ -75,16 +75,13 @@ def validated_elements(inputs: dict[str, DataFrame], res: int = SJ.DEFAULT_RES) 
 def error_reports(validated: DataFrame, regions: DataFrame) -> DataFrame:
     """Per-region report rows, hidden regions dropped (P9,
     `script.py:109-111`), per-region ignored classes dropped AT THE
-    SINK (P8, `script.py:309-313` — the state row survives, only the
-    report is skipped), deterministic order (O2,
-    `generate_webpage_with_error_output.py:78`)."""
-    errs = validated.filter(F.col("status") == "error")
-    if "suppressed" in validated.columns:
-        errs = errs.filter(~F.col("suppressed"))
-    else:
-        errs = V.apply_ignored_problems(errs, regions)
+    SINK (P8, `script.py:309-313` — `validate` marks the state row
+    `suppressed`, only the report is skipped), deterministic order (O2,
+    `generate_webpage_with_error_output.py:78`). Both region filters
+    read the validated row's own `hidden` / `suppressed`, so `regions`
+    is not read."""
     return (
-        errs
+        validated.filter((F.col("status") == "error") & ~F.col("suppressed"))
         .filter(~F.coalesce(F.col("hidden"), F.lit(False)))
         .select(
             "area_identifier",
@@ -102,12 +99,9 @@ def region_rollup(validated: DataFrame, regions: DataFrame, error_catalog: DataF
     """A1 per-region review counts + J8 merged-parent rollup
     (`generate_webpage_with_error_output.py:1268-1278, 1180-1188`)."""
     review_ids = error_catalog.filter(F.col("category") == "review").select("error_id")
-    errs = validated
-    if "suppressed" in validated.columns:
-        # suppressed rows are skipped at every report surface, counts
-        # included (the reference only ever counts rendered entries)
-        errs = errs.filter(~F.col("suppressed"))
-    errs = errs.join(F.broadcast(review_ids), "error_id")
+    # suppressed rows are skipped at every report surface, counts
+    # included (the reference only ever counts rendered entries)
+    errs = validated.filter(~F.col("suppressed")).join(F.broadcast(review_ids), "error_id")
     per_region = errs.groupBy("area_identifier").agg(F.count(F.lit(1)).alias("review_count"))
     parents = regions.select(
         F.col("internal_region_name").alias("area_identifier"),

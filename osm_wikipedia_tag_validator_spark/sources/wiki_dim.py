@@ -3,16 +3,17 @@
 The reference resolves wikipedia/wikidata state through per-row cached
 network calls into wikibrain (`script.py:329`,
 `generate_webpage_with_error_output.py` passim). This engine replaces
-that with ONE dimension table joined four ways
+that with ONE dimension table joined three ways
 (`operators.validator.join_wiki_entities`): on the wikipedia article,
-on the wikidata qid, on the redirect target, and on the out-of-pair
-secondary wikidata value. This module is the contract for that table —
+on the wikidata qid, and on the out-of-pair secondary wikidata value.
+Each redirect target's article is looked up in the same table once per
+snapshot, when the validator fills its cached copy of the dim. This
+module is the contract for that table —
 any real backing source (a wikidata JSON dump, a WDQS extract, a
 wikibrain cache export) plugs into the validator by being normalized
 through :func:`build_wiki_entities_dim`.
 
-Column contract — what the validator consumes, and which reference
-check each column feeds:
+Column contract — what a source provides, and what reads each column:
 
 ``qid`` (string)
     Join key for wikidata tags and for the secondary-existence /
@@ -22,9 +23,9 @@ check each column feeds:
     wikipedia tags (reference resolves titles via
     ``generate_webpage_with_error_output.py:589`` wikibrain calls).
 ``lang`` (string)
-    Language of `article`; feeds the language-preference family
-    ("wikipedia tag in outdated language", preferred-language sitelink
-    swaps).
+    Language of `article`. The validator does not read it (a wikipedia
+    tag's language comes from the tag); it breaks ties in
+    :func:`build_wiki_entities_dim`'s one-row-per-qid dedupe.
 ``exists`` (boolean)
     Entity/article resolves (False → the 404 family: "wikipedia tag
     links to 404", "wikidata tag links to 404", and via the `sec`
@@ -33,7 +34,8 @@ check each column feeds:
     Target qid when the entity/article is a redirect → "wikipedia tag
     links to a redirect", "wikidata tag links to a redirect", and the
     mismatch-follow-redirect pair
-    (`generate_webpage_with_error_output.py:859`).
+    (`generate_webpage_with_error_output.py:859`); the target's
+    `article` is the `to` side of a wikipedia-redirect proposed change.
 ``is_disambiguation`` (boolean)
     Instance-of disambiguation class → "link to a disambiguation page"
     (`generate_webpage_with_error_output.py:874`).
@@ -45,10 +47,13 @@ check each column feeds:
 ``sitelinks`` (map<string,string>)
     lang → article for every wiki the entity links; feeds the
     language-preference rules (is there a sitelink in the region's
-    `language_code`?) and redirect-resolution of proposed changes.
+    `language_code`?), their proposed change, and the tag-completion
+    families ("wikipedia from wikidata tag[, unexpected language]").
 ``lat``/``lon`` (double, nullable) + ``has_coord`` (boolean)
-    Wikidata P625 coordinate; feeds "wikidata location mismatch"
-    distance checks.
+    Wikidata P625 coordinate. The validator does not read them (no rule
+    compares locations); they place entities for nearest-entity
+    queries (`operators.knn`). Optional: a source without them gets
+    absent coordinates.
 
 The deterministic synthetic generator
 (`datagen.world.gen_wiki_entities` / `spark_wiki_entities`) is the
@@ -61,9 +66,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-#: columns `operators.validator` actually reads from the dim — the
-#: minimal surface a real source must provide. Kept in one place so the
-#: validator's malformed-input assert and any normalizer agree.
+#: the dim's column contract — what a real source must provide. The
+#: validator reads all of it except `lang`, `lat`, `lon` and `has_coord`
+#: (see the module docstring). Kept in one place so the validator's
+#: malformed-input assert and any normalizer agree.
 CONSUMED_COLUMNS: dict[str, str] = {
     "qid": "string",
     "article": "string",
@@ -118,7 +124,7 @@ def build_wiki_entities_dim(
     if missing:
         raise ValueError(
             f"wiki entity source is missing required columns {missing}; "
-            f"the validator consumes: {WIKI_DIM_SCHEMA}"
+            f"the wiki dim contract is: {WIKI_DIM_SCHEMA}"
         )
     if "lat" not in have:
         df = df.withColumn("lat", F.lit(None).cast("double"))

@@ -75,10 +75,12 @@ def main() -> None:
         ),
         (
             "Validator cascade (V1+J1)",
-            "The reference's per-row Python UDF as broadcast joins + one projection after them "
-            "holding the when-cascade: the only Python stage is the synthetic SOURCE "
-            "(MapInPandas once); everything downstream runs in the JVM (the lambdas over the "
-            "tag map are CodegenFallback, evaluated interpreted inside the generated code).",
+            "The reference's per-row Python UDF as three broadcast joins against the cached "
+            "wiki dim (article, qid, out-of-pair secondary qid) + one region join, and one "
+            "projection after them holding the when-cascade: the only Python stage is the "
+            "synthetic SOURCE (MapInPandas once); everything downstream runs in the JVM (the "
+            "lambdas over the tag map are CodegenFallback, evaluated interpreted inside the "
+            "generated code).",
             cap(
                 V.validate(
                     W.spark_elements(spark, 100),

@@ -85,6 +85,7 @@ def test_features_match_direct_numpy(spark, audio_df):
 def test_resample_halves_length(spark, audio_df):
     out = AO.resample_audio(audio_df, target_sr=8000).collect()
     orig = {r["audio_id"]: r["n_samples"] for r in audio_df.collect()}
+    assert len(out) == len(orig)
     for r in out:
         assert r["sr"] == 8000
         assert r["n_samples"] == int(round(orig[r["audio_id"]] / 2))

@@ -96,6 +96,17 @@ def test_validator_plan_stays_compact(spark):
     assert counts["CASE WHEN"] <= 12, counts
 
 
+def test_validator_joins_wiki_dim_three_times(spark):
+    """The article, qid and secondary-qid joins read the cached wiki
+    dim; the redirect target's article comes with the article join."""
+    from osm_wikipedia_tag_validator_spark.operators import validator as V
+
+    out = V.validate(
+        W.spark_elements(spark, 100), W.spark_wiki_entities(spark), W.spark_regions(spark)
+    )
+    assert _optimized(out).count("InMemoryRelation") == 3
+
+
 def test_knn_bruteforce_has_no_shuffle(spark):
     from osm_wikipedia_tag_validator_spark.operators import knn as KNN
 

@@ -54,6 +54,37 @@ def test_wiki_parquet_overwritten_in_place_is_seen(spark, tmp_path):
     assert _q1_error(spark, spark.read.parquet(path)) == "wikidata tag links to 404"
 
 
+def test_new_redirect_target_article_is_seen(spark, tmp_path):
+    """The redirect target's article is looked up when the memo fills:
+    a new snapshot that renames the target changes the proposed change
+    of the next validate."""
+    path = str(tmp_path / "wiki")
+    els = spark.createDataFrame(
+        [("node", 1, 0.0, -10.0, {"wikipedia": "en:Old"}, "alpha", 1000, None)],
+        W.ELEMENTS_SCHEMA,
+    )
+
+    def wiki(target):
+        return spark.createDataFrame(
+            [
+                ("Q1", target, "en", None, False, True, "place", None, None, False, {"en": target}),
+                ("Q2", "en:Old", "en", "Q1", False, True, "place", None, None, False, {"en": "en:Old"}),
+            ],
+            W.WIKI_SCHEMA,
+        )
+
+    def proposed():
+        wiki_dim = WD.build_wiki_entities_dim(T.read_table(spark, path))
+        row = V.validate(els, wiki_dim, W.spark_regions(spark)).first()
+        assert row["error_id"] == "wikipedia tag links to a redirect"
+        return [(c["from"], c["to"]) for c in row["report"]["proposed_tagging_changes"]]
+
+    T.write_table(wiki("en:New"), path)
+    assert proposed() == [({"wikipedia": "en:Old"}, {"wikipedia": "en:New"})]
+    T.write_table(wiki("en:Newer"), path)
+    assert proposed() == [({"wikipedia": "en:Old"}, {"wikipedia": "en:Newer"})]
+
+
 def test_new_polygon_snapshot_is_seen(spark, tmp_path):
     path = str(tmp_path / "polygons")
     square = [[(-1.0, -1.0), (1.0, -1.0), (1.0, 1.0), (-1.0, 1.0), (-1.0, -1.0)]]
@@ -158,7 +189,9 @@ def test_incremental_round_job_count_guard(spark, tmp_path, count_jobs):
     assert round2 < round1
     # Measured with this test's session (local[8], 8 shuffle partitions,
     # AQE on), counted as above: round 1 launched 14 jobs, round 2
-    # launched 8. Before the manifest schema and the wiki-dim memo, both
+    # launched 7. Before the manifest schema and the wiki-dim memo, both
     # rounds launched 17; before the validator joined its regions once
-    # (one region broadcast, not two), 15 and 9.
-    assert round2 <= 8, (round1, round2)
+    # (one region broadcast, not two), 15 and 9; before the redirect
+    # target's article came from the memoised dim (three wiki broadcasts
+    # per query, not four), 14 and 8.
+    assert round2 <= 7, (round1, round2)

@@ -71,6 +71,7 @@ def test_frame_sampling_real_decode(spark):
 def test_phash_neardup_pairs(spark, images):
     feats = IO.extract_features(images)
     pairs = IO.neardup_by_phash(feats, max_hamming=2).toPandas()
+    assert list(pairs.columns) == ["id1", "id2", "hamming"]
     # pairs symmetric-free and within threshold
     assert (pairs["hamming"] <= 2).all()
     assert (pairs["id1"] < pairs["id2"]).all()

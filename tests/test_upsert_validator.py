@@ -199,6 +199,44 @@ def test_ignored_problems_mark_not_drop(spark):
     assert not validated2.toPandas()["suppressed"].iloc[0]
 
 
+def test_index_rollup_skips_suppressed(spark):
+    # delta ignores 'wikipedia tag links to 404' (a review class): its
+    # element is counted nowhere, like at every other report surface
+    from osm_wikipedia_tag_validator_spark.operators import reports as R
+
+    regions, wiki = _mini_world(spark)
+    tags = {"wikipedia": "en:Missing"}
+    validated = V.validate(
+        _elem(spark, tags, area="delta").unionByName(_elem(spark, tags, area="alpha")),
+        wiki,
+        regions,
+    )
+    idx = R.index_rollup(validated, regions, W.spark_error_catalog(spark)).toPandas()
+    counts = idx.set_index("area_identifier")["problem_count"].to_dict()
+    assert counts["alpha"] == 1
+    assert counts["delta"] == 0
+
+
+def test_validate_output_contract(spark):
+    # validate returns its input columns in input order plus the verdict,
+    # and none of the tag-extract or wiki-lookup intermediates
+    from osm_wikipedia_tag_validator_spark.plans import pipeline as P
+
+    regions, wiki = _mini_world(spark)
+    raw = _elem(spark, {"wikipedia": "en:Good"})
+    verdict = [
+        "language_code", "hidden", "error_id", "status", "suppressed", "osm_object_url", "report",
+    ]
+    for kw in ({}, {"request_missing_tags": True}):
+        assert V.validate(raw, wiki, regions, **kw).columns == raw.columns + verdict
+    assert P.validated_elements(P.build_inputs(spark, 300)).columns == [
+        "type", "id", "lat", "lon", "tags", "area_identifier", "download_timestamp",
+        "member_points", "polygon_id", "containing_region", "inside_declared_region",
+        "language_code", "hidden", "error_id", "status", "suppressed", "osm_object_url",
+        "report",
+    ]
+
+
 def test_suppressed_edge_cases(spark):
     # `suppressed` is read off the element's joined region row
     regions, wiki = _mini_world(spark)
