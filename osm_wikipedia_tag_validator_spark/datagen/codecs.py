@@ -474,63 +474,6 @@ def decode_image(data: bytes, fmt: str | None = None) -> np.ndarray:
     raise ValueError("unknown image format")
 
 
-# ---------------------------------------------------------------------------
-# video container — REAL frame packing (motion-PNG)
-# ---------------------------------------------------------------------------
-
-_VPNG_MAGIC = b"VPNG"
-
-
-def vpng_encode(frames: list[np.ndarray]) -> bytes:
-    """Real video container: magic + frame count + length-prefixed PNG
-    frames. Every frame is genuinely encoded/decoded by the real PNG
-    codec — the honest sandbox stand-in for an mp4 (no H.264 codec in
-    this container; the container/sampling layer is what the frame-
-    sampling operator exercises, and it is real)."""
-    if not frames:
-        raise ValueError("empty frame list")
-    if len(frames) > 0xFFFF:
-        raise ValueError(f"vpng holds at most 65535 frames, got {len(frames)}")
-    parts = [_VPNG_MAGIC, struct.pack(">H", len(frames))]
-    for f in frames:
-        data = png_encode(f)
-        parts.append(struct.pack(">I", len(data)))
-        parts.append(data)
-    return b"".join(parts)
-
-
-def vpng_n_frames(data: bytes) -> int:
-    if not data.startswith(_VPNG_MAGIC):
-        raise ValueError("not a vpng stream")
-    if len(data) < 6:
-        raise ValueError("truncated vpng header")
-    return struct.unpack(">H", data[4:6])[0]
-
-
-def vpng_decode_frames(data: bytes, indices: list[int] | None = None) -> list[np.ndarray]:
-    """Decode selected frame indices (all if None) — sampling decodes
-    ONLY the requested frames' PNG payloads; others are skipped by
-    length, the property that makes stride-sampling cheap. Corrupt or
-    truncated containers raise ValueError (the module-wide contract, so
-    verify-style operators can flag the row instead of dying)."""
-    n = vpng_n_frames(data)
-    want = set(range(n)) if indices is None else set(indices)
-    if any(i < 0 or i >= n for i in want):
-        raise IndexError("frame index out of range")
-    out: dict[int, np.ndarray] = {}
-    pos = 6
-    for i in range(n):
-        if pos + 4 > len(data):
-            raise ValueError(f"truncated vpng: frame {i} length prefix missing")
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        if pos + 4 + length > len(data):
-            raise ValueError(f"truncated vpng: frame {i} payload overruns buffer")
-        if i in want:
-            out[i] = png_decode(data[pos + 4 : pos + 4 + length])
-        pos += 4 + length
-    return [out[i] for i in sorted(want)]
-
-
 def psnr(a: np.ndarray, b: np.ndarray) -> float:
     """Peak signal-to-noise ratio in dB; inf for identical images."""
     a = np.asarray(a, dtype=np.float64)

@@ -524,10 +524,9 @@ def gen_image_pixel_rows(
     ids: np.ndarray, elements: pd.DataFrame | None = None
 ) -> list[tuple[int, np.ndarray, str, str]]:
     """The PIXEL layer of the image source: per id → (id, uint8 pixel
-    array, caption, fmt). Shared by gen_images_batch (which encodes the
-    pixels into bytes) and gen_videos_batch (which animates them into
-    frames directly — no wasted encode/decode round-trip through a
-    lossy still format the video never stores)."""
+    array, caption, fmt) — the same pixels gen_images_batch encodes
+    into bytes, before any codec loss. Independent checks compare
+    decoded images against it."""
     ids = np.asarray(ids, dtype=np.int64)
     h, wsel, hsel, fmt = _image_meta(ids)
     captions = _captions_for(ids, elements)
@@ -661,52 +660,6 @@ def spark_images_located(spark, n: int):
     return _id_range(spark, n).mapInPandas(
         lambda it: (gen_images_located_batch(p["id"].to_numpy()) for p in it),
         IMAGES_LOCATED_SCHEMA,
-    )
-
-
-VIDEOS_SCHEMA = (
-    "video_id string, bytes binary, n_frames int, w int, h int, "
-    "fmt string, caption string"
-)
-
-
-def gen_videos_batch(ids: np.ndarray, n_frames: int = 8) -> pd.DataFrame:
-    """One VPNG clip per id: the id's pixel array (taken straight from
-    the pixel layer — no encode/decode round-trip through a lossy still
-    format the video never stores) animated by a deterministic
-    per-frame roll + brightness ramp, every frame REALLY PNG-encoded
-    into the container (datagen/codecs.py::vpng_encode). Caption
-    derives from the image caption, suffixed with the frame count
-    (pure function of id, recomputable for invariants)."""
-    from .codecs import vpng_encode
-
-    rows = []
-    for eid, img, caption, _fmt in gen_image_pixel_rows(np.asarray(ids)):
-        frames = []
-        for f in range(n_frames):
-            fr = np.roll(img, shift=(3 * f, 5 * f), axis=(0, 1)).astype(np.int32)
-            frames.append(np.clip(fr + 2 * f, 0, 255).astype(np.uint8))
-        rows.append(
-            (
-                f"vid-{eid:09d}",
-                vpng_encode(frames),
-                n_frames,
-                img.shape[1],
-                img.shape[0],
-                "vpng",
-                f"{caption} [{n_frames} frames]",
-            )
-        )
-    return pd.DataFrame(
-        rows,
-        columns=["video_id", "bytes", "n_frames", "w", "h", "fmt", "caption"],
-    )
-
-
-def spark_videos(spark, n: int, n_frames: int = 8):
-    return _id_range(spark, n).mapInPandas(
-        lambda it: (gen_videos_batch(p["id"].to_numpy(), n_frames) for p in it),
-        VIDEOS_SCHEMA,
     )
 
 

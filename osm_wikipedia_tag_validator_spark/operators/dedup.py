@@ -11,7 +11,6 @@ runs only inside buckets.
                      → inverted-index join — MOSS-style copy detection
   minhash_lsh_pairs  shingle→MinHash→band→bucket-join→verify
   simhash_pairs      64-bit SimHash, 4×16-bit pigeonhole bands
-  embedding_neardup  random-hyperplane LSH buckets → exact cosine
 """
 
 from __future__ import annotations
@@ -412,109 +411,3 @@ def simhash_pairs(
     sigs = simhash_signatures(df, text_col, id_col).cache()
     return banded_hamming_pairs(sigs, id_col, "simhash", max_hamming)
 
-
-# --------------------------------------------------------------------------
-# embedding near-dup (cosine)
-# --------------------------------------------------------------------------
-
-def embedding_neardup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    planes: int = 12,
-) -> DataFrame:
-    """Pairs with cosine ≥ threshold. Candidates from random-hyperplane
-    LSH (sign bits of `planes` fixed hash-derived hyperplanes → bucket
-    key); exact cosine verified inside buckets with numpy.
-
-    Multi-probe: each vector also lands in buckets at Hamming distance
-    1 of its sign key so near-threshold pairs straddling one plane are
-    still candidates (recall knob; exactness for cos ≥ threshold pairs
-    that differ in ≥2 sign bits is not guaranteed — standard LSH
-    tradeoff, measured in tests vs the brute-force oracle).
-    """
-    # family-uniform null-vector semantics (see ann.cosine_topk_native):
-    # a null embedding has no cosine against anything and would crash
-    # both the width probe (int(None)) and np.vstack in the bucketer
-    df = df.filter(F.col(vec_col).isNotNull())
-    dim_row = df.select(F.size(vec_col).alias("d")).first()
-    if dim_row is None:
-        return df.sparkSession.createDataFrame([], "id1 long, id2 long, cosine double")
-    dim = int(dim_row["d"])
-    rng = np.random.default_rng(12345)
-    H = rng.standard_normal((planes, dim))
-
-    sig_schema = f"{id_col} long, bucket long, vec array<float>"
-
-    def buckets(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = np.vstack(pdf[vec_col].to_numpy())
-            signs = (M @ H.T) > 0
-            key = np.zeros(len(pdf), dtype=np.int64)
-            for i in range(planes):
-                key |= signs[:, i].astype(np.int64) << i
-            rows = {id_col: [], "bucket": [], "vec": []}
-            vecs = pdf[vec_col].tolist()
-            ids = pdf[id_col].to_numpy()
-            for j in range(len(pdf)):
-                rows[id_col].append(ids[j])
-                rows["bucket"].append(int(key[j]))
-                rows["vec"].append(vecs[j])
-                for p in range(planes):  # multi-probe neighbors
-                    rows[id_col].append(ids[j])
-                    rows["bucket"].append(int(key[j]) ^ (1 << p))
-                    rows["vec"].append(vecs[j])
-            yield pd.DataFrame(rows)
-
-    b = df.select(id_col, vec_col).mapInPandas(buckets, sig_schema)
-
-    out_schema = "id1 long, id2 long, cosine double"
-
-    def verify(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) < 2:
-            return pd.DataFrame({"id1": [], "id2": [], "cosine": []})
-        sub = pdf.drop_duplicates(subset=[id_col])
-        M = np.vstack(sub["vec"].to_numpy()).astype(np.float64)
-        norm = np.linalg.norm(M, axis=1, keepdims=True)
-        Mn = M / np.maximum(norm, 1e-12)
-        S = Mn @ Mn.T
-        ids = sub[id_col].to_numpy()
-        i1, i2 = np.nonzero(np.triu(S >= threshold, k=1))
-        lo = np.minimum(ids[i1], ids[i2])
-        hi = np.maximum(ids[i1], ids[i2])
-        return pd.DataFrame({"id1": lo, "id2": hi, "cosine": np.round(S[i1, i2], 6)})
-
-    pairs = b.groupBy("bucket").applyInPandas(verify, out_schema)
-    return pairs.dropDuplicates(["id1", "id2"])
-
-
-def embedding_neardup_bruteforce(
-    df: DataFrame,
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact O(n²) oracle via JVM higher-order functions (zip_with dot
-    product) — correctness baseline for the LSH variant."""
-    v = df.select(
-        F.col(id_col).alias("id"),
-        F.transform(vec_col, lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "norm",
-        F.sqrt(F.aggregate(F.zip_with("v", "v", lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x)),
-    )
-    a, b = v.alias("a"), v.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.v"), F.col("b.v"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .withColumn("cosine", F.round(dot / (F.col("a.norm") * F.col("b.norm")), 6))
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("a.id").alias("id1"), F.col("b.id").alias("id2"), "cosine")
-    )

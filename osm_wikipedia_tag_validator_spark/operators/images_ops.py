@@ -9,19 +9,12 @@ for the PSNR ≥ 40 dB invariant), and a clearly-marked DETERMINISTIC
 FAKE for JPEG (no libjpeg in this container; documented swap point).
 The Spark-side plumbing — schema, batch shape, partition behavior — is
 the part that matters at 100 TB and is real and tested.
-
-Video frame-sampling is REAL at the container level: VPNG
-(length-prefixed real-PNG frames, the sandbox stand-in for mp4) is
-genuinely decoded per sampled frame, with skipped frames hopped by
-length — only the H.264-bitstream layer would need a PyAV/ffmpeg
-binding in production.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
@@ -30,10 +23,8 @@ from ..datagen.codecs import (
     decode_image,
     encode_image,
     psnr,
-    vpng_decode_frames,
-    vpng_n_frames,
 )
-from ..functions.imagefns import ahash64, block_mean_resize, luma, resize_nearest
+from ..functions.imagefns import ahash64, luma, resize_nearest
 
 FEATURES_SCHEMA = (
     "image_id string, w int, h int, fmt string, caption string, "
@@ -129,7 +120,10 @@ def compare_against_reference(
     return joined.mapInPandas(gen, COMPARE_SCHEMA)
 
 
-VERIFY_SCHEMA = "image_id string, fmt string, psnr double, phash_match boolean, caption_ok boolean"
+VERIFY_SCHEMA = (
+    "image_id string, fmt string, psnr double, phash_match boolean, "
+    "caption_ok boolean, invariant_ok boolean"
+)
 
 
 def verify_invariants(images: DataFrame, min_psnr_db: float = 40.0,
@@ -141,15 +135,15 @@ def verify_invariants(images: DataFrame, min_psnr_db: float = 40.0,
     against a reference table (BASELINE.json input_hint) is
     `compare_against_reference`.
 
-    `psnr` is reported, not thresholded: `min_psnr_db` names the bound
-    a caller holds it to (≥ 40 dB for lossy formats; lossless rows
-    round-trip exactly, psnr clipped to 1e9). `caption_fn(image_ids) ->
-    list[str]` recomputes the expected caption from source of truth
-    (e.g. the seeded generator, where caption is a pure function of
-    image_id) so caption_ok is a byte-exact comparison, evaluated
-    batch-side inside the Arrow stage. Without it caption integrity
-    cannot be derived from the row alone, so caption_ok only asserts
-    presence."""
+    `invariant_ok` is the row's verdict: `phash_match` and `caption_ok`
+    hold, and the PSNR passes — ≥ `min_psnr_db` for lossy formats
+    (`LOSSY_FMTS`), exact for lossless ones (psnr is clipped to 1e9, so
+    an exact round trip reads 1e9). `caption_fn(image_ids) -> list[str]`
+    recomputes the expected caption from source of truth (e.g. the
+    seeded generator, where caption is a pure function of image_id) so
+    caption_ok is a byte-exact comparison, evaluated batch-side inside
+    the Arrow stage. Without it caption integrity cannot be derived
+    from the row alone, so caption_ok only asserts presence."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -159,7 +153,7 @@ def verify_invariants(images: DataFrame, min_psnr_db: float = 40.0,
                 expected = [None] * len(pdf)
             rows = []
             for r, exp in zip(pdf.itertuples(index=False), expected):
-                caption_ok = (
+                caption_ok = bool(
                     r.caption == exp if exp is not None else isinstance(r.caption, str)
                 )
                 try:
@@ -169,20 +163,27 @@ def verify_invariants(images: DataFrame, min_psnr_db: float = 40.0,
                     # a corrupted byte flips the row to False — including
                     # structural (header/container) corruption, which the
                     # codecs surface as ValueError per their contract
-                    rows.append((r.image_id, r.fmt, 0.0, False, bool(caption_ok)))
+                    rows.append((r.image_id, r.fmt, 0.0, False, caption_ok, False))
                     continue
-                p = psnr(img, rt)
+                p = float(min(psnr(img, rt), 1e9))
+                phash_match = bool(ahash64(img) == r.phash)
+                psnr_ok = p >= min_psnr_db if r.fmt in LOSSY_FMTS else p == 1e9
                 rows.append(
                     (
                         r.image_id,
                         r.fmt,
-                        float(min(p, 1e9)),
-                        ahash64(img) == r.phash,
-                        bool(caption_ok),
+                        p,
+                        phash_match,
+                        caption_ok,
+                        bool(phash_match and caption_ok and psnr_ok),
                     )
                 )
             yield pd.DataFrame(
-                rows, columns=["image_id", "fmt", "psnr", "phash_match", "caption_ok"]
+                rows,
+                columns=[
+                    "image_id", "fmt", "psnr", "phash_match", "caption_ok",
+                    "invariant_ok",
+                ],
             )
 
     return images.mapInPandas(gen, VERIFY_SCHEMA)
@@ -205,40 +206,6 @@ def make_thumbnails(images: DataFrame, size: int = 8) -> DataFrame:
             yield pd.DataFrame(rows, columns=["image_id", "thumb", "tw", "th"])
 
     return images.mapInPandas(gen, THUMB_SCHEMA)
-
-
-FRAMES_SCHEMA = (
-    "video_id string, frame_idx int, frame_phash long, mean_luma double"
-)
-
-
-def sample_frames(videos: DataFrame, stride: int = 2) -> DataFrame:
-    """Video frame-sampling — REAL decode: the `bytes` column holds a
-    VPNG container (length-prefixed real-PNG frames, the sandbox
-    stand-in for mp4 — datagen/codecs.py). Every stride-th frame is
-    genuinely decoded and featurized (aHash + mean luma); skipped
-    frames are hopped over BY LENGTH without decoding, which is what
-    makes stride-sampling cheap — the same property seeking in an mp4
-    gives you. One row per sampled frame, exploded batch-side, so an
-    hour-long clip fans out inside its own Arrow batch. Swap the VPNG
-    parser for a PyAV/ffmpeg binding in production; schema, batching
-    and the explode shape stay identical."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                data = bytes(r.bytes)
-                idx = list(range(0, vpng_n_frames(data), max(stride, 1)))
-                for i, frame in zip(idx, vpng_decode_frames(data, idx)):
-                    rows.append(
-                        (r.video_id, i, ahash64(frame), float(luma(frame).mean()))
-                    )
-            yield pd.DataFrame(
-                rows, columns=["video_id", "frame_idx", "frame_phash", "mean_luma"]
-            )
-
-    return videos.mapInPandas(gen, FRAMES_SCHEMA)
 
 
 def neardup_by_phash(features: DataFrame, max_hamming: int = 6) -> DataFrame:

@@ -192,13 +192,13 @@ def knn_bruteforce(
     Ties broken by (dist, entity_key) ascending — matches the SQL
     oracle's ORDER BY dist, key. Output: (q_key, e_key, dist_km, rank).
 
-    Guard convention (shared with ``ann.cosine_topk_fast``): count-guard
-    via limit(N+1).count() BEFORE any driver pull — nothing reaches the
-    driver on the overflow path. The count costs one bounded extra
-    lineage evaluation (it short-circuits after N+1 rows); the inline
-    budget here is rows because an entity row is a fixed ~24 B
-    (key, lon, lat) — 2M rows ≈ 50 MB — unlike the ANN corpus, whose
-    budget scales with vector width (see ``ann.py``).
+    Guard convention: the entity side is counted with
+    limit(N+1).count() BEFORE any driver pull, so nothing reaches the
+    driver on the overflow path — an over-limit side goes to
+    `_knn_blocked` instead. The count costs one bounded extra lineage
+    evaluation (it short-circuits after N+1 rows). The inline budget is
+    a row count because an entity row is a fixed ~24 B (key, lon, lat):
+    2M rows ≈ 50 MB.
     """
     # null-coordinate rows have no distance to anything: drop them on
     # both sides so all three strategies agree (the k-ring path's
@@ -306,17 +306,21 @@ def _knn_blocked(
     block_rows: int = 65536,
 ) -> DataFrame:
     """Exact kNN when the entity side is too large to broadcast OR
-    collect: block nested loop as a cogroup (the twin of
-    `ann.cosine_topk_blocked`; see its docstring for the shape).
+    collect: block nested loop as a cogroup.
 
-    The previous fallback broadcast the full entity side into a
-    cross-join — the very materialization the over-limit guard exists
-    to prevent. Here both sides are hash-blocked, each (qblock, eblock)
-    pair meets exactly once in an `applyInPandas` task that computes a
-    bounded vectorized-haversine matrix and emits per-query local
-    top-k, and a window over the query key merges block candidates into
-    the exact global top-k. Nothing reaches the driver; per-task memory
-    is two blocks + a chunk×block distance matrix.
+    Both sides are hash-blocked (xxhash64(key) % n_blocks —
+    deterministic, uniform), each side is replicated across the OTHER
+    side's block ids, and every (qblock, eblock) pair meets exactly once
+    in a ``cogroup().applyInPandas`` task that computes a bounded
+    vectorized-haversine matrix and emits per-query LOCAL top-k. A
+    window over the query key then merges block candidates into the
+    global top-k — exact, because each block's local top-k is a
+    superset of that block's contribution to the global answer. No
+    cross join and no broadcast of the entity side exists (the very
+    materialization the over-limit guard prevents); shuffle volume is
+    the textbook block-nested-loop n_qblocks·|E| + n_eblocks·|Q|.
+    Nothing reaches the driver; per-task memory is two blocks + a
+    chunk×block distance matrix.
 
     `q` arrives pre-projected by `knn_bruteforce` as
     (_q_key, _q_lon, _q_lat). Ties break by (dist, entity_key) asc —

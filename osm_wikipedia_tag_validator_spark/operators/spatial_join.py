@@ -57,8 +57,8 @@ def collect_polygons(polygons: DataFrame) -> list[dict]:
     through `_polygon_dim`, so it runs once per polygon snapshot: every
     join over the same snapshot (the validator's `point_in_polygon_tag`,
     the tile sink's `point_in_polygon_join`, run after run) shares one
-    collect. Guarded like the kNN/ANN
-    matrix collects, but folded into the collect itself: the LIMIT
+    collect. Guarded like the kNN matrix collect, but folded into the
+    collect itself: the LIMIT
     bounds the driver transfer to MAX+1 rows in the SAME job (no extra
     probe job in the hot path), so an accidentally-huge dim fails fast
     with a clear error instead of an unbounded ``collect`` OOM."""

@@ -1,8 +1,9 @@
 """The correctness-gate query surface.
 
 One entry per implemented operator family from SURVEY.md §2, each as a
-(spark, sf_dir) → DataFrame callable plus (where SQL-expressible) an
-ANSI-SQL oracle DuckDB runs on the same parquet views. Column names are
+(spark, sf_dir) → DataFrame callable plus an ANSI-SQL oracle DuckDB runs
+on the same parquet views (or, where SQL cannot re-derive the result,
+reads from a golden fixture — see GOLDEN_PINNED). Column names are
 aliased identically on both sides; floats are rounded to 6 decimals;
 counts cast to bigint.
 
@@ -19,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import cells as C
 from ..functions import textfns as TX
-from ..operators import ann as ANN
 from ..operators import dedup as DD
 from ..operators import knn as KNN
 from ..operators import spatial_join as SJ
@@ -31,8 +31,8 @@ from ..operators import upsert as UP
 # ---------------------------------------------------------------------------
 #
 # Deterministic queries whose semantics SQL cannot re-derive (seeded
-# MinHash/SimHash/LSH, the pandas-UDF lang-id, the synthetic-world
-# validator pipeline) are pinned to committed golden parquet fixtures
+# MinHash/SimHash, the pandas-UDF lang-id, the synthetic-world
+# pipelines) are pinned to committed golden parquet fixtures
 # that DuckDB reads with read_parquet(). The fixtures are generated by
 # tests/fixtures/regen_oracle_golden.py from the VERIFIED operator
 # output (each op's exactness/recall is proven separately in pytest
@@ -50,7 +50,6 @@ _GOLDEN_DIR = str(
 
 # SF discriminators, recomputable on both sides from the input tables
 _TAG_DOCS = "(SELECT CAST(SUM(LENGTH(text)) AS BIGINT) FROM documents)"
-_TAG_EMB = "(SELECT CAST(SUM(label) AS BIGINT) FROM embeddings)"
 
 #: every SF the tag-bearing fixtures are pinned at — the single source
 #: for the regen script and the freshness guard. sf0.001 serves local
@@ -68,15 +67,12 @@ GOLDEN_PINNED: dict[str, tuple[list[str], str | None]] = {
     "minhash_pairs": (["id1", "id2", "est_jaccard"], _TAG_DOCS),
     "winnow_pairs": (["id1", "id2", "n_shared"], _TAG_DOCS),
     "simhash_pairs": (["id1", "id2", "hamming"], _TAG_DOCS),
-    "embedding_neardup": (["id1", "id2", "cosine"], _TAG_EMB),
     "spatial_error_reports": (
         ["area_identifier", "type", "id", "error_id", "osm_object_url", "report_json"],
         None,
     ),
     "tile_vector_assignment": (["tile_id", "region", "n_images"], None),
     "image_invariants": (["image_id", "fmt", "psnr", "phash_match", "caption_ok"], None),
-    # deterministic since kmeans samples via TakeOrdered on vec_id
-    "ann_ivf": (["vec_id", "neighbor_id", "cosine", "rank"], _TAG_EMB),
     # audio multimodal column (real WAV codec; pure functions of audio_id)
     "audio_features": (
         ["audio_id", "sr", "n_channels", "duration_s", "rms", "zcr", "centroid_hz"],
@@ -87,8 +83,6 @@ GOLDEN_PINNED: dict[str, tuple[list[str], str | None]] = {
         None,
     ),
     "audio_neardup": (["id1", "id2", "hamming"], None),
-    # video multimodal column (real VPNG container decode)
-    "video_frames": (["video_id", "frame_idx", "frame_phash", "mean_luma"], None),
 }
 
 
@@ -675,7 +669,7 @@ FROM (
 
 
 # ---------------------------------------------------------------------------
-# text / dedup / embeddings (training-data pipeline)
+# text / dedup (training-data pipeline)
 # ---------------------------------------------------------------------------
 
 def q_text_metrics(spark, sf_dir):
@@ -758,44 +752,9 @@ WHERE CAST(shared AS DOUBLE) / (s1.sz + s2.sz - shared) >= 0.6
 """
 
 
-def q_embedding_topk(spark, sf_dir):
-    """ANN baseline: exact cosine top-k, JVM higher-order functions."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 30)
-    return ANN.cosine_topk_native(q, e, k=3).select(
-        "vec_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "rank"
-    )
-
-
-def q_embedding_topk_fast(spark, sf_dir):
-    """The scale path for exact cosine top-k: corpus as a broadcast
-    numpy matrix, one matmul per Arrow batch, zero shuffle — same
-    results (and same DuckDB oracle) as the native HOF twin above,
-    which exists for the SQL-matchable plan. This is the path the
-    bench headline times."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 30)
-    return ANN.cosine_topk_fast(q, e, k=3).select(
-        "vec_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "rank"
-    )
-
-
-SQL_EMB_TOPK = """
-WITH q AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 30),
-c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-d AS (
-  SELECT q.vec_id, c.vec_id AS neighbor_id,
-         ROUND(LIST_DOT_PRODUCT(q.v, c.v) /
-               (SQRT(LIST_DOT_PRODUCT(q.v, q.v)) * SQRT(LIST_DOT_PRODUCT(c.v, c.v))), 6) AS cosine
-  FROM q CROSS JOIN c WHERE q.vec_id <> c.vec_id
-)
-SELECT vec_id, neighbor_id, ROUND(cosine, 4) AS cosine, CAST(rank AS INT) AS rank
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY cosine DESC, neighbor_id ASC) AS rank
-  FROM d
-) WHERE rank <= 3
-"""
-
+# ---------------------------------------------------------------------------
+# MapRoulette, scheduling and report sinks
+# ---------------------------------------------------------------------------
 
 def q_challenge_sync(spark, sf_dir):
     """Challenge create/update orchestration plan
@@ -1061,7 +1020,7 @@ FROM rep GROUP BY area_identifier, error_id
 """
 
 
-# --- no-oracle (rows-only) entries: genuinely non-SQL-expressible ---
+# --- golden-pinned entries: seeded hashes / pandas UDF (see GOLDEN_PINNED) ---
 
 def q_lang_id(spark, sf_dir):
     """Language-ID heuristic (pandas UDF) — rows-only check."""
@@ -1088,36 +1047,6 @@ def q_winnow_pairs(spark, sf_dir):
     reference in test_dedup; this pin freezes the verified output."""
     d = _t(spark, sf_dir, "documents")
     return DD.winnow_copy_pairs(d, min_shared=3)
-
-
-def q_ann_ivf(spark, sf_dir):
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 30)
-    return ANN.ivf_topk(q, e, k=3, n_centroids=8, nprobe=3)
-
-
-def q_embedding_neardup(spark, sf_dir):
-    """Embedding-cosine near-dup pairs. The synthetic embeddings table
-    is uniform-random (max pairwise cosine ≈ 0.46), so near-dups are
-    PLANTED deterministically: vec_id<50 gets a scaled copy (cosine
-    exactly 1) and vec_id in [50,100) a sign-preserving perturbation
-    (cosine in (0.9, 1), varies per vector) — both land in the same LSH
-    bucket by construction, so the emitted set is the in-bucket exact
-    verify, deterministic and golden-pinnable."""
-    e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
-    scaled = e.filter(F.col("vec_id") < 50).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform("embedding", lambda x: x * F.lit(1.25)).cast("array<float>").alias("embedding"),
-        "label",
-    )
-    perturbed = e.filter((F.col("vec_id") >= 50) & (F.col("vec_id") < 100)).select(
-        (F.col("vec_id") + 200000).alias("vec_id"),
-        F.transform("embedding", lambda x: x + F.abs(x) * F.lit(0.3)).cast("array<float>").alias("embedding"),
-        "label",
-    )
-    return DD.embedding_neardup_pairs(
-        e.unionByName(scaled).unionByName(perturbed), threshold=0.9
-    )
 
 
 def q_merge_upsert(spark, sf_dir):
@@ -1230,9 +1159,9 @@ FROM links
 """
 
 
-# --- engine-native spatial/image pipeline (synthetic world; rows-only:
-#     the DuckDB oracle cannot see these generated tables — their exact
-#     semantics are pinned by the pytest brute-force oracles instead) ---
+# --- engine-native spatial/image pipeline (the synthetic-world queries
+#     are golden-pinned, see GOLDEN_PINNED above; the rest derive their
+#     inputs from the testdata tables and have SQL twins) ---
 
 def q_spatial_error_reports(spark, sf_dir):
     """The flagship validator pipeline's report rows (V1+J1+J5+P*).
@@ -1357,7 +1286,7 @@ def q_image_invariants(spark, sf_dir):
 
     return IO.verify_invariants(
         W.spark_images(spark, 300), caption_fn=W.expected_captions
-    )
+    ).select(*GOLDEN_PINNED["image_invariants"][0])
 
 
 def q_audio_features(spark, sf_dir):
@@ -1388,22 +1317,6 @@ def q_audio_invariants(spark, sf_dir):
 
     return AO.verify_invariants(
         AU.spark_audio(spark, 300), caption_fn=AU.expected_audio_captions
-    )
-
-
-def q_video_frames(spark, sf_dir):
-    """Video frame-sampling with REAL container decode: VPNG clips
-    (length-prefixed real-PNG frames) → every 2nd frame decoded and
-    featurized (aHash + mean luma). Deterministic seeded source →
-    golden-pinned oracle."""
-    from ..datagen import world as W
-    from ..operators import images_ops as IO
-
-    return IO.sample_frames(W.spark_videos(spark, 150, n_frames=8), stride=2).select(
-        "video_id",
-        "frame_idx",
-        "frame_phash",
-        F.round("mean_luma", 6).alias("mean_luma"),
     )
 
 
@@ -1457,18 +1370,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "audio_features": q_audio_features,
         "audio_invariants": q_audio_invariants,
         "audio_neardup": q_audio_neardup,
-        "video_frames": q_video_frames,
         "text_metrics": q_text_metrics,
         "exact_dup_groups": q_exact_dup_groups,
         "token_jaccard": q_token_jaccard,
-        "embedding_topk": q_embedding_topk,
-        "embedding_topk_fast": q_embedding_topk_fast,
         "lang_id": q_lang_id,
         "minhash_pairs": q_minhash_pairs,
         "winnow_pairs": q_winnow_pairs,
         "simhash_pairs": q_simhash_pairs,
-        "ann_ivf": q_ann_ivf,
-        "embedding_neardup": q_embedding_neardup,
         "cell_parent_rollup": q_cell_parent_rollup,
         "rollup_hierarchy": q_rollup_hierarchy,
         "dedup_keep_lowest": q_dedup_keep_lowest,
@@ -1526,8 +1434,6 @@ def oracle_sql() -> dict[str, str]:
         "text_metrics": SQL_TEXT_METRICS,
         "exact_dup_groups": SQL_DUP_GROUPS,
         "token_jaccard": SQL_JACCARD,
-        "embedding_topk": SQL_EMB_TOPK,
-        "embedding_topk_fast": SQL_EMB_TOPK,
         # golden-pinned (seeded/UDF ops; see GOLDEN_PINNED above)
         **{name: _sql_golden(name) for name in GOLDEN_PINNED},
     }

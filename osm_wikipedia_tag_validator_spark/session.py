@@ -115,7 +115,7 @@ def stop_spark() -> None:
 
 
 # single-slot registry for operator-owned SparkContext broadcasts
-# (kNN entity matrix, ANN corpus matrix): repeated calls — a bench
+# (the kNN entity matrix): repeated calls — a bench
 # loop runs each operator 4x — would otherwise pin one full matrix
 # per call in executor block-manager memory for the session lifetime.
 _TRACKED_BROADCASTS: dict[str, object] = {}

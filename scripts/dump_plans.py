@@ -11,7 +11,6 @@ sys.path.insert(0, os.getcwd())
 from pyspark.sql import functions as F
 
 from osm_wikipedia_tag_validator_spark.datagen import world as W
-from osm_wikipedia_tag_validator_spark.operators import ann as ANN
 from osm_wikipedia_tag_validator_spark.operators import knn as KNN
 from osm_wikipedia_tag_validator_spark.operators import region_split as RS
 from osm_wikipedia_tag_validator_spark.operators import spatial_join as SJ
@@ -86,18 +85,6 @@ def main() -> None:
                     W.spark_elements(spark, 100),
                     W.spark_wiki_entities(spark),
                     W.spark_regions(spark),
-                )
-            ),
-        ),
-        (
-            "ANN exact top-k, scale path (embedding_topk_fast)",
-            "Corpus rides the closure as a broadcast numpy matrix; one matmul per Arrow batch, "
-            "zero shuffle, no window sort — the plan is a single MapInPandas over the streaming query side.",
-            cap(
-                ANN.cosine_topk_fast(
-                    spark.read.parquet(f"{SF}/embeddings.parquet").limit(30),
-                    spark.read.parquet(f"{SF}/embeddings.parquet"),
-                    k=3,
                 )
             ),
         ),

@@ -58,27 +58,6 @@ def test_dct8_odd_sizes_pad_and_crop():
         assert codecs.psnr(img, dec) >= 40.0
 
 
-def test_vpng_container_roundtrip_and_selective_decode():
-    rng = np.random.default_rng(9)
-    frames = [
-        rng.integers(0, 256, size=(12, 16, 3), dtype=np.uint8) for _ in range(5)
-    ]
-    data = codecs.vpng_encode(frames)
-    assert codecs.vpng_n_frames(data) == 5
-    # full decode lossless
-    for a, b in zip(codecs.vpng_decode_frames(data), frames):
-        assert (a == b).all()
-    # selective decode returns exactly the requested frames, in order
-    got = codecs.vpng_decode_frames(data, [3, 0])
-    assert (got[0] == frames[0]).all() and (got[1] == frames[3]).all()
-    with pytest.raises(IndexError):
-        codecs.vpng_decode_frames(data, [5])
-    with pytest.raises(ValueError):
-        codecs.vpng_n_frames(b"xxxx")
-    with pytest.raises(ValueError):
-        codecs.vpng_encode([])
-
-
 def test_psnr_identical_is_inf():
     img = np.zeros((8, 8, 3), dtype=np.uint8)
     assert codecs.psnr(img, img) == float("inf")

@@ -74,25 +74,6 @@ def test_token_jaccard_matches_manual(docs):
     assert abs(got[(0, 2)] - expected) < 1e-6
 
 
-def test_embedding_neardup_vs_bruteforce(spark):
-    rng = np.random.default_rng(3)
-    base = rng.standard_normal((20, 16)).astype(np.float32)
-    rows = []
-    for i, v in enumerate(base):
-        rows.append((i, [float(x) for x in v]))
-        # a near-duplicate with tiny noise
-        rows.append((100 + i, [float(x) for x in v + rng.standard_normal(16).astype(np.float32) * 0.01]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    exact = DD.embedding_neardup_bruteforce(df, threshold=0.98).toPandas()
-    lsh = DD.embedding_neardup_pairs(df, threshold=0.98).toPandas()
-    exact_pairs = {(int(a), int(b)) for a, b in zip(exact["id1"], exact["id2"])}
-    lsh_pairs = {(int(a), int(b)) for a, b in zip(lsh["id1"], lsh["id2"])}
-    # every LSH pair is a true pair; recall ≥ 0.9 on planted dups
-    assert lsh_pairs <= exact_pairs
-    planted = {(i, 100 + i) for i in range(20)} & exact_pairs
-    assert len(lsh_pairs & planted) >= 0.9 * len(planted)
-
-
 def test_winnow_fingerprints_shift_invariant():
     h = TX.char_ngrams_hashed(["abcdefghijklmnopqrstuvwxyz" * 3], n=4)[0]
     fp1 = set(TX.winnow_fingerprints(h, 8).tolist())

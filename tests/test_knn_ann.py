@@ -1,10 +1,7 @@
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
-from osm_wikipedia_tag_validator_spark.datagen import world as W
 from osm_wikipedia_tag_validator_spark.functions.geometry import haversine_km
-from osm_wikipedia_tag_validator_spark.operators import ann as ANN
 from osm_wikipedia_tag_validator_spark.operators import knn as KNN
 
 
@@ -76,75 +73,8 @@ def test_knn_kring_handles_polar_queries(spark):
         assert grp.sort_values("rank")["qid"].tolist() == exp[int(qid)]
 
 
-def test_ann_ivf_recall(spark):
-    # clustered corpus (mixture of gaussians) — IVF's design setting;
-    # on purely isotropic random data inverted lists can't help
-    rng = np.random.default_rng(5)
-    centers = rng.standard_normal((10, 32)) * 4
-    X = np.vstack(
-        [centers[i % 10] + rng.standard_normal(32) * 0.5 for i in range(300)]
-    ).astype(np.float32)
-    rows = [(i, [float(x) for x in X[i]]) for i in range(300)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = df.filter(F.col("vec_id") < 40)
-    exact = ANN.cosine_topk_native(q, df, k=5).toPandas()
-    approx = ANN.ivf_topk(q, df, k=5, n_centroids=12, nprobe=4).toPandas()
-    e = {(int(r.vec_id), int(r.neighbor_id)) for r in exact.itertuples()}
-    a = {(int(r.vec_id), int(r.neighbor_id)) for r in approx.itertuples()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.7, f"IVF recall {recall}"
-
-
 def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_cosine_topk_blocked_matches_native(spark):
-    """Block-partitioned exact top-k == brute force, across block
-    boundaries (block_rows far below corpus size forces many blocks on
-    both sides)."""
-    rng = np.random.default_rng(7)
-    X = rng.standard_normal((150, 16)).astype(np.float32)
-    rows = [(i, [float(x) for x in X[i]]) for i in range(150)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = df.filter(F.col("vec_id") < 40)
-    native = ANN.cosine_topk_native(q, df, k=4).toPandas().sort_values(["vec_id", "rank"])
-    blocked = (
-        ANN.cosine_topk_blocked(q, df, k=4, block_rows=23)
-        .toPandas()
-        .sort_values(["vec_id", "rank"])
-    )
-    assert native["neighbor_id"].tolist() == blocked["neighbor_id"].tolist()
-    assert np.allclose(
-        native["cosine"].to_numpy(), blocked["cosine"].to_numpy(), atol=1e-9
-    )
-
-
-def test_cosine_topk_fast_overlimit_routes_to_blocked(spark):
-    """An over-limit corpus must NOT be broadcast or collected whole:
-    the fast path's fallback is the cogroup block plan — no
-    BroadcastNestedLoopJoin, no broadcast of corpus data — and its
-    output is exactly brute force."""
-    from osm_wikipedia_tag_validator_spark import session as S
-
-    rng = np.random.default_rng(8)
-    X = rng.standard_normal((160, 8)).astype(np.float32)
-    rows = [(i, [float(x) for x in X[i]]) for i in range(160)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = df.filter(F.col("vec_id") < 25)
-    before = dict(S._TRACKED_BROADCASTS)
-    out = ANN.cosine_topk_fast(q, df, k=3, max_inline_corpus=50)
-    got = out.toPandas().sort_values(["vec_id", "rank"])
-    # no full-corpus broadcast happened (the fast path's matrix slot
-    # was never written) and the plan carries no broadcast join at all
-    assert S._TRACKED_BROADCASTS.get("ann_corpus_matrix") is before.get(
-        "ann_corpus_matrix"
-    )
-    plan = _executed_plan(out)
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "FlatMapCoGroupsInPandas" in plan
-    native = ANN.cosine_topk_native(q, df, k=3).toPandas().sort_values(["vec_id", "rank"])
-    assert native["neighbor_id"].tolist() == got["neighbor_id"].tolist()
 
 
 def test_knn_bruteforce_overlimit_routes_to_blocked(spark):
@@ -163,17 +93,6 @@ def test_knn_bruteforce_overlimit_routes_to_blocked(spark):
     assert len(got) == 50 * 5
     for qid, grp in got.groupby("id"):
         assert grp.sort_values("rank")["qid"].tolist() == exp[int(qid)]
-
-
-def test_cosine_topk_fast_matches_native(spark):
-    rng = np.random.default_rng(6)
-    X = rng.standard_normal((120, 16)).astype(np.float32)
-    rows = [(i, [float(x) for x in X[i]]) for i in range(120)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = df.filter(F.col("vec_id") < 30)
-    native = ANN.cosine_topk_native(q, df, k=4).toPandas().sort_values(["vec_id", "rank"])
-    fast = ANN.cosine_topk_fast(q, df, k=4).toPandas().sort_values(["vec_id", "rank"])
-    assert native["neighbor_id"].tolist() == fast["neighbor_id"].tolist()
 
 
 def test_knn_kring_salts_hot_city_cell(spark, monkeypatch):
@@ -235,116 +154,6 @@ def test_knn_kring_salts_hot_city_cell(spark, monkeypatch):
         assert grp.sort_values("rank")["qid"].tolist() == exp[int(qid)]
 
 
-def test_cosine_topk_fast_byte_budget_is_dimension_aware(spark, monkeypatch):
-    """The inline-corpus guard is a BYTE budget, not a row cap: wide
-    vectors must route to the blocked plan even when the row count is
-    far under max_inline_corpus (round-4 verdict item 3 — 2M × 128-d ×
-    8 B ≈ 2 GB is not the same driver cost as 2M (lon, lat) pairs)."""
-    rng = np.random.default_rng(9)
-    X = rng.standard_normal((60, 64)).astype(np.float32)
-    rows = [(i, [float(x) for x in X[i]]) for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = df.filter(F.col("vec_id") < 8)
-
-    pulled = []
-    real = ANN._collect_matrix
-
-    def spy(corpus, c_id, c_vec):
-        ids, M = real(corpus, c_id, c_vec)
-        pulled.append(len(ids))
-        return ids, M
-
-    monkeypatch.setattr(ANN, "_collect_matrix", spy)
-    # byte budget allows 40/ (64*8) = 80... use 20*64*8 bytes → 20 rows
-    # < 60 corpus rows, while the ROW cap (1000) would have let it inline
-    got = (
-        ANN.cosine_topk_fast(
-            q, df, k=3, max_inline_corpus=1000, max_inline_bytes=20 * 64 * 8
-        )
-        .toPandas()
-        .sort_values(["vec_id", "rank"])
-    )
-    assert pulled == []  # overflow path: nothing collected to the driver
-    exp = ANN.cosine_topk_native(q, df, k=3).toPandas().sort_values(["vec_id", "rank"])
-    assert got["neighbor_id"].tolist() == exp["neighbor_id"].tolist()
-    assert np.allclose(got["cosine"].to_numpy(), exp["cosine"].to_numpy())
-
-    # same call with an ample byte budget stays on the inline matrix path
-    pulled.clear()
-    ANN.cosine_topk_fast(q, df, k=3, max_inline_corpus=1000).count()
-    assert pulled == [60]
-
-
-def test_cosine_topk_fast_null_first_row_cannot_defeat_byte_budget(spark):
-    """Regression (round-5 review): the vector-width probe read ONE row
-    with first(); a NULL embedding there read dim=NULL -> 1, inflating
-    the byte-derived row budget by the true dimension factor and taking
-    the inline driver-collect path on a corpus the budget was meant to
-    block. The probe must take the max size over non-null rows, so a
-    leading NULL routes the same corpus to the blocked plan."""
-    dim = 8
-    rng = np.random.default_rng(11)
-    X = rng.standard_normal((40, dim)).astype(np.float32)
-    rows = [(0, None)] + [
-        (i, [float(x) for x in X[i]]) for i in range(1, 40)
-    ]
-    # single partition in insertion order: the NULL row is the one a
-    # bare first() would read
-    df = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>"
-    ).coalesce(1)
-    q = spark.createDataFrame(
-        [(i, [float(x) for x in X[i]]) for i in range(1, 5)],
-        "vec_id long, embedding array<float>",
-    )
-    # byte budget admits 20 rows at the TRUE dim (8 × 8 B × 20 = 1280);
-    # a dim=1 misread would admit 160 rows and go inline
-    routed = {}
-    import osm_wikipedia_tag_validator_spark.operators.ann as ann_mod
-
-    real_blocked = ann_mod.cosine_topk_blocked
-
-    def spy(*a, **kw):
-        routed["blocked"] = True
-        return real_blocked(*a, **kw)
-
-    ann_mod.cosine_topk_blocked = spy
-    try:
-        out = ANN.cosine_topk_fast(q, df, k=3, max_inline_bytes=1280)
-        n = out.count()
-        assert n > 0
-    finally:
-        ann_mod.cosine_topk_blocked = real_blocked
-    assert routed.get("blocked"), "over-budget corpus took the inline path"
-
-
-def test_ann_family_uniform_null_vector_semantics(spark):
-    """Null-embedding rows are dropped at the boundary by EVERY path —
-    native previously emitted null-cosine rank rows while the numpy
-    paths crashed on np.vstack. All four must agree on a corpus and
-    query set containing nulls."""
-    rng = np.random.default_rng(21)
-    X = rng.standard_normal((60, 8)).astype(np.float32)
-    rows = [(i, [float(x) for x in X[i]]) for i in range(60)]
-    rows += [(100, None), (101, None)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = df.filter((F.col("vec_id") < 10) | (F.col("vec_id") >= 100))
-
-    def key(out):
-        p = out.toPandas().sort_values(["vec_id", "rank"])
-        return list(zip(p["vec_id"], p["rank"], p["neighbor_id"]))
-
-    native = key(ANN.cosine_topk_native(q, df, k=3))
-    assert native, "expected non-null queries to produce rows"
-    assert all(v < 100 for v, _, _ in native), "null-query rows leaked"
-    fast = key(ANN.cosine_topk_fast(q, df, k=3))
-    blocked = key(ANN.cosine_topk_blocked(q, df, k=3, block_rows=17))
-    assert native == fast == blocked
-    # ivf is approximate — only require it to run and drop null rows
-    ivf = ANN.ivf_topk(q, df, k=3, n_centroids=4, nprobe=4).toPandas()
-    assert (ivf["vec_id"] < 100).all()
-
-
 def test_knn_family_uniform_null_coordinate_semantics(spark):
     """Null-lon/lat rows are dropped by every kNN strategy: the k-ring
     path's Catalyst cell expression drops them structurally (a null
@@ -381,31 +190,6 @@ def test_knn_family_uniform_null_coordinate_semantics(spark):
         assert not got["qid"].isin([900, 901]).any(), "null-coordinate entity leaked"
         for qid, grp in got.groupby("id"):
             assert grp.sort_values("rank")["qid"].tolist() == exp[int(qid)]
-
-
-def test_ann_family_empty_after_null_drop(spark):
-    """Regression (round-5 review): a corpus that is EMPTY once null
-    vectors are dropped must yield an empty result from every path —
-    fast previously fed np.vstack an empty array in _collect_matrix and
-    ivf crashed the same way inside kmeans_centroids, while
-    native/blocked already returned zero rows."""
-    corpus = spark.createDataFrame(
-        [(0, None), (1, None)], "vec_id long, embedding array<float>"
-    )
-    q = spark.createDataFrame(
-        [(10, [1.0, 0.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    for fn, kw in [
-        (ANN.cosine_topk_native, {}),
-        (ANN.cosine_topk_fast, {}),
-        (ANN.cosine_topk_blocked, {"block_rows": 8}),
-        (ANN.ivf_topk, {"n_centroids": 4, "nprobe": 2}),
-    ]:
-        out = fn(q, corpus, k=3, **kw)
-        assert out.count() == 0, f"{fn.__name__} emitted rows from an empty corpus"
-        assert [f.name for f in out.schema.fields] == [
-            "vec_id", "neighbor_id", "cosine", "rank",
-        ], f"{fn.__name__} empty-result schema diverged"
 
 
 def test_knn_bruteforce_empty_entities_after_null_drop(spark):

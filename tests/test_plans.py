@@ -3,7 +3,6 @@ scale story depends on must be visible in `.explain` output, not
 assumed (SURVEY.md §4)."""
 
 import pyspark.sql.functions as F
-import pytest
 
 from osm_wikipedia_tag_validator_spark.datagen import world as W
 from osm_wikipedia_tag_validator_spark.operators import spatial_join as SJ
@@ -81,19 +80,23 @@ def test_validator_is_pure_codegen(spark):
 
 def test_validator_plan_stays_compact(spark):
     """Each subexpression the validator's rules share is computed once
-    as a named column. The bounds sit above the counts that gives
-    (3 array_sort, 11 lambdafunction, 4 CASE WHEN in the default
-    rendering) and far below those of inlining every use (83, 199, 40)."""
+    as a named column. Counted over the whole optimized plan: the
+    default rendering stops listing a node's fields after 25, so its
+    counts move with the width of a projection. The bounds sit at twice
+    the counts that gives (3 array_sort, 12 lambdafunction, 14 CASE
+    WHEN) and far below those of inlining every use (83, 200, 81)."""
     from osm_wikipedia_tag_validator_spark.operators import validator as V
 
     out = V.validate(
         W.spark_elements(spark, 400), W.spark_wiki_entities(spark), W.spark_regions(spark)
     )
-    plan = _optimized(out)
+    # the treeString overload whose third argument is maxFields
+    plan = out._jdf.queryExecution().optimizedPlan().treeString(False, False, 1 << 30, False, False)
+    assert "more fields" not in plan
     counts = {k: plan.count(k) for k in ("array_sort", "lambdafunction", "CASE WHEN")}
     assert counts["array_sort"] <= 6, counts
-    assert counts["lambdafunction"] <= 20, counts
-    assert counts["CASE WHEN"] <= 12, counts
+    assert counts["lambdafunction"] <= 24, counts
+    assert counts["CASE WHEN"] <= 28, counts
 
 
 def test_validator_joins_wiki_dim_three_times(spark):
@@ -173,20 +176,6 @@ def test_region_split_budget_and_locality(spark):
     cell_max = pmp.groupby("area_identifier")["cnt"].max()
     for (reg, _), sz in sizes.items():
         assert sz <= 100 + int(cell_max[reg])
-
-
-def test_cosine_topk_fast_has_no_shuffle(spark):
-    from osm_wikipedia_tag_validator_spark.operators import ann as ANN
-
-    e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    q = e.limit(20)
-    df = ANN.cosine_topk_fast(q, e, k=3)
-    plan = _plan(df)
-    # corpus rides the closure as a broadcast numpy matrix; the query
-    # side streams through one Arrow stage — no shuffle, no window sort
-    assert "Exchange hashpartitioning" not in plan
-    assert "Window" not in plan
-    assert plan.count("MapInPandas") == 1
 
 
 def test_image_lineage_join_is_shuffle_hash_never_broadcast(spark):

@@ -1,6 +1,6 @@
-"""Round-3 robustness fixes: ANN corpus-size guard, latest_per_key
-determinism, structural-corruption handling in verify operators, and
-the corrupt-input → ValueError codec contract."""
+"""Round-3 robustness fixes: latest_per_key determinism,
+structural-corruption handling in verify operators, and the
+corrupt-input → ValueError codec contract."""
 
 import numpy as np
 import pandas as pd
@@ -10,65 +10,9 @@ from pyspark.sql import functions as F
 from osm_wikipedia_tag_validator_spark.datagen import audio as A
 from osm_wikipedia_tag_validator_spark.datagen import codecs as C
 from osm_wikipedia_tag_validator_spark.datagen import world as W
-from osm_wikipedia_tag_validator_spark.operators import ann as ANN
 from osm_wikipedia_tag_validator_spark.operators import audio_ops as AO
 from osm_wikipedia_tag_validator_spark.operators import images_ops as IO
 from osm_wikipedia_tag_validator_spark.operators.upsert import latest_per_key
-
-
-def _embeddings(spark, n=60, dim=8):
-    rng = np.random.default_rng(3)
-    X = rng.standard_normal((n, dim)).astype(np.float32)
-    rows = [(i, [float(x) for x in X[i]]) for i in range(n)]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def test_cosine_topk_fast_over_limit_never_collects(spark, monkeypatch):
-    """An over-limit corpus must never reach the driver AT ALL: the
-    round-5 guard convention (unified with knn_bruteforce) decides via
-    one first() width probe + a limit(budget+1).count() — zero
-    _collect_matrix calls on the overflow path — then routes to the
-    blocked cogroup plan and still returns the exact top-k."""
-    df = _embeddings(spark)
-    q = df.filter(F.col("vec_id") < 10)
-
-    real = ANN._collect_matrix
-    pulled = []
-
-    def spy(corpus, c_id, c_vec):
-        ids, M = real(corpus, c_id, c_vec)
-        pulled.append(len(ids))
-        return ids, M
-
-    monkeypatch.setattr(ANN, "_collect_matrix", spy)
-    got = (
-        ANN.cosine_topk_fast(q, df, k=3, max_inline_corpus=10)
-        .toPandas()
-        .sort_values(["vec_id", "rank"])
-    )
-    # NOTHING is collected on the overflow path — the count guard runs
-    # before any driver pull (the old convention pulled max+1 full
-    # embedding rows and discarded them)
-    assert pulled == []
-    exp = (
-        ANN.cosine_topk_native(q, df, k=3)
-        .toPandas()
-        .sort_values(["vec_id", "rank"])
-    )
-    assert got["neighbor_id"].tolist() == exp["neighbor_id"].tolist()
-    assert np.allclose(got["cosine"].to_numpy(), exp["cosine"].to_numpy())
-
-
-def test_cosine_topk_fast_under_limit_uses_matrix(spark):
-    df = _embeddings(spark)
-    q = df.filter(F.col("vec_id") < 10)
-    got = (
-        ANN.cosine_topk_fast(q, df, k=3, max_inline_corpus=1000)
-        .toPandas()
-        .sort_values(["vec_id", "rank"])
-    )
-    exp = ANN.cosine_topk_native(q, df, k=3).toPandas().sort_values(["vec_id", "rank"])
-    assert got["neighbor_id"].tolist() == exp["neighbor_id"].tolist()
 
 
 def test_latest_per_key_deterministic_on_ts_ties(spark):
@@ -103,8 +47,10 @@ def test_image_structural_corruption_flags_row(spark):
     )
     v = IO.verify_invariants(corrupt).toPandas().set_index("image_id")
     assert not v.loc["img-000000002", "phash_match"]
+    assert not v.loc["img-000000002", "invariant_ok"]
     assert v.loc["img-000000002", "psnr"] == 0.0
     assert v.drop(index="img-000000002")["phash_match"].all()
+    assert v.drop(index="img-000000002")["invariant_ok"].all()
 
     d = IO.compare_against_reference(corrupt, images).toPandas().set_index("image_id")
     assert not d.loc["img-000000002", "pixels_ok"]
@@ -261,7 +207,7 @@ def test_challenge_sync_null_status_left_alone(spark):
 
 def test_collect_polygons_size_guard(spark, monkeypatch):
     """An over-limit polygon dim fails fast with a clear error instead
-    of an unbounded driver collect (same guard class as kNN/ANN)."""
+    of an unbounded driver collect (same guard class as kNN)."""
     from osm_wikipedia_tag_validator_spark.operators import spatial_join as SJ
 
     ring = [{"lon": 0.0, "lat": 0.0}, {"lon": 1.0, "lat": 0.0}, {"lon": 0.0, "lat": 1.0}]

@@ -1,4 +1,5 @@
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -25,6 +26,7 @@ def test_verify_invariants(images):
     v = IO.verify_invariants(images).toPandas()
     assert v["phash_match"].all()
     assert v["caption_ok"].all()
+    assert v["invariant_ok"].all()
     from osm_wikipedia_tag_validator_spark.datagen.codecs import LOSSY_FMTS
 
     # lossless round trip: psnr inf (clipped to 1e9); lossy ≥ 40
@@ -36,6 +38,16 @@ def test_verify_invariants(images):
     assert len(dct) > 0 and (dct < 1e8).all()
 
 
+def test_verify_invariants_verdict_applies_min_psnr_db(images):
+    """`invariant_ok` applies `min_psnr_db`: a bound above every dct8
+    round trip fails each dct8 row, and only those (the other formats
+    round-trip exactly)."""
+    strict = IO.verify_invariants(images, min_psnr_db=1e8).toPandas()
+    dct = strict["fmt"] == "dct8"
+    assert dct.any() and not strict.loc[dct, "invariant_ok"].any()
+    assert strict.loc[~dct, "invariant_ok"].all()
+
+
 def test_thumbnails_decode(images):
     from osm_wikipedia_tag_validator_spark.datagen.codecs import decode_image
 
@@ -45,29 +57,6 @@ def test_thumbnails_decode(images):
     assert img.shape == (8, 8, 3)
 
 
-def test_frame_sampling_real_decode(spark):
-    from osm_wikipedia_tag_validator_spark.datagen.codecs import (
-        decode_image,
-        vpng_decode_frames,
-    )
-    from osm_wikipedia_tag_validator_spark.functions.imagefns import ahash64, luma
-
-    videos = W.spark_videos(spark, 10, n_frames=8).cache()
-    fr = IO.sample_frames(videos, stride=2).toPandas()
-    assert len(fr) == 40  # 10 clips × frames {0,2,4,6}
-    assert set(fr["frame_idx"]) == {0, 2, 4, 6}
-    # features must equal a direct decode of the same container frames
-    raw = {r["video_id"]: bytes(r["bytes"]) for r in videos.collect()}
-    one = fr[fr.video_id == sorted(raw)[0]].sort_values("frame_idx")
-    frames = vpng_decode_frames(raw[sorted(raw)[0]], [0, 2, 4, 6])
-    for (_, row), frame in zip(one.iterrows(), frames):
-        assert row["frame_phash"] == ahash64(frame)
-        assert row["mean_luma"] == pytest.approx(float(luma(frame).mean()))
-    # brightness ramp ⇒ later frames are brighter (real decode, not a
-    # synthesized shift of the still)
-    assert (one["mean_luma"].diff().dropna() > 0).all()
-
-
 def test_phash_neardup_pairs(spark, images):
     feats = IO.extract_features(images)
     pairs = IO.neardup_by_phash(feats, max_hamming=2).toPandas()
@@ -75,6 +64,42 @@ def test_phash_neardup_pairs(spark, images):
     # pairs symmetric-free and within threshold
     assert (pairs["hamming"] <= 2).all()
     assert (pairs["id1"] < pairs["id2"]).all()
+
+
+def test_phash_neardup_exact_vs_bruteforce(spark):
+    """At the default threshold (6 bits over 8 bands) the band join is
+    EXACT: it returns every pair an all-pairs brute force finds, and
+    nothing else. Planted copies with 0..7 flipped bits sit on both
+    sides of the threshold."""
+    rng = np.random.default_rng(5)
+    base = rng.integers(np.iinfo(np.int64).min, np.iinfo(np.int64).max, 40, dtype=np.int64)
+    ids = [f"img-{i:03d}" for i in range(40)]
+    hashes = list(base)
+    for i in range(16):
+        flips = rng.choice(64, size=i % 8, replace=False)
+        mask = np.uint64(sum(1 << int(b) for b in flips))
+        hashes.append((base[i].view(np.uint64) ^ mask).view(np.int64))
+        ids.append(f"img-p{i:02d}")
+    features = spark.createDataFrame(
+        pd.DataFrame({"image_id": ids, "phash": hashes}), "image_id string, phash long"
+    )
+    got = {
+        (r["id1"], r["id2"], r["hamming"])
+        for r in IO.neardup_by_phash(features).collect()
+    }
+    u = [int(np.int64(h).view(np.uint64)) for h in hashes]
+    want = set()
+    for i in range(len(ids)):
+        for j in range(len(ids)):
+            d = bin(u[i] ^ u[j]).count("1")
+            if ids[i] < ids[j] and d <= 6:
+                want.add((ids[i], ids[j], d))
+    assert got == want
+    assert {(f"img-{i:03d}", f"img-p{i:02d}") for i in range(16) if i % 8 <= 6} <= {
+        (a, b) for a, b, _ in got
+    }
+    with pytest.raises(ValueError, match="pigeonhole"):
+        IO.neardup_by_phash(features, max_hamming=64)
 
 
 def test_streaming_windowed_counts(spark, tmp_path):
