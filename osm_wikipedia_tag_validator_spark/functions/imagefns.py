@@ -104,32 +104,3 @@ def ahash64_batch(imgs: np.ndarray) -> np.ndarray:
     g = (sums @ _LW).reshape(n, 64) / np.float32(bh * bw)
     bits = g > g.mean(axis=1, keepdims=True)
     return np.packbits(bits, axis=1).view(">i8").astype(np.int64).ravel()
-
-
-def popcount64(x: np.ndarray) -> np.ndarray:
-    """Vectorized SWAR popcount over uint64."""
-    x = np.asarray(x, dtype=np.uint64)
-    with np.errstate(over="ignore"):
-        x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
-        x = (x & np.uint64(0x3333333333333333)) + (
-            (x >> np.uint64(2)) & np.uint64(0x3333333333333333)
-        )
-        x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
-        return ((x * np.uint64(0x0101010101010101)) >> np.uint64(56)).astype(np.int64)
-
-
-def hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Vectorized Hamming distance between two int64 hash arrays."""
-    return popcount64(
-        (np.asarray(a, dtype=np.int64) ^ np.asarray(b, dtype=np.int64)).astype(np.uint64)
-    )
-
-
-def extract_features(img: np.ndarray) -> dict:
-    """Cheap per-image features used by the pipeline's metadata stage."""
-    g = luma(img)
-    return {
-        "mean_luma": float(g.mean()),
-        "std_luma": float(g.std()),
-        "phash": ahash64(img),
-    }

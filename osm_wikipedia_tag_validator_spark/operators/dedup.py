@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions import textfns as TX
 from ..functions.hashing import splitmix64
-from ..functions.imagefns import popcount64
 
 
 # --------------------------------------------------------------------------
@@ -334,9 +333,8 @@ def banded_hamming_pairs(
 ) -> DataFrame:
     """(id1, id2, hamming) pairs with Hamming(sig) ≤ max_hamming over a
     64-bit signature column — THE shared banding plan behind SimHash
-    text dedup, image phash near-dup and audio fingerprint near-dup
-    (one implementation, three callers, so the pigeonhole caveat can't
-    drift between copies).
+    text dedup and image phash near-dup (one implementation, two
+    callers, so the pigeonhole caveat can't drift between copies).
 
     Candidates come from a band equi-join (never an all-pairs cross
     join): the signature splits into n_bands chunks; a pair with

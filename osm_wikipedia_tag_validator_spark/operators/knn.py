@@ -442,7 +442,7 @@ def knn_kring(
     ``spatial_join.salted_join_skewed`` (entity rows of hot cells
     replicated ×hot_cell_buckets, query rows split across the buckets);
     cold cells join with salt 0, zero replication. Result-neutral by
-    construction; `tests/test_knn_ann.py` pins salted == unsalted on a
+    construction; `tests/test_knn.py` pins salted == unsalted on a
     planted city-density cell. AQE skew-join can't see this skew
     because the hot key is born inside the explode, after the stage
     boundary AQE splits on. Reference analog: the region-split
@@ -505,7 +505,7 @@ def knn_kring(
         # prune anything, so the cell join would just be a worse-shaped
         # brute force. Delegate to the map-side exact path (identical
         # results; the genuine index path is exercised on dense entity
-        # sets — see tests/test_knn_ann.py).
+        # sets — see tests/test_knn.py).
         ent.unpersist()
         return knn_bruteforce(
             queries, entities, k,

@@ -31,8 +31,7 @@ SF_DIRS = OQ.GOLDEN_SF_DIRS
 
 def _tag_value(tag_sql: str, sf_dir: str) -> int:
     con = duckdb.connect()
-    for t in ["documents", "embeddings"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
     return int(con.execute(tag_sql.strip("()")).fetchone()[0])
 
 

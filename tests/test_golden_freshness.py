@@ -32,9 +32,19 @@ def _tag_value(tag_sql: str, sf_dir: str) -> int:
     import duckdb
 
     con = duckdb.connect()
-    for t in ["documents", "embeddings"]:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
     return int(con.execute(tag_sql.strip("()")).fetchone()[0])
+
+
+def test_fixture_dir_matches_pins():
+    """Every committed fixture has a pin and every pin has a fixture, so
+    a dropped query cannot leave its parquet behind."""
+    stems = {
+        f.removesuffix(".parquet")
+        for f in os.listdir(FIXTURE_DIR)
+        if f.endswith(".parquet")
+    }
+    assert stems == set(OQ.GOLDEN_PINNED)
 
 
 @pytest.mark.parametrize("name", sorted(OQ.GOLDEN_PINNED))

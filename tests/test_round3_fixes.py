@@ -7,10 +7,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from osm_wikipedia_tag_validator_spark.datagen import audio as A
 from osm_wikipedia_tag_validator_spark.datagen import codecs as C
 from osm_wikipedia_tag_validator_spark.datagen import world as W
-from osm_wikipedia_tag_validator_spark.operators import audio_ops as AO
 from osm_wikipedia_tag_validator_spark.operators import images_ops as IO
 from osm_wikipedia_tag_validator_spark.operators.upsert import latest_per_key
 
@@ -57,22 +55,6 @@ def test_image_structural_corruption_flags_row(spark):
     assert d.drop(index="img-000000002")["pixels_ok"].all()
 
 
-def test_audio_structural_corruption_flags_row(spark):
-    audio = A.spark_audio(spark, 10)
-    corrupt = audio.withColumn(
-        "bytes",
-        F.when(
-            F.col("audio_id") == "aud-000000001",
-            # overwrite the RIFF magic → structural damage
-            F.concat(F.lit(b"XXXX"), F.substring(F.col("bytes"), 5, 1 << 24)),
-        ).otherwise(F.col("bytes")),
-    )
-    v = AO.verify_invariants(corrupt).toPandas().set_index("audio_id")
-    assert not v.loc["aud-000000001", "samples_exact"]
-    assert not v.loc["aud-000000001", "fp_match"]
-    assert v.drop(index="aud-000000001")["samples_exact"].all()
-
-
 def test_codec_corrupt_input_raises_valueerror():
     img = np.full((16, 16, 3), 77, dtype=np.uint8)
     for fmt in ["png", "dct8"]:
@@ -84,10 +66,6 @@ def test_codec_corrupt_input_raises_valueerror():
         # truncate mid-header → struct damage
         with pytest.raises(ValueError):
             C.decode_image(bytes(C.encode_image(img, fmt))[:12], fmt)
-    # WAV: truncated chunk header
-    wav = A.encode_wav(A.synth_samples(0), 16000)
-    with pytest.raises(ValueError):
-        A.decode_wav(wav[:20])
 
 
 def test_neardup_by_phash_default_recall(spark):
