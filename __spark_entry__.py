@@ -6,9 +6,9 @@ entry(spark)      — flagship query over /root/testdata/sf0.001: the
 queries()         — one entry per implemented operator from SURVEY.md §2
                     (see osm_wikipedia_tag_validator_spark/plans/oracle_queries.py).
 oracle_sql()      — one DuckDB-runnable oracle per query: an ANSI SQL
-                    twin, or where SQL cannot re-derive the result
-                    (seeded hashes, the lang-id UDF, the synthetic-world
-                    queries) a read of its golden fixture (GOLDEN_PINNED).
+                    twin, or where SQL cannot re-derive the result (the
+                    synthetic-world queries) a read of its golden
+                    fixture (GOLDEN_PINNED).
 """
 
 from __future__ import annotations

@@ -1,10 +1,8 @@
 """Vectorized 64-bit hashing primitives (numpy, overflow-wrapping).
 
-Used for: deterministic per-row synthetic data (datagen), MinHash /
-SimHash signatures (operators/dedup.py), rolling-hash document
-fingerprints (functions/textfns.py). splitmix64 is the public-domain
-mixer from Steele et al., "Fast Splittable Pseudorandom Number
-Generators" (OOPSLA 2014).
+Used for deterministic per-row synthetic data (datagen). splitmix64
+is the public-domain mixer from Steele et al., "Fast Splittable
+Pseudorandom Number Generators" (OOPSLA 2014).
 """
 
 from __future__ import annotations

@@ -11,9 +11,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..datagen.codecs import decode_image, psnr  # noqa: F401  (re-exported)
-
-
 _LW = np.array([0.299, 0.587, 0.114], dtype=np.float32)
 
 

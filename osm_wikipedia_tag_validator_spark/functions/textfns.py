@@ -1,81 +1,15 @@
-"""Text-analysis functions for the large-scale training-data pipeline.
+"""Reference render-layer string scalars (SURVEY.md §2.8 F3/F4/F10/F12).
 
-Two tiers, by design:
-  * Catalyst-native Column builders (token counts, quality ratios,
-    md5 fingerprints) — JVM codegen, DuckDB-oracle-matchable.
-  * Vectorized pandas/numpy (language-ID n-gram heuristic, rolling-
-    hash winnowing fingerprints, shingle/MinHash/SimHash signatures) —
-    Arrow-batched, used by operators/dedup.py.
-
-The reference has no text analytics; its string functions (SURVEY.md
-§2.8 F1-F13) are covered by the native tier's idioms.
+Catalyst-native Column builders for the reference's web-page and
+Overpass renderers: HTML escaping, Overpass string escaping, a
+pluralized count and a cascading length-budget fallback. Each is a
+JVM-codegen expression, so it runs without a Python UDF.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, functions as F
 
-from .hashing import splitmix64
-
-# --------------------------------------------------------------------------
-# Catalyst-native tier
-# --------------------------------------------------------------------------
-
-STOPWORDS = ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]
-_PUNCT_RE = r"[.,!?;:]"
-
-
-def tokens_col(text: Column) -> Column:
-    """Whitespace tokens; empty/blank text → empty array."""
-    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
-
-
-def token_count_col(text: Column) -> Column:
-    return F.size(tokens_col(text))
-
-
-_BPE_ISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-
-def bpe_ish_token_count_col(text: Column) -> Column:
-    """Subword-style token estimate: alphabetic runs, digit runs, and
-    individual symbols counted separately (the shape BPE tokenizers
-    split on), via one JVM-side regex pass."""
-    return F.size(F.regexp_extract_all(text, F.lit(_BPE_ISH), 0))
-
-
-def punct_ratio_col(text: Column) -> Column:
-    n = F.length(text)
-    punct = n - F.length(F.regexp_replace(text, _PUNCT_RE, ""))
-    return F.when(n > 0, punct.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def stopword_ratio_col(text: Column) -> Column:
-    toks = tokens_col(F.lower(text))
-    n = F.size(toks)
-    sw = F.size(F.filter(toks, lambda t: t.isin(STOPWORDS)))
-    return F.when(n > 0, sw.cast("double") / n).otherwise(F.lit(0.0))
-
-
-def quality_score_col(text: Column) -> Column:
-    """Composite [0,1] quality score: length sweet-spot × punctuation
-    sanity × stopword presence. Deterministic, simple enough to oracle."""
-    n_tok = token_count_col(text).cast("double")
-    len_score = F.least(n_tok / F.lit(20.0), F.lit(1.0))
-    punct_pen = F.lit(1.0) - F.least(punct_ratio_col(text) * 4, F.lit(1.0))
-    sw = stopword_ratio_col(text)
-    sw_score = F.least(sw * 5, F.lit(1.0))
-    return F.round(len_score * (F.lit(0.5) + F.lit(0.25) * punct_pen + F.lit(0.25) * sw_score), 6)
-
-
-def fingerprint_col(text: Column) -> Column:
-    """Exact-dup document fingerprint: md5 (same builtin in DuckDB)."""
-    return F.md5(text)
-
-
-# --- reference render-layer scalars (SURVEY §2.8 F3/F4/F10/F12) ---
 
 def html_escape_col(text: Column) -> Column:
     """F3 (`htmlify`, generate_webpage_with_error_output.py:1083-1089):
@@ -108,104 +42,3 @@ def fit_within_limit_col(candidates: list[Column], limit: int) -> Column:
     return F.coalesce(
         *[F.when(F.length(c) <= limit, c) for c in candidates]
     )
-
-
-def word_shingles_col(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array<string>, built natively:
-    transform over a sliding index sequence, joined with spaces."""
-    toks = tokens_col(F.lower(text))
-    count = F.greatest(F.size(toks) - F.lit(n - 1), F.lit(0))
-    idx = F.sequence(F.lit(0), count - 1)
-    return F.when(
-        count > 0,
-        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n))),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-# --------------------------------------------------------------------------
-# Vectorized pandas/numpy tier
-# --------------------------------------------------------------------------
-
-# Tiny per-language stopword profiles for the n-gram/stopword language-ID
-# heuristic (public-knowledge wordlists, truncated).
-LANG_PROFILES = {
-    "en": {"the", "and", "of", "to", "in", "is", "that", "it", "for", "was", "with", "on"},
-    "de": {"der", "die", "das", "und", "ist", "von", "mit", "ein", "eine", "nicht", "für", "auf"},
-    "fr": {"le", "la", "les", "et", "de", "des", "un", "une", "est", "dans", "pour", "que"},
-    "es": {"el", "la", "los", "las", "y", "de", "un", "una", "es", "en", "por", "que"},
-    "pl": {"i", "w", "z", "na", "do", "się", "jest", "nie", "to", "że", "od", "po"},
-}
-
-
-def lang_id_batch(texts: pd.Series) -> pd.Series:
-    """Stopword-profile language ID; 'und' when nothing matches.
-
-    Vectorized over the batch: tokenization once, set intersections per
-    language. A real deployment would swap in fastText/CLD3 — the UDF
-    plumbing (Arrow batch in/out) is the part the engine owns.
-    """
-    toks = texts.fillna("").str.lower().str.split()
-    out = []
-    for tok in toks:
-        s = set(tok)
-        best, best_n = "und", 0
-        for lang, prof in LANG_PROFILES.items():
-            n = len(s & prof)
-            if n > best_n:
-                best, best_n = lang, n
-        out.append(best)
-    return pd.Series(out)
-
-
-def char_ngrams_hashed(texts: list[str], n: int = 3, seed: int = 1) -> list[np.ndarray]:
-    """Per-doc array of uint64 hashes of char n-grams (rolling base-257
-    polynomial, fully vectorized per doc)."""
-    out = []
-    base = np.uint64(257)
-    for t in texts:
-        b = np.frombuffer((t or "").encode("utf-8"), dtype=np.uint8).astype(np.uint64)
-        if len(b) < n:
-            out.append(np.empty(0, dtype=np.uint64))
-            continue
-        with np.errstate(over="ignore"):
-            h = np.zeros(len(b) - n + 1, dtype=np.uint64)
-            for j in range(n):
-                h = h * base + b[j : len(b) - n + 1 + j]
-            out.append(splitmix64(h ^ np.uint64(seed)))
-    return out
-
-
-def minhash_signature(hashes: np.ndarray, num_perm: int = 64) -> np.ndarray:
-    """MinHash via the one-hash + per-permutation remix trick: sig[i] =
-    min over shingles of splitmix64(h ^ seed_i). Vectorized (shingles ×
-    permutations in one broadcastted op, chunked)."""
-    if len(hashes) == 0:
-        return np.full(num_perm, np.iinfo(np.uint64).max, dtype=np.uint64)
-    seeds = splitmix64(np.arange(1, num_perm + 1, dtype=np.uint64) * np.uint64(0x9E37))
-    with np.errstate(over="ignore"):
-        m = splitmix64(hashes[:, None] ^ seeds[None, :])
-    return m.min(axis=0)
-
-
-def simhash64(token_hashes: np.ndarray) -> int:
-    """64-bit SimHash of a token-hash multiset (Charikar 2002)."""
-    if len(token_hashes) == 0:
-        return 0
-    bits = ((token_hashes[:, None] >> np.arange(64, dtype=np.uint64)[None, :]) & np.uint64(1)).astype(
-        np.int64
-    )
-    v = (2 * bits - 1).sum(axis=0)
-    sig = np.uint64(0)
-    for i in range(64):
-        if v[i] > 0:
-            sig |= np.uint64(1) << np.uint64(i)
-    return int(sig.astype(np.int64))
-
-
-def winnow_fingerprints(hashes: np.ndarray, window: int = 8) -> np.ndarray:
-    """Winnowing (Schleimer et al., SIGMOD 2003): min hash per sliding
-    window → robust document fingerprint set."""
-    if len(hashes) < window:
-        return np.unique(hashes)
-    sw = np.lib.stride_tricks.sliding_window_view(hashes, window)
-    return np.unique(sw.min(axis=1))

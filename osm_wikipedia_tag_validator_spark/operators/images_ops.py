@@ -209,11 +209,63 @@ def make_thumbnails(images: DataFrame, size: int = 8) -> DataFrame:
 
 
 def neardup_by_phash(features: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Image near-dup candidate pairs by perceptual-hash Hamming
-    distance — delegates to the shared banded plan
-    (`dedup.banded_hamming_pairs`; exact recall only for
-    max_hamming ≤ n_bands-1, enforced there — the shared plan
-    auto-picks 8 bands, so the historical default of 6 is exact)."""
-    from .dedup import banded_hamming_pairs
+    """(id1, id2, hamming) image near-dup pairs with Hamming(phash) ≤
+    max_hamming, id1 < id2.
 
-    return banded_hamming_pairs(features, "image_id", "phash", max_hamming)
+    Candidates come from a band equi-join (never an all-pairs cross
+    join): the 64-bit phash splits into n_bands chunks; a pair with
+    ≤ n_bands-1 differing bits must agree on at least one chunk
+    (pigeonhole), so EXACT recall requires max_hamming ≤ n_bands - 1.
+    The band count is the smallest power of two that keeps the
+    guarantee (8 for the default of 6) — a looser threshold costs more
+    bands (shorter chunks → fatter candidate buckets), it never
+    silently drops recall. Verification is JVM-side bit_count on the
+    joined hashes. Scales as Σ bucket² per band, not n²."""
+    n_bands = 4
+    while n_bands - 1 < max_hamming and n_bands < 64:
+        n_bands *= 2
+    if max_hamming > n_bands - 1:
+        raise ValueError(
+            f"max_hamming={max_hamming} breaks the pigeonhole guarantee "
+            f"for {n_bands} bands (exact only ≤ {n_bands - 1})"
+        )
+    band_bits = 64 // n_bands
+    mask = (1 << band_bits) - 1
+    chunks = features.select(
+        "image_id",
+        "phash",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("chunk"),
+                        F.shiftright("phash", i * band_bits)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("ck"),
+                    )
+                    for i in range(n_bands)
+                ]
+            )
+        ).alias("c"),
+    ).select("image_id", "phash", "c.*")
+    a, b = chunks.alias("a"), chunks.alias("b")
+    cand = (
+        a.join(
+            b,
+            (F.col("a.chunk") == F.col("b.chunk"))
+            & (F.col("a.ck") == F.col("b.ck"))
+            & (F.col("a.image_id") < F.col("b.image_id")),
+        )
+        .select(
+            F.col("a.image_id").alias("id1"),
+            F.col("b.image_id").alias("id2"),
+            F.col("a.phash").alias("s1"),
+            F.col("b.phash").alias("s2"),
+        )
+        .dropDuplicates(["id1", "id2"])
+    )
+    return (
+        cand.withColumn("hamming", F.expr("bit_count(s1 ^ s2)"))
+        .filter(F.col("hamming") <= max_hamming)
+        .select("id1", "id2", "hamming")
+    )

@@ -19,8 +19,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from ..functions import cells as C
-from ..functions import textfns as TX
-from ..operators import dedup as DD
 from ..operators import knn as KNN
 from ..operators import spatial_join as SJ
 from ..operators import tiles as TI
@@ -30,17 +28,14 @@ from ..operators import upsert as UP
 # golden-pinned oracles
 # ---------------------------------------------------------------------------
 #
-# Deterministic queries whose semantics SQL cannot re-derive (seeded
-# MinHash/SimHash, the pandas-UDF lang-id, the synthetic-world
-# pipelines) are pinned to committed golden parquet fixtures
-# that DuckDB reads with read_parquet(). The fixtures are generated by
-# tests/fixtures/regen_oracle_golden.py from the VERIFIED operator
-# output (each op's exactness/recall is proven separately in pytest
+# Deterministic queries whose semantics SQL cannot re-derive (the
+# synthetic-world pipelines) are pinned to committed golden parquet
+# fixtures that DuckDB reads with read_parquet(). The fixtures are
+# generated by tests/fixtures/regen_oracle_golden.py from the VERIFIED
+# operator output (each op's exactness is proven separately in pytest
 # against brute-force oracles); the pin turns those proofs into a
-# driver-checkable regression oracle. SF-dependent queries carry a
-# `_tag` column discriminating which testdata SF produced the rows; the
-# oracle SQL recomputes the tag from the live views so the right
-# stratum is selected at whatever SF the harness runs.
+# driver-checkable regression oracle. Every pinned query builds its own
+# world and ignores sf_dir, so one fixture serves every SF.
 
 import pathlib as _pathlib
 
@@ -48,40 +43,19 @@ _GOLDEN_DIR = str(
     _pathlib.Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "oracle_golden"
 )
 
-# SF discriminators, recomputable on both sides from the input tables
-_TAG_DOCS = "(SELECT CAST(SUM(LENGTH(text)) AS BIGINT) FROM documents)"
-
-#: every SF the tag-bearing fixtures are pinned at — the single source
-#: for the regen script and the freshness guard. sf0.001 serves local
-#: pytest, sf0.01 the driver gate, sf0.1 the bench-scale parity run
-#: (SPARK_GRAFT_TEST_SF=0.1 pytest tests/test_oracle_parity.py).
-GOLDEN_SF_DIRS = [
-    "/root/testdata/sf0.001",
-    "/root/testdata/sf0.01",
-    "/root/testdata/sf0.1",
-]
-
-# pinned query → (result columns, tag SQL or None for sf-independent)
-GOLDEN_PINNED: dict[str, tuple[list[str], str | None]] = {
-    "lang_id": (["doc_id", "pred_lang"], _TAG_DOCS),
-    "minhash_pairs": (["id1", "id2", "est_jaccard"], _TAG_DOCS),
-    "winnow_pairs": (["id1", "id2", "n_shared"], _TAG_DOCS),
-    "simhash_pairs": (["id1", "id2", "hamming"], _TAG_DOCS),
-    "spatial_error_reports": (
-        ["area_identifier", "type", "id", "error_id", "osm_object_url", "report_json"],
-        None,
-    ),
-    "tile_vector_assignment": (["tile_id", "region", "n_images"], None),
-    "image_invariants": (["image_id", "fmt", "psnr", "phash_match", "caption_ok"], None),
+# pinned query → result columns
+GOLDEN_PINNED: dict[str, list[str]] = {
+    "spatial_error_reports": [
+        "area_identifier", "type", "id", "error_id", "osm_object_url", "report_json"
+    ],
+    "tile_vector_assignment": ["tile_id", "region", "n_images"],
+    "image_invariants": ["image_id", "fmt", "psnr", "phash_match", "caption_ok"],
 }
 
 
 def _sql_golden(name: str) -> str:
-    cols, tag = GOLDEN_PINNED[name]
-    path = f"{_GOLDEN_DIR}/{name}.parquet"
-    sel = ", ".join(cols)
-    where = f" WHERE _tag = {tag}" if tag else ""
-    return f"SELECT {sel} FROM read_parquet('{path}'){where}"
+    sel = ", ".join(GOLDEN_PINNED[name])
+    return f"SELECT {sel} FROM read_parquet('{_GOLDEN_DIR}/{name}.parquet')"
 
 
 # ---------------------------------------------------------------------------
@@ -659,90 +633,6 @@ FROM (
 
 
 # ---------------------------------------------------------------------------
-# text / dedup (training-data pipeline)
-# ---------------------------------------------------------------------------
-
-def q_text_metrics(spark, sf_dir):
-    """Per-document text metrics in one verified projection: whitespace
-    + BPE-ish token counts (the training-data budget estimators),
-    quality score (length/punct/stopword ratios), and the exact-dedup
-    md5 fingerprint. All pure Catalyst. Consolidates the former
-    token_count / bpe_token_count / quality_score / fingerprint oracles
-    so the full operator surface fits the driver gate's 50-query
-    window — every column is still hash-verified independently."""
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        TX.token_count_col(F.col("text")).alias("ws_tokens"),
-        TX.bpe_ish_token_count_col(F.col("text")).alias("bpe_tokens"),
-        TX.quality_score_col(F.col("text")).alias("quality"),
-        TX.fingerprint_col(F.col("text")).alias("fingerprint"),
-        "n_chars",
-    )
-
-
-SQL_TEXT_METRICS = """
-WITH t AS (
-  SELECT doc_id, text, n_chars,
-         LIST_FILTER(STRING_SPLIT_REGEX(TRIM(LOWER(text)), '\\s+'), x -> x <> '') AS toks,
-         CAST(LEN(LIST_FILTER(STRING_SPLIT_REGEX(TRIM(text), '\\s+'), x -> x <> '')) AS INT) AS ws_tokens,
-         CAST(LEN(REGEXP_EXTRACT_ALL(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS INT) AS bpe_tokens,
-         LENGTH(text) AS n,
-         LENGTH(text) - LENGTH(REGEXP_REPLACE(text, '[.,!?;:]', '', 'g')) AS punct
-  FROM documents
-)
-SELECT doc_id, ws_tokens, bpe_tokens,
-       ROUND(
-         LEAST(CAST(ws_tokens AS DOUBLE) / 20.0, 1.0) * (
-           0.5
-           + 0.25 * (1.0 - LEAST((CASE WHEN n > 0 THEN CAST(punct AS DOUBLE)/n ELSE 0.0 END) * 4, 1.0))
-           + 0.25 * LEAST((CASE WHEN LEN(toks) > 0 THEN CAST(LEN(LIST_FILTER(toks, x -> LIST_CONTAINS({stop}, x))) AS DOUBLE)/LEN(toks) ELSE 0.0 END) * 5, 1.0)
-         ), 6) AS quality,
-       MD5(text) AS fingerprint,
-       n_chars
-FROM t
-""".format(stop="[" + ",".join(f"'{s}'" for s in TX.STOPWORDS) + "]")
-
-
-def q_exact_dup_groups(spark, sf_dir):
-    return DD.exact_dup_groups(_t(spark, sf_dir, "documents")).select(
-        "fingerprint", "n_dups", "keeper_id"
-    )
-
-
-SQL_DUP_GROUPS = """
-SELECT MD5(text) AS fingerprint, CAST(COUNT(*) AS BIGINT) AS n_dups,
-       CAST(MIN(doc_id) AS BIGINT) AS keeper_id
-FROM documents GROUP BY 1 HAVING COUNT(*) > 1
-"""
-
-
-def q_token_jaccard(spark, sf_dir):
-    """n-gram (1-gram) Jaccard near-dup pairs via inverted index."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    return DD.token_jaccard_pairs(d, threshold=0.6)
-
-
-SQL_JACCARD = """
-WITH toks AS (
-  SELECT DISTINCT doc_id AS id, UNNEST(STRING_SPLIT_REGEX(TRIM(LOWER(text)), '\\s+')) AS tok
-  FROM documents WHERE doc_id < 120
-), toks2 AS (SELECT id, tok FROM toks WHERE tok <> ''),
-sizes AS (SELECT id, COUNT(*) AS sz FROM toks2 GROUP BY id),
-shared AS (
-  SELECT a.id AS id1, b.id AS id2, COUNT(*) AS shared
-  FROM toks2 a JOIN toks2 b ON a.tok = b.tok AND a.id < b.id
-  GROUP BY a.id, b.id
-)
-SELECT id1, id2, ROUND(CAST(shared AS DOUBLE) / (s1.sz + s2.sz - shared), 6) AS jaccard
-FROM shared
-JOIN sizes s1 ON s1.id = id1
-JOIN sizes s2 ON s2.id = id2
-WHERE CAST(shared AS DOUBLE) / (s1.sz + s2.sz - shared) >= 0.6
-"""
-
-
-# ---------------------------------------------------------------------------
 # MapRoulette, scheduling and report sinks
 # ---------------------------------------------------------------------------
 
@@ -1010,35 +900,6 @@ FROM rep GROUP BY area_identifier, error_id
 """
 
 
-# --- golden-pinned entries: seeded hashes / pandas UDF (see GOLDEN_PINNED) ---
-
-def q_lang_id(spark, sf_dir):
-    """Language-ID heuristic (pandas UDF) — rows-only check."""
-    d = _t(spark, sf_dir, "documents")
-    lang_udf = F.pandas_udf(TX.lang_id_batch, "string")
-    return d.select("doc_id", lang_udf(F.col("text")).alias("pred_lang"))
-
-
-def q_minhash_pairs(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return DD.minhash_lsh_pairs(d, threshold=0.5)
-
-
-def q_simhash_pairs(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
-    return DD.simhash_pairs(d, max_hamming=6)
-
-
-def q_winnow_pairs(spark, sf_dir):
-    """Rolling-hash winnowing copy detection (Schleimer SIGMOD'03 /
-    MOSS): docs sharing ≥3 winnowed 16-gram fingerprints, via the
-    inverted-index self-join in `dedup.winnow_copy_pairs`. Exactness
-    of the vectorized winnow path is proven against a brute-force
-    reference in test_dedup; this pin freezes the verified output."""
-    d = _t(spark, sf_dir, "documents")
-    return DD.winnow_copy_pairs(d, min_shared=3)
-
-
 def q_merge_upsert(spark, sf_dir):
     """J2 MERGE through the operator itself: 'base' = orders before
     1997, 'delta' = orders from 1996 on (overlapping year exercises the
@@ -1107,17 +968,6 @@ SQL_ROLLUP_HIER = """
 SELECT o_orderpriority, o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
        ROUND(SUM(o_totalprice), 2) AS total
 FROM orders GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
-"""
-
-
-def q_dedup_keep_lowest(spark, sf_dir):
-    """exact_dedup operator surface: keeper doc per fingerprint."""
-    return DD.exact_dedup(_t(spark, sf_dir, "documents")).select("doc_id", "n_chars")
-
-
-SQL_DEDUP_KEEP = """
-SELECT doc_id, n_chars FROM documents
-WHERE doc_id IN (SELECT MIN(doc_id) FROM documents GROUP BY MD5(text))
 """
 
 
@@ -1276,7 +1126,7 @@ def q_image_invariants(spark, sf_dir):
 
     return IO.verify_invariants(
         W.spark_images(spark, 300), caption_fn=W.expected_captions
-    ).select(*GOLDEN_PINNED["image_invariants"][0])
+    ).select(*GOLDEN_PINNED["image_invariants"])
 
 
 # ---------------------------------------------------------------------------
@@ -1312,16 +1162,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "knn_kring": q_knn_kring,
         "knn_kring_index": q_knn_kring_index,
         "image_invariants": q_image_invariants,
-        "text_metrics": q_text_metrics,
-        "exact_dup_groups": q_exact_dup_groups,
-        "token_jaccard": q_token_jaccard,
-        "lang_id": q_lang_id,
-        "minhash_pairs": q_minhash_pairs,
-        "winnow_pairs": q_winnow_pairs,
-        "simhash_pairs": q_simhash_pairs,
         "cell_parent_rollup": q_cell_parent_rollup,
         "rollup_hierarchy": q_rollup_hierarchy,
-        "dedup_keep_lowest": q_dedup_keep_lowest,
         "wiki_link_parse": q_wiki_link_parse,
         "region_parts": q_region_parts,
         "spatial_error_reports": q_spatial_error_reports,
@@ -1365,7 +1207,6 @@ def oracle_sql() -> dict[str, str]:
             lon=_LON, lat=_LAT, parent_cell=C.cell_sql("lon", "lat", 4)
         ),
         "rollup_hierarchy": SQL_ROLLUP_HIER,
-        "dedup_keep_lowest": SQL_DEDUP_KEEP,
         "wiki_link_parse": SQL_WIKI_PARSE,
         "pip_convex": _sql_pip(),
         "all_points_inside": _sql_all_points_inside(),
@@ -1373,9 +1214,6 @@ def oracle_sql() -> dict[str, str]:
         "knn": SQL_KNN,
         "knn_kring": SQL_KNN,
         "knn_kring_index": SQL_KNN_SWAPPED,
-        "text_metrics": SQL_TEXT_METRICS,
-        "exact_dup_groups": SQL_DUP_GROUPS,
-        "token_jaccard": SQL_JACCARD,
-        # golden-pinned (seeded/UDF ops; see GOLDEN_PINNED above)
+        # golden-pinned (synthetic-world pipelines; see GOLDEN_PINNED above)
         **{name: _sql_golden(name) for name in GOLDEN_PINNED},
     }

@@ -1,8 +1,12 @@
 """Golden-fixture freshness guard (judge action r3#6): every pinned
-oracle parquet must equal a LIVE recompute of its query at every SF it
-is pinned for. A change to an operator (or to datagen distributions)
-that forgets `python tests/fixtures/regen_oracle_golden.py` fails HERE
-instead of silently pinning old behavior into the driver gate.
+oracle parquet must equal a LIVE recompute of its query. A change to an
+operator (or to datagen distributions) that forgets
+`python tests/fixtures/regen_oracle_golden.py` fails HERE instead of
+silently pinning old behavior into the driver gate.
+
+Every pinned query builds its own synthetic world and never reads
+sf_dir, so each runs once against an empty directory: the check needs
+no testdata tree, and a pin that starts reading one fails loudly.
 
 Equality is the driver's own notion — same rows as multisets after
 rounding floats to 6 dp — so a fixture that would pass the gate passes
@@ -16,7 +20,6 @@ import pytest
 from osm_wikipedia_tag_validator_spark.plans import oracle_queries as OQ
 
 FIXTURE_DIR = os.path.join(os.path.dirname(__file__), "fixtures", "oracle_golden")
-SF_DIRS = OQ.GOLDEN_SF_DIRS
 
 
 def _canon(pdf: pd.DataFrame) -> list[str]:
@@ -26,14 +29,6 @@ def _canon(pdf: pd.DataFrame) -> list[str]:
             pdf[c] = pdf[c].round(6)
         pdf[c] = pdf[c].astype(str)
     return sorted("|".join(r) for r in pdf.values.tolist())
-
-
-def _tag_value(tag_sql: str, sf_dir: str) -> int:
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
-    return int(con.execute(tag_sql.strip("()")).fetchone()[0])
 
 
 def test_fixture_dir_matches_pins():
@@ -47,24 +42,22 @@ def test_fixture_dir_matches_pins():
     assert stems == set(OQ.GOLDEN_PINNED)
 
 
+def test_pinned_queries_need_no_testdata(spark, tmp_path):
+    """A pin is a plain column list (no per-SF stratum), and a pinned
+    query runs with an SF dir that does not exist — so a future pin that
+    reads the testdata tables fails here instead of going unchecked."""
+    for cols in OQ.GOLDEN_PINNED.values():
+        assert isinstance(cols, list) and all(isinstance(c, str) for c in cols)
+    name = "tile_vector_assignment"
+    got = OQ.queries()[name](spark, str(tmp_path / "absent"))
+    assert got.columns == OQ.GOLDEN_PINNED[name]
+
+
 @pytest.mark.parametrize("name", sorted(OQ.GOLDEN_PINNED))
-def test_golden_fixture_is_fresh(spark, name):
-    cols, tag_sql = OQ.GOLDEN_PINNED[name]
+def test_golden_fixture_is_fresh(spark, tmp_path, name):
+    cols = OQ.GOLDEN_PINNED[name]
     committed = pd.read_parquet(os.path.join(FIXTURE_DIR, f"{name}.parquet"))
-    q = OQ.queries()[name]
-    strata = []
-    for sf_dir in SF_DIRS if tag_sql else SF_DIRS[:1]:
-        if not os.path.isdir(sf_dir):
-            # the committed fixture carries EVERY pinned stratum, so a
-            # missing SF dir can't be checked piecemeal — skip with the
-            # reason instead of hard-failing on machines without the
-            # full testdata tree
-            pytest.skip(f"pinned SF dir {sf_dir} absent on this machine")
-        pdf = q(spark, sf_dir).toPandas()[cols]
-        if tag_sql:
-            pdf = pdf.assign(_tag=_tag_value(tag_sql, sf_dir))
-        strata.append(pdf)
-    live = pd.concat(strata, ignore_index=True)
+    live = OQ.queries()[name](spark, str(tmp_path)).toPandas()[cols]
     assert list(committed.columns) == list(live.columns), (
         f"{name}: fixture columns diverged — rerun "
         "tests/fixtures/regen_oracle_golden.py"

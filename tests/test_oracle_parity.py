@@ -16,8 +16,7 @@ _SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 # used to build /root/testdata/sfsf0.1 and fail confusingly)
 SF_DIR = _SF if "/" in _SF else f"/root/testdata/sf{_SF.removeprefix('sf')}"
 if not os.path.isdir(SF_DIR):
-    # skip, don't error: machines without /root/testdata degrade the
-    # same way test_golden_freshness.py does (round-5 advice)
+    # skip, don't error, on machines without the testdata tree
     pytest.skip(
         f"SPARK_GRAFT_TEST_SF resolved to {SF_DIR!r}, which does not exist — "
         "pass a testdata directory, a scale factor like 0.01, or sf0.01",
@@ -32,7 +31,7 @@ def _duck(sql: str) -> pd.DataFrame:
     con = duckdb.connect()
     for t in [
         "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents",
+        "orders", "lineitem", "events",
     ]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     return con.execute(sql).fetchdf()

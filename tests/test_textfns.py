@@ -27,24 +27,3 @@ def test_fit_within_limit(spark):
     assert _one(spark, TX.fit_within_limit_col([long, short], 10)) == "short"
     assert _one(spark, TX.fit_within_limit_col([long, short], 50)) == "x" * 30
     assert _one(spark, TX.fit_within_limit_col([long], 10)) is None
-
-
-def test_word_shingles(spark):
-    got = _one(spark, TX.word_shingles_col(F.lit("a b c d"), 3))
-    assert got == ["a b c", "b c d"]
-    assert _one(spark, TX.word_shingles_col(F.lit("a b"), 3)) == []
-
-
-def test_lang_id_on_real_sentences():
-    import pandas as pd
-
-    s = pd.Series(
-        [
-            "the cat sat on the mat and it was happy",
-            "der Hund ist nicht mit der Katze auf dem Sofa",
-            "le chat est dans la maison et il dort",
-            "el perro es un animal y la casa es grande",
-            "zxq qqq zz",
-        ]
-    )
-    assert TX.lang_id_batch(s).tolist() == ["en", "de", "fr", "es", "und"]
