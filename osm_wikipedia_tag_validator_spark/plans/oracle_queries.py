@@ -1,11 +1,12 @@
-"""The correctness-gate query surface.
+"""The DuckDB-oracle query surface: queries that run package operators.
 
-One entry per implemented operator family from SURVEY.md §2, each as a
-(spark, sf_dir) → DataFrame callable plus an ANSI-SQL oracle DuckDB runs
-on the same parquet views (or, where SQL cannot re-derive the result,
-reads from a golden fixture — see GOLDEN_PINNED). Column names are
-aliased identically on both sides; floats are rounded to 6 decimals;
-counts cast to bigint.
+Each entry is a (spark, sf_dir) → DataFrame callable over the TPC-H
+testdata tables with an ANSI-SQL twin (`oracle_sql()`) that DuckDB runs
+on the same parquet files; tests/test_oracle_parity.py compares the
+two. Column names are aliased identically on both sides; floats are
+rounded to 6 decimals; counts cast to bigint. Queries whose result SQL
+cannot re-derive (the synthetic-world pipelines) have no twin; they are
+pinned to golden fixtures instead (GOLDEN_PINNED).
 
 Spatial queries derive deterministic lon/lat from table keys (odd/200
 degrees — provably never on a dyadic cell boundary) so the cell/tile
@@ -16,7 +17,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import cells as C
 from ..operators import knn as KNN
@@ -24,26 +25,12 @@ from ..operators import spatial_join as SJ
 from ..operators import tiles as TI
 from ..operators import upsert as UP
 
-# ---------------------------------------------------------------------------
-# golden-pinned oracles
-# ---------------------------------------------------------------------------
-#
-# Deterministic queries whose semantics SQL cannot re-derive (the
-# synthetic-world pipelines) are pinned to committed golden parquet
-# fixtures that DuckDB reads with read_parquet(). The fixtures are
-# generated by tests/fixtures/regen_oracle_golden.py from the VERIFIED
-# operator output (each op's exactness is proven separately in pytest
-# against brute-force oracles); the pin turns those proofs into a
-# driver-checkable regression oracle. Every pinned query builds its own
-# world and ignores sf_dir, so one fixture serves every SF.
-
-import pathlib as _pathlib
-
-_GOLDEN_DIR = str(
-    _pathlib.Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "oracle_golden"
-)
-
-# pinned query → result columns
+# Golden-pinned queries → result columns. Their committed parquet
+# fixtures (tests/fixtures/oracle_golden/, written by
+# tests/fixtures/regen_oracle_golden.py from operator output that
+# pytest proves exact against brute-force oracles) are compared with a
+# live recompute by tests/test_golden_freshness.py. Every pinned query
+# builds its own seeded world and ignores sf_dir.
 GOLDEN_PINNED: dict[str, list[str]] = {
     "spatial_error_reports": [
         "area_identifier", "type", "id", "error_id", "osm_object_url", "report_json"
@@ -51,11 +38,6 @@ GOLDEN_PINNED: dict[str, list[str]] = {
     "tile_vector_assignment": ["tile_id", "region", "n_images"],
     "image_invariants": ["image_id", "fmt", "psnr", "phash_match", "caption_ok"],
 }
-
-
-def _sql_golden(name: str) -> str:
-    sel = ", ".join(GOLDEN_PINNED[name])
-    return f"SELECT {sel} FROM read_parquet('{_GOLDEN_DIR}/{name}.parquet')"
 
 
 # ---------------------------------------------------------------------------
@@ -94,37 +76,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# relational operators (SURVEY §2.2/2.3/2.4/2.5/2.6/2.7)
+# upsert and report-filter operators
 # ---------------------------------------------------------------------------
-
-def q_pricing_summary(spark, sf_dir):
-    """A1/A2-style hash aggregation with map-side partials (free in Spark)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 6).alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-SQL_PRICING = """
-SELECT l_returnflag, l_linestatus,
-       ROUND(SUM(l_quantity), 2) AS sum_qty,
-       ROUND(SUM(l_extendedprice), 2) AS sum_base_price,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       ROUND(AVG(l_quantity), 6) AS avg_qty,
-       CAST(COUNT(*) AS BIGINT) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-"""
-
 
 def q_latest_order_per_customer(spark, sf_dir):
     """W1 latest-row-per-key dedup (`load_osm_file.py:27-40`)."""
@@ -152,132 +105,6 @@ FROM (
 """
 
 
-def q_top_stalest(spark, sf_dir):
-    """W2/O1: global top-K by staleness (`script.py:73-76` LIMIT 10) —
-    TakeOrderedAndProject, no full sort."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.orderBy(F.asc("o_orderdate"), F.asc("o_orderkey"))
-        .limit(10)
-        .select("o_orderkey", F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate"))
-    )
-
-
-SQL_TOP_STALEST = """
-SELECT o_orderkey, STRFTIME(o_orderdate, '%Y-%m-%d') AS orderdate
-FROM orders ORDER BY o_orderdate ASC, o_orderkey ASC LIMIT 10
-"""
-
-
-def q_argmax_acctbal(spark, sf_dir):
-    """A4/O4 argmax per group (`database.py:52-59` ORDER BY DESC LIMIT 1)."""
-    c = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
-    return (
-        c.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("c_nationkey", "c_custkey", F.round("c_acctbal", 2).alias("acctbal"))
-    )
-
-
-SQL_ARGMAX = """
-SELECT c_nationkey, c_custkey, ROUND(c_acctbal, 2) AS acctbal
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY c_nationkey ORDER BY c_acctbal DESC, c_custkey ASC) AS rn
-  FROM customer
-) WHERE rn = 1
-"""
-
-
-def q_broadcast_join_revenue(spark, sf_dir):
-    """J1 equi-join with explicit broadcast of the small dim."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    return (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
-
-
-SQL_BROADCAST_JOIN = """
-SELECT p_brand, ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-       CAST(COUNT(*) AS BIGINT) AS n_items
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_brand
-"""
-
-
-def q_anti_join_customers(spark, sf_dir):
-    """J7 anti-join (MapRoulette two-way sync,
-    `maproulette_challenge_creation.py:642-681`)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .select("c_custkey", "c_name")
-    )
-
-
-SQL_ANTI_JOIN = """
-SELECT c_custkey, c_name FROM customer
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-"""
-
-
-def q_universal_quantifier(spark, sf_dir):
-    """J6 all-members-pass semi-join (`osm_editor_bot…py:188-196`):
-    orders where EVERY lineitem has discount < 0.05 → bool_and via min."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_orderkey")
-        .agg(F.min((F.col("l_discount") < 0.05).cast("int")).alias("_all"))
-        .filter(F.col("_all") == 1)
-        .select(F.col("l_orderkey").alias("o_orderkey"))
-    )
-
-
-SQL_UNIVERSAL = """
-SELECT l_orderkey AS o_orderkey FROM lineitem
-GROUP BY l_orderkey HAVING MIN(CASE WHEN l_discount < 0.05 THEN 1 ELSE 0 END) = 1
-"""
-
-
-def q_rollup_merged(spark, sf_dir):
-    """J8/A1 two-level rollup (region ⊃ nation), mirroring merged-region
-    report rollups (`generate_webpage_with_error_output.py:1180-1258`)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    base = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey
-    )
-    per_nation = base.groupBy(F.col("n_name").alias("group_name")).agg(
-        F.count(F.lit(1)).alias("n_customers")
-    ).withColumn("level", F.lit("nation"))
-    per_region = base.groupBy(F.col("r_name").alias("group_name")).agg(
-        F.count(F.lit(1)).alias("n_customers")
-    ).withColumn("level", F.lit("region"))
-    return per_nation.unionByName(per_region)
-
-
-SQL_ROLLUP = """
-WITH base AS (
-  SELECT n_name, r_name FROM customer
-  JOIN nation ON c_nationkey = n_nationkey
-  JOIN region ON n_regionkey = r_regionkey
-)
-SELECT n_name AS group_name, CAST(COUNT(*) AS BIGINT) AS n_customers, 'nation' AS level
-FROM base GROUP BY n_name
-UNION ALL
-SELECT r_name AS group_name, CAST(COUNT(*) AS BIGINT) AS n_customers, 'region' AS level
-FROM base GROUP BY r_name
-"""
-
-
 def q_filter_reported_errors(spark, sf_dir):
     """P7 bot-side approved-class filter
     (`osm_editor_bot_for_approved_tasks.py::filter_reported_errors`,
@@ -299,138 +126,6 @@ FROM events WHERE event_type IN ('click', 'purchase')
 """
 
 
-def q_error_routing(spark, sf_dir):
-    """U4 category routing via CASE dim (obvious/review/tests/ignored,
-    `generate_webpage_with_error_output.py:277-1081`)."""
-    e = _t(spark, sf_dir, "events")
-    cat = (
-        F.when(F.col("event_type").isin("click", "view"), "obvious")
-        .when(F.col("event_type").isin("purchase"), "review")
-        .otherwise("ignored")
-    )
-    return (
-        e.withColumn("category", cat)
-        .groupBy("category")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("total_value"))
-    )
-
-
-SQL_ROUTING = """
-SELECT CASE WHEN event_type IN ('click','view') THEN 'obvious'
-            WHEN event_type IN ('purchase') THEN 'review'
-            ELSE 'ignored' END AS category,
-       CAST(COUNT(*) AS BIGINT) AS n,
-       ROUND(SUM(value), 4) AS total_value
-FROM events GROUP BY 1
-"""
-
-
-def q_json_tag_filter(spark, sf_dir):
-    """P1/F7: dynamic JSON payload → typed access at the boundary
-    (`load_osm_file.py:41` json tags)."""
-    e = _t(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("long")
-    return (
-        e.withColumn("k", k)
-        .filter(F.col("k") < 50)
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("k").alias("sum_k"))
-    )
-
-
-SQL_JSON = """
-SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-       CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-FROM events
-WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) < 50
-GROUP BY event_type
-"""
-
-
-def q_topk_per_group(spark, sf_dir):
-    """W3 top-K re-rank per key (kNN re-rank shape)."""
-    o = _t(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_custkey").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        o.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("o_custkey", "o_orderkey", F.round("o_totalprice", 2).alias("totalprice"), "rank")
-    )
-
-
-SQL_TOPK = """
-SELECT o_custkey, o_orderkey, ROUND(o_totalprice, 2) AS totalprice, CAST(rank AS INT) AS rank
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC) AS rank
-  FROM orders
-) WHERE rank <= 3
-"""
-
-
-def q_sessionize(spark, sf_dir):
-    """T-family streaming shape done relationally: gap-based
-    sessionization (30-min gap) via lag + running sum — the batch
-    equivalent of session windows."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # timestampdiff is timezone-free on NTZ values (unix_timestamp is not).
-    # MICROSECOND, not SECOND: the DuckDB oracle's EPOCH() keeps sub-second
-    # precision, and a 1800.886s gap must open a new session on both sides
-    # (SECOND truncation called it 1800 and merged the sessions).
-    gap = F.expr("timestampdiff(MICROSECOND, lag(ts) over (partition by user_id order by ts, event_id), ts)")
-    new_s = ((gap > 1_800_000_000) | gap.isNull()).cast("int")
-    sess = F.sum(new_s).over(
-        Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        e.withColumn("session_id", sess)
-        .groupBy("user_id")
-        .agg(F.max("session_id").alias("n_sessions"), F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-SQL_SESSIONIZE = """
-SELECT user_id, CAST(MAX(session_id) AS BIGINT) AS n_sessions,
-       CAST(COUNT(*) AS BIGINT) AS n_events
-FROM (
-  SELECT user_id,
-         SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM (
-    SELECT user_id, ts, event_id,
-           CASE WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL THEN 1
-                WHEN EPOCH(ts) - EPOCH(LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)) > 1800 THEN 1
-                ELSE 0 END AS new_s
-    FROM events
-  )
-) GROUP BY user_id
-"""
-
-
-def q_event_windows(spark, sf_dir):
-    """Tumbling event-time window aggregation (Structured-Streaming
-    shape, run in batch)."""
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            # string render of the NTZ value — independent of the
-            # session timezone (unix_timestamp on NTZ is not)
-            F.col("w.start").cast("string").alias("window_start"),
-            "event_type",
-            "n",
-        )
-    )
-
-
-SQL_WINDOWS = """
-SELECT CAST(DATE_TRUNC('hour', ts) AS VARCHAR) AS window_start,
-       event_type, CAST(COUNT(*) AS BIGINT) AS n
-FROM events GROUP BY 1, 2
-"""
-
-
 # ---------------------------------------------------------------------------
 # spatial operators
 # ---------------------------------------------------------------------------
@@ -439,9 +134,7 @@ def q_cell_tile_assign(spark, sf_dir):
     """DGG cell encoding + Web-Mercator XYZ raster-tile assignment in
     one verified grouping (north-star tiling): both spatial encodings
     are pure Catalyst expressions, hash-checked together per
-    (cell, tile) pair. Consolidates the former cell_encode +
-    tile_assign oracles so the full operator surface fits the driver
-    gate's 50-query window."""
+    (cell, tile) pair."""
     pts = _pts(spark, sf_dir)
     return (
         TI.assign_tiles(
@@ -463,55 +156,13 @@ FROM pts GROUP BY 1, 2
 """
 
 
-def q_bbox_join(spark, sf_dir):
-    """J4 point-in-bbox spatial join (range predicates; bboxes mirror
-    `osm_editor_bot_for_approved_tasks.py:241-253`)."""
-    import pandas as _pd
-
-    pts = _pts(spark, sf_dir)
-    # pandas frame + schema → LocalTableScan (a bare list-of-tuples
-    # plans as a pickled ExistingRDD whose every broadcast build runs
-    # a Python task — measured ~0.5 s of per-leg construction cost)
-    boxes = spark.createDataFrame(
-        _pd.DataFrame(
-            [
-                ("box-a", -180.0, -85.0, -60.0, 0.0),
-                ("box-b", -60.0, 0.0, 60.0, 85.0),
-                ("box-c", 60.0, -85.0, 180.0, 85.0),
-            ],
-            columns=["box_id", "x0", "y0", "x1", "y1"],
-        ),
-        "box_id string, x0 double, y0 double, x1 double, y1 double",
-    )
-    return (
-        pts.join(
-            F.broadcast(boxes),
-            (F.col("lon") >= F.col("x0"))
-            & (F.col("lon") <= F.col("x1"))
-            & (F.col("lat") >= F.col("y0"))
-            & (F.col("lat") <= F.col("y1")),
-        )
-        .groupBy("box_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-SQL_BBOX_TMPL = """
-WITH pts AS (
-  SELECT c_custkey, {lon} AS lon, {lat} AS lat FROM customer
-), boxes(box_id, x0, y0, x1, y1) AS (
-  VALUES ('box-a', -180.0, -85.0, -60.0, 0.0),
-         ('box-b', -60.0, 0.0, 60.0, 85.0),
-         ('box-c', 60.0, -85.0, 180.0, 85.0)
-)
-SELECT box_id, CAST(COUNT(*) AS BIGINT) AS n
-FROM pts JOIN boxes
-  ON lon >= x0 AND lon <= x1 AND lat >= y0 AND lat <= y1
-GROUP BY box_id
-"""
-
 # convex quad for the PIP oracle (CCW): half-plane test is exact SQL
 _QUAD = [(-100.0, -60.0), (20.0, -70.0), (60.0, 40.0), (-80.0, 60.0)]
+# inside iff on or left of every CCW edge
+_QUAD_INSIDE_SQL = " AND ".join(
+    f"(({x1} - {x0}) * (lat - {y0}) - ({y1} - {y0}) * (lon - {x0})) >= 0"
+    for (x0, y0), (x1, y1) in zip(_QUAD, _QUAD[1:] + _QUAD[:1])
+)
 
 
 def _quad_poly(spark):
@@ -538,21 +189,11 @@ def q_pip_convex(spark, sf_dir):
     return hits.select("c_custkey", "polygon_id")
 
 
-def _sql_pip() -> str:
-    conds = []
-    n = len(_QUAD)
-    for i in range(n):
-        x0, y0 = _QUAD[i]
-        x1, y1 = _QUAD[(i + 1) % n]
-        conds.append(
-            f"(({x1} - {x0}) * (lat - {y0}) - ({y1} - {y0}) * (lon - {x0})) >= 0"
-        )
-    cond = " AND ".join(conds)
-    return f"""
+SQL_PIP = f"""
 WITH pts AS (
   SELECT c_custkey, {_LON} AS lon, {_LAT} AS lat FROM customer
 )
-SELECT c_custkey, 'quad-0' AS polygon_id FROM pts WHERE {cond}
+SELECT c_custkey, 'quad-0' AS polygon_id FROM pts WHERE {_QUAD_INSIDE_SQL}
 """
 
 
@@ -954,51 +595,6 @@ FROM pts GROUP BY 1
 """
 
 
-def q_rollup_hierarchy(spark, sf_dir):
-    """SQL ROLLUP (grouping sets) — free from Spark SQL per SURVEY §2.4
-    note; the merged-region two-level rollup's general form."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.rollup("o_orderpriority", "o_orderstatus")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("o_totalprice"), 2).alias("total"))
-    )
-
-
-SQL_ROLLUP_HIER = """
-SELECT o_orderpriority, o_orderstatus, CAST(COUNT(*) AS BIGINT) AS n,
-       ROUND(SUM(o_totalprice), 2) AS total
-FROM orders GROUP BY ROLLUP(o_orderpriority, o_orderstatus)
-"""
-
-
-def q_wiki_link_parse(spark, sf_dir):
-    """F1 scalar: 'lang:Article' split (`generate_webpage_with_error_
-    output.py:196-200`) over synthetic link strings."""
-    p = _t(spark, sf_dir, "part")
-    link = F.concat(
-        F.when(F.col("p_partkey") % 3 == 0, F.lit("de")).otherwise(F.lit("en")),
-        F.lit(":"),
-        F.col("p_name"),
-    )
-    df = p.select("p_partkey", link.alias("link"))
-    return df.select(
-        "p_partkey",
-        F.get(F.split("link", ":", 2), 0).alias("lang"),
-        F.get(F.split("link", ":", 2), 1).alias("article"),
-    )
-
-
-SQL_WIKI_PARSE = """
-WITH links AS (
-  SELECT p_partkey,
-         (CASE WHEN p_partkey % 3 = 0 THEN 'de' ELSE 'en' END) || ':' || p_name AS link
-  FROM part
-)
-SELECT p_partkey, STR_SPLIT(link, ':')[1] AS lang, STR_SPLIT(link, ':')[2] AS article
-FROM links
-"""
-
-
 # --- engine-native spatial/image pipeline (the synthetic-world queries
 #     are golden-pinned, see GOLDEN_PINNED above; the rest derive their
 #     inputs from the testdata tables and have SQL twins) ---
@@ -1007,8 +603,8 @@ def q_spatial_error_reports(spark, sf_dir):
     """The flagship validator pipeline's report rows (V1+J1+J5+P*).
 
     The report struct (contains map columns) is projected through
-    `to_json` so the driver's pandas canonicalizer can sort/hash the
-    rows — map/dict cells are unhashable in pandas."""
+    `to_json` so the fixture can hold it and the freshness test can
+    sort/hash the rows — map/dict cells are unhashable in pandas."""
     from . import pipeline as P
 
     inputs = P.build_inputs(spark, 500)
@@ -1027,7 +623,6 @@ def q_spatial_error_reports(spark, sf_dir):
 def q_tile_vector_assignment(spark, sf_dir):
     """Raster-tile↔vector assignment rollup over the image table."""
     from ..datagen import world as W
-    from ..operators import tiles as TI
 
     images = W.spark_images_located(spark, 2000)
     hits = SJ.point_in_polygon_join(TI.assign_tiles(images, 8), W.spark_polygons(spark))
@@ -1097,21 +692,11 @@ def q_all_points_inside(spark, sf_dir):
     return SJ.all_points_inside(objects, _quad_poly(spark), res=4)
 
 
-def _sql_all_points_inside() -> str:
-    conds = []
-    n = len(_QUAD)
-    for i in range(n):
-        x0, y0 = _QUAD[i]
-        x1, y1 = _QUAD[(i + 1) % n]
-        conds.append(
-            f"(({x1} - {x0}) * (lat - {y0}) - ({y1} - {y0}) * (lon - {x0})) >= 0"
-        )
-    cond = " AND ".join(conds)
-    return f"""
+SQL_ALL_POINTS_INSIDE = f"""
 WITH pts AS (
   SELECT CAST(c_custkey AS BIGINT) % 500 AS id, {_LON} AS lon, {_LAT} AS lat FROM customer
 )
-SELECT 'way' AS type, id, BOOL_AND({cond}) AS all_inside,
+SELECT 'way' AS type, id, BOOL_AND({_QUAD_INSIDE_SQL}) AS all_inside,
        COUNT(*) AS n_points
 FROM pts GROUP BY id
 """
@@ -1135,36 +720,21 @@ def q_image_invariants(spark, sf_dir):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        "pricing_summary": q_pricing_summary,
         "latest_order_per_customer": q_latest_order_per_customer,
         "merge_upsert": q_merge_upsert,
-        "top_stalest": q_top_stalest,
-        "argmax_acctbal": q_argmax_acctbal,
-        "broadcast_join_revenue": q_broadcast_join_revenue,
-        "anti_join_customers": q_anti_join_customers,
-        "universal_quantifier": q_universal_quantifier,
-        "rollup_merged": q_rollup_merged,
-        "error_routing": q_error_routing,
         "filter_reported_errors": q_filter_reported_errors,
         "challenge_sync": q_challenge_sync,
         "featured_rotation": q_featured_rotation,
         "region_priority": q_region_priority,
         "invalidate_stale": q_invalidate_stale,
         "overpass_sink": q_overpass_sink,
-        "json_tag_filter": q_json_tag_filter,
-        "topk_per_group": q_topk_per_group,
-        "sessionize": q_sessionize,
-        "event_windows": q_event_windows,
         "cell_tile_assign": q_cell_tile_assign,
-        "bbox_join": q_bbox_join,
         "pip_convex": q_pip_convex,
         "knn": q_knn,
         "knn_kring": q_knn_kring,
         "knn_kring_index": q_knn_kring_index,
         "image_invariants": q_image_invariants,
         "cell_parent_rollup": q_cell_parent_rollup,
-        "rollup_hierarchy": q_rollup_hierarchy,
-        "wiki_link_parse": q_wiki_link_parse,
         "region_parts": q_region_parts,
         "spatial_error_reports": q_spatial_error_reports,
         "tile_vector_assignment": q_tile_vector_assignment,
@@ -1173,47 +743,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    """SQL twins of every query not in GOLDEN_PINNED."""
     return {
-        "pricing_summary": SQL_PRICING,
         "latest_order_per_customer": SQL_LATEST_ORDER,
         "merge_upsert": SQL_MERGE_UPSERT,
-        "top_stalest": SQL_TOP_STALEST,
-        "argmax_acctbal": SQL_ARGMAX,
-        "broadcast_join_revenue": SQL_BROADCAST_JOIN,
-        "anti_join_customers": SQL_ANTI_JOIN,
-        "universal_quantifier": SQL_UNIVERSAL,
-        "rollup_merged": SQL_ROLLUP,
-        "error_routing": SQL_ROUTING,
         "filter_reported_errors": SQL_FILTER_REPORTED,
         "challenge_sync": SQL_CHALLENGE_SYNC,
         "featured_rotation": SQL_FEATURED_ROTATION,
         "region_priority": SQL_REGION_PRIORITY,
         "invalidate_stale": SQL_INVALIDATE_STALE,
         "overpass_sink": SQL_OVERPASS_SINK,
-        "json_tag_filter": SQL_JSON,
-        "topk_per_group": SQL_TOPK,
-        "sessionize": SQL_SESSIONIZE,
-        "event_windows": SQL_WINDOWS,
         "cell_tile_assign": SQL_CELL_TILE_TMPL.format(
             lon=_LON,
             lat=_LAT,
             cell=C.cell_sql("lon", "lat", CELL_RES),
             tile=TI.tile_id_sql("lon", "lat", TILE_Z),
         ),
-        "bbox_join": SQL_BBOX_TMPL.format(lon=_LON, lat=_LAT),
         # parent at res 4 == direct encode at res 4 (power-of-two scaling
         # is exact in IEEE doubles, so the coarsened bit math agrees)
         "cell_parent_rollup": SQL_CELL_PARENT_TMPL.format(
             lon=_LON, lat=_LAT, parent_cell=C.cell_sql("lon", "lat", 4)
         ),
-        "rollup_hierarchy": SQL_ROLLUP_HIER,
-        "wiki_link_parse": SQL_WIKI_PARSE,
-        "pip_convex": _sql_pip(),
-        "all_points_inside": _sql_all_points_inside(),
+        "pip_convex": SQL_PIP,
+        "all_points_inside": SQL_ALL_POINTS_INSIDE,
         "region_parts": _sql_region_parts(),
         "knn": SQL_KNN,
         "knn_kring": SQL_KNN,
         "knn_kring_index": SQL_KNN_SWAPPED,
-        # golden-pinned (synthetic-world pipelines; see GOLDEN_PINNED above)
-        **{name: _sql_golden(name) for name in GOLDEN_PINNED},
     }

@@ -39,15 +39,6 @@ def main() -> None:
     )
     sections = [
         (
-            "Filter + projection pushdown (S5/P10)",
-            "Predicates and column pruning reach the parquet scan (PushedFilters / 3-column ReadSchema).",
-            cap(
-                spark.read.parquet(f"{SF}/lineitem.parquet")
-                .filter(F.col("l_shipdate") < "1996-01-01")
-                .select("l_orderkey", "l_extendedprice")
-            ),
-        ),
-        (
             "Cell + tile encode (DGG/XYZ)",
             "Pure Catalyst expressions inside one WholeStageCodegen span — no UDF, no shuffle.",
             cap(TI.assign_tiles(pts, 8)),

@@ -1,14 +1,14 @@
 #!/usr/bin/env python
-"""Regenerate the golden-pinned oracle fixtures (parquet DuckDB reads
-via read_parquet in oracle_sql()) after an INTENTIONAL semantic change.
+"""Regenerate the golden-pinned oracle fixtures (the parquet files
+tests/test_golden_freshness.py compares with a live recompute) after an
+INTENTIONAL semantic change.
 
 Run from the repo root: python tests/fixtures/regen_oracle_golden.py
 
 Each pinned query is deterministic (a seeded synthetic world); its
 exactness is proven separately in pytest against brute-force oracles,
-and this pin freezes that verified output as a regression oracle the
-driver can diff. No pinned query reads sf_dir, so each runs once
-against an empty directory and one fixture serves every SF.
+and this pin freezes that verified output as a regression oracle. No
+pinned query reads sf_dir, so each runs against an empty directory.
 """
 
 import os

@@ -1,16 +1,14 @@
-"""Golden-fixture freshness guard (judge action r3#6): every pinned
-oracle parquet must equal a LIVE recompute of its query. A change to an
+"""Golden-fixture freshness guard: every pinned query's committed
+parquet must equal a LIVE recompute of the query. A change to an
 operator (or to datagen distributions) that forgets
 `python tests/fixtures/regen_oracle_golden.py` fails HERE instead of
-silently pinning old behavior into the driver gate.
+silently pinning old behavior. This is the one check of each pin.
 
 Every pinned query builds its own synthetic world and never reads
-sf_dir, so each runs once against an empty directory: the check needs
-no testdata tree, and a pin that starts reading one fails loudly.
+sf_dir, so each runs against an empty directory: the check needs no
+testdata tree, and a pin that starts reading one fails here.
 
-Equality is the driver's own notion — same rows as multisets after
-rounding floats to 6 dp — so a fixture that would pass the gate passes
-here and vice versa."""
+Equality: same rows as multisets after rounding floats to 6 dp."""
 
 import os
 

@@ -1,6 +1,7 @@
-"""Replicates the driver's correctness gate locally: every queries()
-entry runs on Spark AND its oracle_sql() twin on DuckDB at sf0.001,
-then row-count + schema-width + order-insensitive values must match."""
+"""Every oracle_sql() entry runs on Spark through its query AND as its
+SQL twin on DuckDB over the sf0.001 testdata tables; row count, columns
+and order-insensitive values must match. The golden-pinned queries have
+no twin: tests/test_golden_freshness.py checks them."""
 
 import os
 
@@ -8,31 +9,20 @@ import duckdb
 import pandas as pd
 import pytest
 
-import __spark_entry__ as entry_mod
+from osm_wikipedia_tag_validator_spark.plans import oracle_queries as OQ
 
-_SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-# accepts a directory OR a bare scale factor — "0.1" and the natural
-# "sf0.1" shorthand both resolve to /root/testdata/sf0.1 (a bare value
-# used to build /root/testdata/sfsf0.1 and fail confusingly)
-SF_DIR = _SF if "/" in _SF else f"/root/testdata/sf{_SF.removeprefix('sf')}"
+SF_DIR = "/root/testdata/sf0.001"
 if not os.path.isdir(SF_DIR):
     # skip, don't error, on machines without the testdata tree
-    pytest.skip(
-        f"SPARK_GRAFT_TEST_SF resolved to {SF_DIR!r}, which does not exist — "
-        "pass a testdata directory, a scale factor like 0.01, or sf0.01",
-        allow_module_level=True,
-    )
+    pytest.skip(f"{SF_DIR} does not exist", allow_module_level=True)
 
-_ORACLES = entry_mod.oracle_sql()
-_QUERIES = entry_mod.queries()
+_ORACLES = OQ.oracle_sql()
+_QUERIES = OQ.queries()
 
 
 def _duck(sql: str) -> pd.DataFrame:
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events",
-    ]:
+    for t in ["customer", "events", "nation", "orders", "supplier"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     return con.execute(sql).fetchdf()
 
@@ -62,11 +52,7 @@ def test_oracle_parity(spark, name):
 
 
 def test_every_query_has_an_oracle():
-    """A query added without an oracle fails here instead of going
-    unchecked by the parity test above."""
-    assert set(_QUERIES) == set(_ORACLES)
-
-
-def test_entry_smoke(spark):
-    df = entry_mod.entry(spark)
-    assert df.count() >= 0
+    """A query added with neither a SQL twin nor a golden pin fails here
+    instead of going unchecked; none has both."""
+    assert set(_QUERIES) == set(_ORACLES) | set(OQ.GOLDEN_PINNED)
+    assert not set(_ORACLES) & set(OQ.GOLDEN_PINNED)

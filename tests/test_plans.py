@@ -20,24 +20,6 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
-def test_filter_pushdown_reaches_parquet(spark):
-    df = (
-        spark.read.parquet(f"{SF}/lineitem.parquet")
-        .filter(F.col("l_shipdate") < "1996-01-01")
-        .select("l_orderkey", "l_extendedprice")
-    )
-    plan = df._jdf.queryExecution().sparkPlan().toString()
-    assert "PushedFilters: [IsNotNull(l_shipdate), LessThan(l_shipdate" in plan
-    # column pruning: only the 3 referenced columns in ReadSchema
-    assert "l_comment" not in plan
-    assert "ReadSchema" in plan
-
-
-def test_broadcast_join_used_for_small_dim(spark):
-    plan = _plan(OQ.q_broadcast_join_revenue(spark, SF))
-    assert "BroadcastHashJoin" in plan
-
-
 def test_pip_join_is_broadcast_and_jvm_only(spark):
     pts = spark.range(100).select(
         F.lit("node").alias("type"),
