@@ -7,7 +7,7 @@ engine: DataFrame/SQL plans optimized by Catalyst, with the geospatial
 core as Catalyst expressions (discrete-global-grid cell encoding,
 raster-tile assignment, and a point-in-polygon join that broadcasts a
 per-cell candidate-polygon dim and ray-casts in the JVM), vectorized
-pandas/Arrow UDFs where numpy does the work (k-ring kNN, image codecs),
+pandas/Arrow UDFs where numpy does the work (image codecs),
 and checkpoint/ledger tables for resumable incremental processing.
 
 The reference is a single-node, row-at-a-time Python + SQLite pipeline

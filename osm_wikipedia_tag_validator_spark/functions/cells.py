@@ -16,13 +16,9 @@ Grid definition (documented convention — tests pin it):
 Two implementations with identical semantics:
   * Spark Column expressions (`cell_col`) — stays inside whole-stage
     codegen; used for the relational/oracle path. No UDF.
-  * numpy (`cell_encode`) — used inside pandas UDFs (polygon covers,
-    k-ring expansion) where we're already in Python.
-
-k-ring: Chebyshev-distance-≤k neighborhood; x wraps around the
-antimeridian, y clamps at the poles. On this grid ring distance is an
-exact upper bound on great-circle candidates within (k-1) cell widths,
-which is what the kNN join relies on (operators/knn.py).
+  * numpy (`cell_encode`) — the reference the tests check `cell_col`
+    against; its parts `cell_xy`/`pack` build the polygon covers on the
+    driver (`cover_bbox`).
 """
 
 from __future__ import annotations
@@ -76,28 +72,6 @@ def cell_sql(lon_expr: str, lat_expr: str, res: int) -> str:
     return f"(CAST({res} AS BIGINT) * {1 << _RES_SHIFT} + ({x} * {1 << _X_SHIFT}) + {y})"
 
 
-def k_ring_col(lon: Column, lat: Column, res: int, k: int) -> Column:
-    """k-ring as a PURE Catalyst expression: array of all cells within
-    Chebyshev distance k (x wraps, y clamps — same semantics as the
-    numpy `k_ring`). Keeps the kNN candidate generator free of Python
-    stages; duplicates from polar clamping are NOT removed (wrap in
-    array_distinct at the call site)."""
-    n = 1 << res
-    x = cell_x_col(lon, res)
-    y = cell_y_col(lat, res)
-    offs = F.sequence(F.lit(-k), F.lit(k))
-    base = F.lit(res).cast("long") * F.lit(1 << _RES_SHIFT).cast("long")
-
-    def cell_at(dx, dy):
-        nx = F.pmod(x + dx, F.lit(n))
-        ny = F.greatest(F.lit(0).cast("long"), F.least(y + dy, F.lit(n - 1).cast("long")))
-        return base + F.shiftleft(nx, _X_SHIFT) + ny
-
-    return F.flatten(
-        F.transform(offs, lambda dx: F.transform(offs, lambda dy: cell_at(dx, dy)))
-    )
-
-
 def parent_cell_col(cell: Column, res: int, parent_res: int) -> Column:
     """Coarsen a cell id to an ancestor resolution (prefix for pruning)."""
     if parent_res > res:
@@ -113,7 +87,7 @@ def parent_cell_col(cell: Column, res: int, parent_res: int) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# numpy implementation (inside pandas UDFs)
+# numpy implementation (driver-side covers, test reference)
 # ---------------------------------------------------------------------------
 
 def cell_xy(lon: np.ndarray, lat: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
@@ -151,26 +125,6 @@ def cell_bounds(cell: int) -> tuple[float, float, float, float]:
     lon_min = float(x[0]) * 360.0 / n - 180.0
     lat_max = 90.0 - float(y[0]) * 180.0 / n
     return (lon_min, lat_max - 180.0 / n, lon_min + 360.0 / n, lat_max)
-
-
-def k_ring(cells: np.ndarray, k: int) -> np.ndarray:
-    """All cells within Chebyshev distance k of each input cell.
-
-    Returns shape (len(cells), (2k+1)^2) int64. x wraps (antimeridian),
-    y clamps (poles) — clamped duplicates are kept (caller dedups or
-    joins; duplicates only cost a few extra candidate rows at poles).
-    """
-    cells = np.asarray(cells, dtype=np.int64)
-    res, x, y = unpack(cells)
-    r = int(res[0]) if len(res) else 0
-    n = 1 << r
-    offs = np.arange(-k, k + 1)
-    dx, dy = np.meshgrid(offs, offs, indexing="ij")
-    dx = dx.ravel()[None, :]
-    dy = dy.ravel()[None, :]
-    nx = (x[:, None] + dx) % n
-    ny = np.clip(y[:, None] + dy, 0, n - 1)
-    return pack(nx, ny, r)
 
 
 def cover_bbox(

@@ -1,4 +1,4 @@
-"""Vectorized geometry: ray-casting point-in-polygon and great-circle distance.
+"""Vectorized geometry: ray-casting point-in-polygon.
 
 Replaces the reference's spatial tests — hardcoded per-country bboxes
 (`osm_editor_bot_for_approved_tasks.py:241-298`) and per-point Nominatim
@@ -99,15 +99,3 @@ def ring_bbox(ring: np.ndarray) -> tuple[float, float, float, float]:
         float(r[:, 0].max()),
         float(r[:, 1].max()),
     )
-
-
-def haversine_km(
-    lon1: np.ndarray, lat1: np.ndarray, lon2: np.ndarray, lat2: np.ndarray
-) -> np.ndarray:
-    """Great-circle distance, vectorized."""
-    r = 6371.0088
-    p1, p2 = np.radians(lat1), np.radians(lat2)
-    dlat = p2 - p1
-    dlon = np.radians(lon2) - np.radians(lon1)
-    a = np.sin(dlat / 2) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dlon / 2) ** 2
-    return 2 * r * np.arcsin(np.sqrt(np.clip(a, 0, 1)))

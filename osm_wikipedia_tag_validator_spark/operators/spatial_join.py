@@ -57,8 +57,7 @@ def collect_polygons(polygons: DataFrame) -> list[dict]:
     through `_polygon_dim`, so it runs once per polygon snapshot: every
     join over the same snapshot (the validator's `point_in_polygon_tag`,
     the tile sink's `point_in_polygon_join`, run after run) shares one
-    collect. Guarded like the kNN matrix collect, but folded into the
-    collect itself: the LIMIT
+    collect. The guard is folded into the collect itself: the LIMIT
     bounds the driver transfer to MAX+1 rows in the SAME job (no extra
     probe job in the hot path), so an accidentally-huge dim fails fast
     with a clear error instead of an unbounded ``collect`` OOM."""
@@ -341,37 +340,3 @@ def all_points_inside(
         F.count(F.lit(1)).alias("n_points"),
     )
 
-
-# ---------------------------------------------------------------------------
-# Skew helper — salted join
-# ---------------------------------------------------------------------------
-
-def salted_join_skewed(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    hot_keys: list,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Salted equi-join: replicate the small side `salt_buckets`× for
-    hot keys, randomize the big side's salt. Non-hot keys join with
-    salt 0 — no replication cost. Use when AQE skew-join can't see the
-    skew (e.g. skew materializes inside a UDF stage)."""
-    hot = F.lit(hot_keys)
-    big_s = big.withColumn(
-        "_salt",
-        F.when(
-            F.array_contains(hot, F.col(key)),
-            (F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))),
-        ).otherwise(F.lit(0)),
-    )
-    small_s = small.withColumn(
-        "_salt",
-        F.explode(
-            F.when(
-                F.array_contains(hot, F.col(key)),
-                F.sequence(F.lit(0), F.lit(salt_buckets - 1)),
-            ).otherwise(F.array(F.lit(0)))
-        ),
-    )
-    return big_s.join(small_s, [key, "_salt"]).drop("_salt")

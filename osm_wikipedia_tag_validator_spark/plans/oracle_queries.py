@@ -17,10 +17,9 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions import cells as C
-from ..operators import knn as KNN
 from ..operators import spatial_join as SJ
 from ..operators import tiles as TI
 from ..operators import upsert as UP
@@ -46,29 +45,25 @@ GOLDEN_PINNED: dict[str, list[str]] = {
 
 _LON = "((c_custkey * 7919) % 36000) / 100.0 - 180.0 + 0.005"
 _LAT = "((c_custkey * 104729) % 17000) / 100.0 - 85.0 + 0.005"
-_S_LON = "((s_suppkey * 7919) % 36000) / 100.0 - 180.0 + 0.005"
-_S_LAT = "((s_suppkey * 104729) % 17000) / 100.0 - 85.0 + 0.005"
+
+
+def _lon_lat() -> list[Column]:
+    """`_LON` and `_LAT` as Columns `lon`, `lat`: the same expression
+    tree, built with Column arithmetic because `F.expr` would parse
+    `100.0` as a DECIMAL literal and change the type."""
+    key = F.col("c_custkey")
+    return [
+        (((key * 7919) % 36000) / 100.0 - 180.0 + 0.005).alias("lon"),
+        (((key * 104729) % 17000) / 100.0 - 85.0 + 0.005).alias("lat"),
+    ]
+
 
 CELL_RES = 7
 TILE_Z = 6
 
 
 def _pts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    return cust.select(
-        "c_custkey",
-        (((F.col("c_custkey") * 7919) % 36000) / 100.0 - 180.0 + 0.005).alias("lon"),
-        (((F.col("c_custkey") * 104729) % 17000) / 100.0 - 85.0 + 0.005).alias("lat"),
-    )
-
-
-def _supplier_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    return sup.select(
-        "s_suppkey",
-        (((F.col("s_suppkey") * 7919) % 36000) / 100.0 - 180.0 + 0.005).alias("lon"),
-        (((F.col("s_suppkey") * 104729) % 17000) / 100.0 - 85.0 + 0.005).alias("lat"),
-    )
+    return _t(spark, sf_dir, "customer").select("c_custkey", *_lon_lat())
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -194,82 +189,6 @@ WITH pts AS (
   SELECT c_custkey, {_LON} AS lon, {_LAT} AS lat FROM customer
 )
 SELECT c_custkey, 'quad-0' AS polygon_id FROM pts WHERE {_QUAD_INSIDE_SQL}
-"""
-
-
-def q_knn(spark, sf_dir):
-    """J9 kNN, brute-force physical strategy (broadcast + re-rank)."""
-    return KNN.knn_bruteforce(
-        _pts(spark, sf_dir), _supplier_pts(spark, sf_dir), k=3,
-        q_key="c_custkey", e_key="s_suppkey",
-    ).select("c_custkey", "s_suppkey", F.round("dist_km", 4).alias("dist_km"), "rank")
-
-
-def q_knn_kring(spark, sf_dir):
-    """J9 kNN through the ADAPTIVE planner: the 1k-entity side is under
-    the broadcast threshold, so the cost rule delegates to the map-side
-    brute-force path (the right plan in this regime — BENCH.md records
-    the crossover). Must equal brute force either way."""
-    return KNN.knn_kring(
-        _pts(spark, sf_dir), _supplier_pts(spark, sf_dir), k=3,
-        initial_ring=1, max_ring=64,
-        q_key="c_custkey", e_key="s_suppkey",
-    ).select("c_custkey", "s_suppkey", F.round("dist_km", 4).alias("dist_km"), "rank")
-
-
-def q_knn_kring_index(spark, sf_dir):
-    """J9 kNN through the GENUINE k-ring index machinery (escalation
-    loop, ring lower bounds): max_inline_entities=0 disables the cost
-    rule, and the dense customer side is the entity set so the
-    sparse-grid delegation doesn't fire either. Oracle = the same
-    cross-join SQL with sides swapped — the index must be EXACT."""
-    return KNN.knn_kring(
-        _supplier_pts(spark, sf_dir), _pts(spark, sf_dir), k=3,
-        initial_ring=1, max_ring=64,
-        q_key="s_suppkey", e_key="c_custkey",
-        max_inline_entities=0,
-    ).select("s_suppkey", "c_custkey", F.round("dist_km", 4).alias("dist_km"), "rank")
-
-
-SQL_KNN = f"""
-WITH q AS (
-  SELECT c_custkey, {_LON} AS lon, {_LAT} AS lat FROM customer
-), e AS (
-  SELECT s_suppkey, {_S_LON} AS lon, {_S_LAT} AS lat FROM supplier
-), d AS (
-  SELECT q.c_custkey, e.s_suppkey,
-         2 * 6371.0088 * ASIN(SQRT(LEAST(
-            POW(SIN((RADIANS(e.lat) - RADIANS(q.lat)) / 2), 2)
-            + COS(RADIANS(q.lat)) * COS(RADIANS(e.lat))
-              * POW(SIN((RADIANS(e.lon) - RADIANS(q.lon)) / 2), 2), 1.0))) AS dist_km
-  FROM q CROSS JOIN e
-)
-SELECT c_custkey, s_suppkey, ROUND(dist_km, 4) AS dist_km, CAST(rank AS INT) AS rank
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY c_custkey ORDER BY dist_km ASC, s_suppkey ASC) AS rank
-  FROM d
-) WHERE rank <= 3
-"""
-
-# sides swapped: suppliers query the dense customer entity set
-SQL_KNN_SWAPPED = f"""
-WITH q AS (
-  SELECT s_suppkey, {_S_LON} AS lon, {_S_LAT} AS lat FROM supplier
-), e AS (
-  SELECT c_custkey, {_LON} AS lon, {_LAT} AS lat FROM customer
-), d AS (
-  SELECT q.s_suppkey, e.c_custkey,
-         2 * 6371.0088 * ASIN(SQRT(LEAST(
-            POW(SIN((RADIANS(e.lat) - RADIANS(q.lat)) / 2), 2)
-            + COS(RADIANS(q.lat)) * COS(RADIANS(e.lat))
-              * POW(SIN((RADIANS(e.lon) - RADIANS(q.lon)) / 2), 2), 1.0))) AS dist_km
-  FROM q CROSS JOIN e
-)
-SELECT s_suppkey, c_custkey, ROUND(dist_km, 4) AS dist_km, CAST(rank AS INT) AS rank
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY s_suppkey ORDER BY dist_km ASC, c_custkey ASC) AS rank
-  FROM d
-) WHERE rank <= 3
 """
 
 
@@ -640,9 +559,7 @@ def q_region_parts(spark, sf_dir):
 
     cust = _t(spark, sf_dir, "customer")
     pts = cust.select(
-        F.col("c_nationkey").cast("string").alias("area_identifier"),
-        (((F.col("c_custkey") * 7919) % 36000) / 100.0 - 180.0 + 0.005).alias("lon"),
-        (((F.col("c_custkey") * 104729) % 17000) / 100.0 - 85.0 + 0.005).alias("lat"),
+        F.col("c_nationkey").cast("string").alias("area_identifier"), *_lon_lat()
     )
     return RS.region_part_map(pts, budget=40, res=4)
 
@@ -730,9 +647,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "overpass_sink": q_overpass_sink,
         "cell_tile_assign": q_cell_tile_assign,
         "pip_convex": q_pip_convex,
-        "knn": q_knn,
-        "knn_kring": q_knn_kring,
-        "knn_kring_index": q_knn_kring_index,
         "image_invariants": q_image_invariants,
         "cell_parent_rollup": q_cell_parent_rollup,
         "region_parts": q_region_parts,
@@ -767,7 +681,4 @@ def oracle_sql() -> dict[str, str]:
         "pip_convex": SQL_PIP,
         "all_points_inside": SQL_ALL_POINTS_INSIDE,
         "region_parts": _sql_region_parts(),
-        "knn": SQL_KNN,
-        "knn_kring": SQL_KNN,
-        "knn_kring_index": SQL_KNN_SWAPPED,
     }

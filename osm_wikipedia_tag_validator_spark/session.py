@@ -40,9 +40,9 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        # AQE: runtime coalescing + skew-join splitting. The engine also
-        # salts known-hot cells explicitly (operators/spatial_join.py);
-        # AQE covers the residual skew Catalyst can observe at runtime.
+        # AQE: runtime coalescing + skew-join splitting. The one hot key,
+        # the grid cell, joins against a broadcast dim, so AQE covers
+        # the skew Catalyst can observe at runtime.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -102,46 +102,14 @@ def get_spark(
 
 
 def stop_spark() -> None:
-    """Stop the active session and drop the driver-side slots that pin
-    its objects: the tracked broadcasts (`tracked_broadcast`) and the
-    per-snapshot memos (`snapshot_memo`: the cached pre-joined wiki dim,
-    the collected polygon dim). Once the context is gone their handles
-    are dead weight — dropping them makes the values collectable."""
+    """Stop the active session and drop the per-snapshot memos that pin
+    its objects (`snapshot_memo`: the cached pre-joined wiki dim, the
+    collected polygon dim). Once the context is gone their handles are
+    dead weight — dropping them makes the values collectable."""
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
-    _TRACKED_BROADCASTS.clear()
     _SNAPSHOT_MEMOS.clear()
-
-
-# single-slot registry for operator-owned SparkContext broadcasts
-# (the kNN entity matrix): repeated calls — a bench
-# loop runs each operator 4x — would otherwise pin one full matrix
-# per call in executor block-manager memory for the session lifetime.
-_TRACKED_BROADCASTS: dict[str, object] = {}
-
-
-def tracked_broadcast(sc, value, slot: str):
-    """``SparkContext.broadcast`` with a one-per-slot lifecycle: a new
-    broadcast in the same slot first unpersists the previous one's
-    executor copies (non-blocking — an older plan that still references
-    it re-fetches from the driver on next use, so correctness is
-    unaffected), bounding block-manager growth under repeated calls.
-
-    Single-threaded driver assumption: the registry is not locked — two
-    jobs sharing a slot concurrently stay CORRECT (unpersist forces a
-    re-fetch from the driver) but the loser pays a silent re-broadcast.
-    `stop_spark()` clears the registry so values don't outlive the
-    context."""
-    prev = _TRACKED_BROADCASTS.get(slot)
-    if prev is not None:
-        try:
-            prev.unpersist(False)
-        except Exception:
-            pass  # context already stopped / broadcast already gone
-    bc = sc.broadcast(value)
-    _TRACKED_BROADCASTS[slot] = bc
-    return bc
 
 
 # single-slot registry for values derived from one input snapshot (the
@@ -166,9 +134,9 @@ def snapshot_memo(slot: str, df: DataFrame, build, *params):
     BEFORE building: the cache manager matches plans by the same
     root-path equality, so a stale entry would otherwise be handed back
     to the rebuilt plan. An older lazy plan that still references the
-    previous value simply recomputes it from its source. Same lifecycle
-    as `tracked_broadcast`: one entry per slot, single-threaded driver
-    assumption, cleared by `stop_spark()`."""
+    previous value simply recomputes it from its source. One entry per
+    slot, single-threaded driver assumption (the registry is not
+    locked), cleared by `stop_spark()`."""
     files = _input_files(df)
     prev = _SNAPSHOT_MEMOS.get(slot)
     if prev is not None:

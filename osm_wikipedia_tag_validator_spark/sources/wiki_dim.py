@@ -49,11 +49,9 @@ Column contract — what a source provides, and what reads each column:
     language-preference rules (is there a sitelink in the region's
     `language_code`?), their proposed change, and the tag-completion
     families ("wikipedia from wikidata tag[, unexpected language]").
-``lat``/``lon`` (double, nullable) + ``has_coord`` (boolean)
-    Wikidata P625 coordinate. The validator does not read them (no rule
-    compares locations); they place entities for nearest-entity
-    queries (`operators.knn`). Optional: a source without them gets
-    absent coordinates.
+
+Any other source column (e.g. the synthetic generator's coordinates) is
+dropped: no rule compares locations.
 
 The deterministic synthetic generator
 (`datagen.world.gen_wiki_entities` / `spark_wiki_entities`) is the
@@ -67,9 +65,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 #: the dim's column contract — what a real source must provide. The
-#: validator reads all of it except `lang`, `lat`, `lon` and `has_coord`
-#: (see the module docstring). Kept in one place so the validator's
-#: malformed-input assert and any normalizer agree.
+#: validator reads all of it except `lang` (see the module docstring).
+#: Kept in one place so the validator's malformed-input assert and any
+#: normalizer agree.
 CONSUMED_COLUMNS: dict[str, str] = {
     "qid": "string",
     "article": "string",
@@ -79,9 +77,6 @@ CONSUMED_COLUMNS: dict[str, str] = {
     "is_disambiguation": "boolean",
     "instance_of": "string",
     "sitelinks": "map<string,string>",
-    "lat": "double",
-    "lon": "double",
-    "has_coord": "boolean",
 }
 
 WIKI_DIM_SCHEMA = ", ".join(f"{c} {t}" for c, t in CONSUMED_COLUMNS.items())
@@ -96,8 +91,7 @@ def build_wiki_entities_dim(
       (e.g. ``{"id": "qid", "enwiki_title": "article"}``).
     - missing REQUIRED columns fail fast with the full contract in the
       message (the P11 malformed-config assert applied to this
-      boundary); missing OPTIONAL columns (`lat`/`lon`/`has_coord`) are
-      filled as absent-coordinate.
+      boundary); columns outside the contract are dropped.
     - every column is cast to its contract type (a dump with int qids
       or string booleans still normalizes).
     - exactly one row per qid, deterministically: duplicates keep the
@@ -119,19 +113,12 @@ def build_wiki_entities_dim(
         df = df.withColumnRenamed(src, dst)
 
     have = set(df.columns)
-    required = [c for c in CONSUMED_COLUMNS if c not in ("lat", "lon", "has_coord")]
-    missing = [c for c in required if c not in have]
+    missing = [c for c in CONSUMED_COLUMNS if c not in have]
     if missing:
         raise ValueError(
             f"wiki entity source is missing required columns {missing}; "
             f"the wiki dim contract is: {WIKI_DIM_SCHEMA}"
         )
-    if "lat" not in have:
-        df = df.withColumn("lat", F.lit(None).cast("double"))
-    if "lon" not in have:
-        df = df.withColumn("lon", F.lit(None).cast("double"))
-    if "has_coord" not in have:
-        df = df.withColumn("has_coord", F.col("lat").isNotNull() & F.col("lon").isNotNull())
 
     dim = df.select(
         *[F.col(c).cast(t).alias(c) for c, t in CONSUMED_COLUMNS.items()]
@@ -171,10 +158,7 @@ WIKIDATA_DUMP_SCHEMA = (
     "id string, type string, "
     "claims struct<"
     "P31: array<struct<mainsnak: struct<"
-    "datavalue: struct<value: struct<id: string>>>>>, "
-    "P625: array<struct<mainsnak: struct<"
-    "datavalue: struct<value: struct<latitude: double, longitude: double>>>>>"
-    ">, "
+    "datavalue: struct<value: struct<id: string>>>>>>, "
     "sitelinks map<string,struct<site: string, title: string>>"
 )
 
@@ -218,7 +202,7 @@ def wikidata_dump_to_dim(
       lexicographically-smallest language; claims.P31[0] → instance_of
       (optionally translated via `instance_of_map` — wikidata classes →
       the engine's instance keys, `error_catalog.instance_key`);
-      P31 ∋ Q4167410 → is_disambiguation; claims.P625[0] → lat/lon;
+      P31 ∋ Q4167410 → is_disambiguation;
       presence in the dump → exists=true (a qid the elements reference
       but the dim lacks IS the 404 family, carried by the validator's
       left joins). Redirected entities are published as a separate list,
@@ -275,15 +259,12 @@ def wikidata_dump_to_dim(
         ),
         F.array().cast("array<string>"),
     )
-    coord = F.get(F.col("claims.P625"), 0)["mainsnak"]["datavalue"]["value"]
 
     parsed = items.select(
         F.col("id").alias("qid"),
         sl.alias("sitelinks"),
         F.get(p31, 0).alias("_inst_qid"),
         F.array_contains(p31, DISAMBIGUATION_CLASS).alias("is_disambiguation"),
-        coord["latitude"].alias("lat"),
-        coord["longitude"].alias("lon"),
     )
     pick = F.coalesce(
         *[F.try_element_at(F.col("sitelinks"), F.lit(l)) for l in preferred_langs],
@@ -337,8 +318,6 @@ def wikidata_dump_to_dim(
             F.lit(False).alias("is_disambiguation"),
             F.lit(None).cast("string").alias("instance_of"),
             F.from_json(F.lit("{}"), "map<string,string>").alias("sitelinks"),
-            F.lit(None).cast("double").alias("lat"),
-            F.lit(None).cast("double").alias("lon"),
         )
         parsed = parsed.unionByName(extra, allowMissingColumns=True)
     else:

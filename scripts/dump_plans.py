@@ -11,7 +11,6 @@ sys.path.insert(0, os.getcwd())
 from pyspark.sql import functions as F
 
 from osm_wikipedia_tag_validator_spark.datagen import world as W
-from osm_wikipedia_tag_validator_spark.operators import knn as KNN
 from osm_wikipedia_tag_validator_spark.operators import region_split as RS
 from osm_wikipedia_tag_validator_spark.operators import spatial_join as SJ
 from osm_wikipedia_tag_validator_spark.operators import tiles as TI
@@ -19,6 +18,7 @@ from osm_wikipedia_tag_validator_spark.operators import upsert as UP
 from osm_wikipedia_tag_validator_spark.operators import validator as V
 from osm_wikipedia_tag_validator_spark.plans import oracle_queries as OQ
 from osm_wikipedia_tag_validator_spark.session import get_spark
+from osm_wikipedia_tag_validator_spark.sources import wiki_dim as WD
 
 SF = "/root/testdata/sf0.001"
 
@@ -32,11 +32,7 @@ def cap(df, mode="simple") -> str:
 
 def main() -> None:
     spark = get_spark(cores=8, shuffle_partitions=8)
-    pts = spark.read.parquet(f"{SF}/customer.parquet").select(
-        "c_custkey",
-        (((F.col("c_custkey") * 7919) % 36000) / 100.0 - 180.0 + 0.005).alias("lon"),
-        (((F.col("c_custkey") * 104729) % 17000) / 100.0 - 85.0 + 0.005).alias("lat"),
-    )
+    pts = OQ._pts(spark, SF)
     sections = [
         (
             "Cell + tile encode (DGG/XYZ)",
@@ -54,16 +50,6 @@ def main() -> None:
             cap(SJ.point_in_polygon_join(pts, W.spark_polygons(spark))),
         ),
         (
-            "kNN broadcast-matrix top-k (J9)",
-            "Single map-side Arrow stage; no key shuffle, no window sort (round-robin repartition only for parallelism).",
-            cap(
-                KNN.knn_bruteforce(
-                    pts, OQ._supplier_pts(spark, SF), k=3,
-                    q_key="c_custkey", e_key="s_suppkey",
-                )
-            ),
-        ),
-        (
             "Validator cascade (V1+J1)",
             "The reference's per-row Python UDF as three broadcast joins against the cached "
             "wiki dim (article, qid, out-of-pair secondary qid) + one region join, and one "
@@ -74,7 +60,7 @@ def main() -> None:
             cap(
                 V.validate(
                     W.spark_elements(spark, 100),
-                    W.spark_wiki_entities(spark),
+                    WD.build_wiki_entities_dim(W.spark_wiki_entities(spark)),
                     W.spark_regions(spark),
                 )
             ),

@@ -12,10 +12,6 @@ from osm_wikipedia_tag_validator_spark.session import get_spark
 
 
 def main() -> None:
-    import pyspark.sql.functions as F
-
-    from osm_wikipedia_tag_validator_spark.operators import knn as KNN
-
     spark = get_spark(cores=8, shuffle_partitions=8)
     inputs = P.build_inputs(spark, 300)
     v = P.validated_elements(inputs)
@@ -42,15 +38,6 @@ def main() -> None:
     out = os.path.join(fixdir, "golden_tiles_tiny.csv")
     tp.to_csv(out, index=False)
     print(f"wrote {len(tp)} rows → {out}")
-
-    q = v.select("id", "lon", "lat").filter(F.col("id") < 50)
-    e = inputs["wiki"].filter(F.col("has_coord")).select("qid", "lon", "lat")
-    kn = KNN.knn_kring(q, e, k=3, q_key="id", e_key="qid").toPandas()
-    kn["dist_km"] = kn["dist_km"].round(4)
-    kn = kn.sort_values(["id", "rank"]).reset_index(drop=True)
-    out = os.path.join(fixdir, "golden_knn_tiny.csv")
-    kn.to_csv(out, index=False)
-    print(f"wrote {len(kn)} rows → {out}")
 
     cnt = (
         P.region_rollup(v, inputs["regions"], inputs["error_catalog"])

@@ -33,20 +33,6 @@ def test_point_inside_own_cell_bounds(lon, lat, res):
     assert y0 - 1e-9 <= lat <= y1 + 1e-9
 
 
-def test_kring_size_and_membership():
-    c = C.cell_encode(np.array([10.0]), np.array([20.0]), 8)
-    kr = C.k_ring(c, 2)
-    assert kr.shape == (1, 25)
-    assert int(c[0]) in set(kr[0].tolist())
-
-
-def test_kring_wraps_antimeridian():
-    c = C.cell_encode(np.array([179.9]), np.array([0.0]), 4)
-    kr = C.k_ring(c, 1)[0]
-    west = C.cell_encode(np.array([-179.9]), np.array([0.0]), 4)[0]
-    assert int(west) in set(kr.tolist())
-
-
 def test_parent_cell_consistency():
     lon, lat = np.array([12.34]), np.array([-45.6])
     child = C.cell_encode(lon, lat, 12)

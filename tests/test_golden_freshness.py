@@ -40,17 +40,6 @@ def test_fixture_dir_matches_pins():
     assert stems == set(OQ.GOLDEN_PINNED)
 
 
-def test_pinned_queries_need_no_testdata(spark, tmp_path):
-    """A pin is a plain column list (no per-SF stratum), and a pinned
-    query runs with an SF dir that does not exist — so a future pin that
-    reads the testdata tables fails here instead of going unchecked."""
-    for cols in OQ.GOLDEN_PINNED.values():
-        assert isinstance(cols, list) and all(isinstance(c, str) for c in cols)
-    name = "tile_vector_assignment"
-    got = OQ.queries()[name](spark, str(tmp_path / "absent"))
-    assert got.columns == OQ.GOLDEN_PINNED[name]
-
-
 @pytest.mark.parametrize("name", sorted(OQ.GOLDEN_PINNED))
 def test_golden_fixture_is_fresh(spark, tmp_path, name):
     cols = OQ.GOLDEN_PINNED[name]

@@ -1,15 +1,12 @@
 """Golden fixture matches for the remaining FIXTURES.md §7 sets:
-tile assignments, kNN neighbor lists, per-region/merged review counts.
+tile assignments and per-region/merged review counts.
 Regenerate via the snippet in tests/fixtures/regen_golden.py pattern
 only for intentional semantic changes."""
 
 import os
 
 import pandas as pd
-import pyspark.sql.functions as F
 
-from osm_wikipedia_tag_validator_spark.datagen import world as W
-from osm_wikipedia_tag_validator_spark.operators import knn as KNN
 from osm_wikipedia_tag_validator_spark.plans import pipeline as P
 
 FIX = os.path.join(os.path.dirname(__file__), "fixtures")
@@ -30,17 +27,6 @@ def test_golden_tile_assignments(spark):
         .reset_index(drop=True)
     )
     exp = pd.read_csv(os.path.join(FIX, "golden_tiles_tiny.csv"))
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
-
-
-def test_golden_knn(spark):
-    inputs, v = _setup(spark)
-    q = v.select("id", "lon", "lat").filter(F.col("id") < 50)
-    e = inputs["wiki"].filter(F.col("has_coord")).select("qid", "lon", "lat")
-    got = KNN.knn_kring(q, e, k=3, q_key="id", e_key="qid").toPandas()
-    got["dist_km"] = got["dist_km"].round(4)
-    got = got.sort_values(["id", "rank"]).reset_index(drop=True)
-    exp = pd.read_csv(os.path.join(FIX, "golden_knn_tiny.csv"))
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
 
 

@@ -7,7 +7,6 @@ import pyspark.sql.functions as F
 from osm_wikipedia_tag_validator_spark.datagen import world as W
 from osm_wikipedia_tag_validator_spark.operators import spatial_join as SJ
 from osm_wikipedia_tag_validator_spark.operators import tiles as TI
-from osm_wikipedia_tag_validator_spark.plans import oracle_queries as OQ
 
 SF = "/root/testdata/sf0.001"
 
@@ -92,20 +91,6 @@ def test_validator_joins_wiki_dim_three_times(spark):
     assert _optimized(out).count("InMemoryRelation") == 3
 
 
-def test_knn_bruteforce_has_no_shuffle(spark):
-    from osm_wikipedia_tag_validator_spark.operators import knn as KNN
-
-    q = OQ._pts(spark, SF)
-    e = OQ._supplier_pts(spark, SF)
-    df = KNN.knn_bruteforce(q, e, k=3, q_key="c_custkey", e_key="s_suppkey")
-    plan = _plan(df)
-    # no key shuffle and no window sort — the top-k is map-side; a
-    # round-robin repartition for parallelism on single-file sources is
-    # deliberate and carries no key semantics
-    assert "Exchange hashpartitioning" not in plan
-    assert "Window" not in plan and "Sort" not in plan
-
-
 def test_latest_per_key_single_exchange(spark):
     from osm_wikipedia_tag_validator_spark.operators import upsert as UP
 
@@ -113,16 +98,6 @@ def test_latest_per_key_single_exchange(spark):
                            key_cols=["o_custkey"], ts_col="o_orderdate")
     plan = _plan(df)
     assert plan.count("Exchange hashpartitioning") == 1
-
-
-def test_salted_join_and_count(spark):
-    big = spark.range(10000).select((F.col("id") % 10).alias("k"), "id")
-    small = spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k long, v string")
-    out = SJ.salted_join_skewed(big, small, "k", hot_keys=[0, 1], salt_buckets=4)
-    assert out.count() == 10000
-    plain = big.join(small, "k").groupBy("k").count().toPandas().set_index("k")["count"]
-    salted = out.groupBy("k").count().toPandas().set_index("k")["count"]
-    assert (plain.sort_index() == salted.sort_index()).all()
 
 
 def test_region_split_budget_and_locality(spark):

@@ -68,14 +68,6 @@ def test_codec_corrupt_input_raises_valueerror():
             C.decode_image(bytes(C.encode_image(img, fmt))[:12], fmt)
 
 
-def test_neardup_by_phash_default_recall(spark):
-    """Default max_hamming is 6 again (8 bands make it exact)."""
-    import inspect
-
-    sig = inspect.signature(IO.neardup_by_phash)
-    assert sig.parameters["max_hamming"].default == 6
-
-
 def test_latest_per_key_with_nested_map_schema(spark):
     """The content fingerprint must handle maps at ANY nesting depth —
     xxhash64 rejects them even inside array<struct<...>> (the shape of
@@ -185,7 +177,7 @@ def test_challenge_sync_null_status_left_alone(spark):
 
 def test_collect_polygons_size_guard(spark, monkeypatch):
     """An over-limit polygon dim fails fast with a clear error instead
-    of an unbounded driver collect (same guard class as kNN)."""
+    of an unbounded driver collect."""
     from osm_wikipedia_tag_validator_spark.operators import spatial_join as SJ
 
     ring = [{"lon": 0.0, "lat": 0.0}, {"lon": 1.0, "lat": 0.0}, {"lon": 0.0, "lat": 1.0}]

@@ -60,7 +60,6 @@ def test_column_map_and_casts_normalize_a_foreign_dump(spark):
     rows = {r["qid"]: r for r in dim.collect()}
     assert rows["Q5"]["exists"] is True and rows["Q7"]["exists"] is False
     assert rows["Q7"]["is_disambiguation"] is True
-    assert rows["Q5"]["has_coord"] is False and rows["Q5"]["lat"] is None
     schema = {f.name: f.dataType.simpleString() for f in dim.schema.fields}
     assert schema == WD.CONSUMED_COLUMNS
 

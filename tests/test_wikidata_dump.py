@@ -37,20 +37,23 @@ def _hand_dim(spark):
     line collapses; the property entity and the malformed line drop)."""
     rows = [
         ("Q100", "en:Alphaville (city)", "en", None, False, True, "place",
-         50.05, 10.1, True,
          {"en": "en:Alphaville (city)", "de": "de:Alphaville (Stadt)"}),
         ("Q101", "en:Mercury", "en", None, True, True, "Q4167410",
-         None, None, False, {"en": "en:Mercury"}),
+         {"en": "en:Mercury"}),
         ("Q102", "en:Ada Lovelace", "en", None, False, True, "human",
-         None, None, False,
          {"en": "en:Ada Lovelace", "pl": "pl:Ada Lovelace"}),
-        ("Q103", None, None, "Q100", False, True, None, None, None, False, {}),
+        ("Q103", None, None, "Q100", False, True, None, {}),
         ("Q104", "zh-min-nan:Tâi-lâm", "zh-min-nan", None, False, True, None,
-         None, None, False, {"zh-min-nan": "zh-min-nan:Tâi-lâm"}),
-        ("Q105", None, None, "Q102", False, True, None, None, None, False, {}),
-        ("Q106", None, None, None, False, True, None, None, None, False, {}),
+         {"zh-min-nan": "zh-min-nan:Tâi-lâm"}),
+        ("Q105", None, None, "Q102", False, True, None, {}),
+        ("Q106", None, None, None, False, True, None, {}),
     ]
-    return spark.createDataFrame(rows, W.WIKI_SCHEMA)
+    schema = (
+        "qid string, article string, lang string, redirect_to string, "
+        "is_disambiguation boolean, exists boolean, instance_of string, "
+        "sitelinks map<string,string>"
+    )
+    return spark.createDataFrame(rows, schema)
 
 
 def _elements(spark):
