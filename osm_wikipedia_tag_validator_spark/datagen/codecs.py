@@ -191,9 +191,8 @@ def _dct8_forward(img: np.ndarray, quality: int) -> tuple[np.ndarray, int, int]:
 
 
 def _dct8_reconstruct(quant: np.ndarray, quality: int, h: int, w: int) -> np.ndarray:
-    """Inverse transform of quantized coefficient blocks → uint8 pixels.
-    Shared by `dct8_decode` and the encode-side fast path
-    (`encode_image_ex`), which guarantees both produce identical bytes.
+    """Inverse transform of quantized coefficient blocks → uint8 pixels
+    (the body of `dct8_decode` once the stream is parsed).
 
     Dequantize / +128 / rint / clip / uint8 all run INSIDE the tiled
     core (see `_mm_core`): the full-size float32 coefficient and pixel
@@ -435,33 +434,6 @@ def _mm_tile(L: np.ndarray, b: np.ndarray, R: np.ndarray, yt: np.ndarray, zt: np
             for k in range(1, 8):
                 acc += yt[k, j] * li[k]
             zt[i, j] = acc
-
-
-def encode_image_ex(img: np.ndarray, fmt: str) -> tuple[bytes, np.ndarray]:
-    """Encode AND return the decoded pixels without a wasteful
-    re-decode: for png the round trip is the identity; for fake-jpeg
-    the decoded image IS the quantized plane the encoder already built;
-    for dct8 the reconstruction runs on the in-memory coefficients
-    (skipping the zlib round trip, which is lossless by construction).
-    `decode_image(bytes) == decoded` is guaranteed — tested in
-    test_codecs — so datagen's stored phash stays the hash of the
-    decoded pixels. This halves the per-image compute of the ingest hot
-    path (the scaling job's profile)."""
-    img = np.asarray(img, dtype=np.uint8)
-    if fmt == "png":
-        return png_encode(img), img
-    if fmt == "jpeg":
-        quant = ((img.astype(np.int32) // FAKE_JPEG_Q) * FAKE_JPEG_Q).astype(np.uint8)
-        return _FJPG_MAGIC + struct.pack(">B", FAKE_JPEG_Q) + png_encode(quant), quant
-    if fmt == "dct8":
-        quant, h, w = _dct8_forward(img, 95)
-        data = (
-            _DCT8_MAGIC
-            + struct.pack(">BIIH", 95, h, w, 0)
-            + zlib.compress(quant.tobytes(), 1)
-        )
-        return data, _dct8_reconstruct(quant, 95, h, w)
-    raise ValueError(f"unknown fmt {fmt!r}")
 
 
 def decode_image(data: bytes, fmt: str | None = None) -> np.ndarray:

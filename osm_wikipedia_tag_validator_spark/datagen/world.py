@@ -30,22 +30,15 @@ import numpy as np
 import pandas as pd
 
 from ..functions.hashing import hash2, splitmix64, u01
-from .codecs import (  # noqa: F401
-    decode_image,
-    dct8_encode_batch,
-    encode_image,
-    encode_image_ex,
-    fake_jpeg_encode_batch,
-    png_encode_batch,
-)
-from ..functions.imagefns import ahash64, ahash64_batch
+from .codecs import dct8_encode_batch, fake_jpeg_encode_batch, png_encode_batch
+from ..functions.imagefns import ahash64_batch
 from ..operators.validator import KNOWN_WIKIPEDIA_LANGS, LANG_CODE_REDIRECTS
 
 SEED = 20260816
 
 WORLD = dict(lon_min=-20.0, lat_min=-10.0, lon_max=40.0, lat_max=30.0)
 
-# Hot "city" clusters (~50% of elements) to exercise salted skew joins.
+# Hot "city" clusters (~50% of elements): skewed grid cells for the PIP join.
 CLUSTERS = [
     (-10.0, 2.0, 0.25),  # inside alpha
     (8.0, 12.0, 0.25),  # inside beta

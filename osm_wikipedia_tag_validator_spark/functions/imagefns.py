@@ -42,13 +42,6 @@ def block_mean_resize(plane: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
     return out / np.maximum(cnt, 1)
 
 
-def resize_nearest(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    h, w = img.shape[:2]
-    ys = (np.arange(out_h) * h // out_h).astype(np.int64)
-    xs = (np.arange(out_w) * w // out_w).astype(np.int64)
-    return img[ys[:, None], xs[None, :]]
-
-
 def ahash64(img: np.ndarray) -> int:
     """64-bit average hash of an RGB image. Deterministic.
 

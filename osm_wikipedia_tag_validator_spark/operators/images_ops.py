@@ -1,5 +1,5 @@
-"""Multimodal (image) column operators — decode / features / resize /
-verify, all as Arrow-batched mapInPandas stages over the binary column.
+"""Multimodal (image) column operator — the per-row integrity check,
+an Arrow-batched mapInPandas stage over the binary column.
 
 The `images.bytes` column is opaque binary + typed metadata (w, h,
 fmt) per the input_hint. Decode uses the in-repo codecs
@@ -16,7 +16,7 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..datagen.codecs import (
     LOSSY_FMTS,
@@ -24,101 +24,7 @@ from ..datagen.codecs import (
     encode_image,
     psnr,
 )
-from ..functions.imagefns import ahash64, luma, resize_nearest
-
-FEATURES_SCHEMA = (
-    "image_id string, w int, h int, fmt string, caption string, "
-    "phash long, mean_luma double, std_luma double, decoded_phash long"
-)
-
-
-def extract_features(images: DataFrame) -> DataFrame:
-    """Decode each image inside the Arrow batch and emit cheap features
-    + a recomputed perceptual hash (drift check against the stored
-    phash column)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                img = decode_image(bytes(r.bytes))
-                g = luma(img)
-                rows.append(
-                    (
-                        r.image_id, r.w, r.h, r.fmt, r.caption, r.phash,
-                        float(g.mean()), float(g.std()), ahash64(img),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "image_id", "w", "h", "fmt", "caption", "phash",
-                    "mean_luma", "std_luma", "decoded_phash",
-                ],
-            )
-
-    return images.mapInPandas(gen, FEATURES_SCHEMA)
-
-
-COMPARE_SCHEMA = (
-    "image_id string, fmt string, psnr_db double, pixels_ok boolean, caption_ok boolean"
-)
-
-
-def compare_against_reference(
-    images: DataFrame, reference: DataFrame, min_psnr_db: float = 40.0
-) -> DataFrame:
-    """THE per-row invariant of BASELINE.json input_hint, verbatim:
-    decoded-pixel allclose (PSNR ≥ 40 dB for lossy formats; exact for
-    lossless) + BYTE-EXACT caption equality, row-matched against a
-    reference table on image_id.
-
-    Physical plan: equi-join on image_id (shuffle-hash both-sides-big,
-    or bucketed co-located at scale) → one Arrow-batched decode+compare
-    stage. Rows missing from either side surface as pixels_ok=false.
-    """
-    ref = reference.select(
-        F.col("image_id"),
-        F.col("bytes").alias("ref_bytes"),
-        F.col("fmt").alias("ref_fmt"),
-        F.col("caption").alias("ref_caption"),
-    )
-    joined = images.select("image_id", "bytes", "fmt", "caption").join(
-        ref.hint("shuffle_hash"), "image_id", "full_outer"
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                if r.bytes is None or r.ref_bytes is None:
-                    rows.append((r.image_id, r.fmt or r.ref_fmt, 0.0, False, False))
-                    continue
-                try:
-                    a = decode_image(bytes(r.bytes))
-                    b = decode_image(bytes(r.ref_bytes))
-                except ValueError:
-                    # structurally corrupt row (bad header/truncation) —
-                    # flag it, never fail the task
-                    rows.append(
-                        (r.image_id, r.fmt, 0.0, False, r.caption == r.ref_caption)
-                    )
-                    continue
-                if a.shape != b.shape:
-                    rows.append((r.image_id, r.fmt, 0.0, False, r.caption == r.ref_caption))
-                    continue
-                p = psnr(a, b)
-                lossy = (r.fmt in LOSSY_FMTS) or (r.ref_fmt in LOSSY_FMTS)
-                ok = (p >= min_psnr_db) if lossy else (p == float("inf"))
-                rows.append(
-                    (r.image_id, r.fmt, float(min(p, 1e9)), bool(ok), r.caption == r.ref_caption)
-                )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "fmt", "psnr_db", "pixels_ok", "caption_ok"]
-            )
-
-    return joined.mapInPandas(gen, COMPARE_SCHEMA)
-
+from ..functions.imagefns import ahash64
 
 VERIFY_SCHEMA = (
     "image_id string, fmt string, psnr double, phash_match boolean, "
@@ -131,9 +37,7 @@ def verify_invariants(images: DataFrame, min_psnr_db: float = 40.0,
     """Self-referential integrity check of each image row: re-encode the
     decoded pixels with the row's own fmt and report the round-trip
     PSNR + stored-phash match — the engine-side integrity pass the
-    bench loop samples (SURVEY.md §7.3e). The row-matched comparison
-    against a reference table (BASELINE.json input_hint) is
-    `compare_against_reference`.
+    bench loop samples (SURVEY.md §7.3e).
 
     `invariant_ok` is the row's verdict: `phash_match` and `caption_ok`
     hold, and the PSNR passes — ≥ `min_psnr_db` for lossy formats
@@ -187,85 +91,3 @@ def verify_invariants(images: DataFrame, min_psnr_db: float = 40.0,
             )
 
     return images.mapInPandas(gen, VERIFY_SCHEMA)
-
-
-THUMB_SCHEMA = "image_id string, thumb binary, tw int, th int"
-
-
-def make_thumbnails(images: DataFrame, size: int = 8) -> DataFrame:
-    """Resize (nearest-neighbor) each image to size×size and re-encode
-    as PNG — the classic preprocessing stage; stays inside the batch."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                img = decode_image(bytes(r.bytes))
-                th = resize_nearest(img, size, size)
-                rows.append((r.image_id, encode_image(th, "png"), size, size))
-            yield pd.DataFrame(rows, columns=["image_id", "thumb", "tw", "th"])
-
-    return images.mapInPandas(gen, THUMB_SCHEMA)
-
-
-def neardup_by_phash(features: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """(id1, id2, hamming) image near-dup pairs with Hamming(phash) ≤
-    max_hamming, id1 < id2.
-
-    Candidates come from a band equi-join (never an all-pairs cross
-    join): the 64-bit phash splits into n_bands chunks; a pair with
-    ≤ n_bands-1 differing bits must agree on at least one chunk
-    (pigeonhole), so EXACT recall requires max_hamming ≤ n_bands - 1.
-    The band count is the smallest power of two that keeps the
-    guarantee (8 for the default of 6) — a looser threshold costs more
-    bands (shorter chunks → fatter candidate buckets), it never
-    silently drops recall. Verification is JVM-side bit_count on the
-    joined hashes. Scales as Σ bucket² per band, not n²."""
-    n_bands = 4
-    while n_bands - 1 < max_hamming and n_bands < 64:
-        n_bands *= 2
-    if max_hamming > n_bands - 1:
-        raise ValueError(
-            f"max_hamming={max_hamming} breaks the pigeonhole guarantee "
-            f"for {n_bands} bands (exact only ≤ {n_bands - 1})"
-        )
-    band_bits = 64 // n_bands
-    mask = (1 << band_bits) - 1
-    chunks = features.select(
-        "image_id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk"),
-                        F.shiftright("phash", i * band_bits)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("ck"),
-                    )
-                    for i in range(n_bands)
-                ]
-            )
-        ).alias("c"),
-    ).select("image_id", "phash", "c.*")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.ck") == F.col("b.ck"))
-            & (F.col("a.image_id") < F.col("b.image_id")),
-        )
-        .select(
-            F.col("a.image_id").alias("id1"),
-            F.col("b.image_id").alias("id2"),
-            F.col("a.phash").alias("s1"),
-            F.col("b.phash").alias("s2"),
-        )
-        .dropDuplicates(["id1", "id2"])
-    )
-    return (
-        cand.withColumn("hamming", F.expr("bit_count(s1 ^ s2)"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id1", "id2", "hamming")
-    )

@@ -2,8 +2,9 @@
 
 Each image/element location gets a Web-Mercator XYZ raster tile id
 (standard slippy-map math — public formula) as a pure Catalyst
-expression, and tiles are assigned to the vector layer (region
-polygons) so every tile carries its validated caption/tag lineage.
+expression; `plans.pipeline.image_tile_assignments` then assigns the
+tiles to the vector layer (region polygons) so every tile carries its
+validated caption/tag lineage.
 
 Tile id packing matches the DGG cell packing (functions/cells.py):
   tile_id = (z << 58) | (x << 29) | y
@@ -14,9 +15,6 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column, DataFrame, functions as F
-
-from ..functions import cells as C
-from . import spatial_join as SJ
 
 _MAX_MERC_LAT = 85.05112878
 
@@ -70,28 +68,3 @@ def assign_tiles(
         .withColumn("tile_y", y)
         .withColumn("tile_id", tile_id_col(F.col(lon_col), F.col(lat_col), z))
     )
-
-
-def tile_vector_assignment(
-    points: DataFrame,
-    polygons: DataFrame,
-    z: int,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    lineage_cols: list[str] | None = None,
-) -> DataFrame:
-    """Raster↔vector assignment with lineage.
-
-    Every point row → (tile_id, polygon_id, region, …lineage). A
-    downstream `groupBy(tile_id, region)` gives the per-tile rollup;
-    the per-point rows keep full lineage (image_id/caption) as the
-    north rule requires.
-    """
-    lineage_cols = lineage_cols or []
-    tiled = assign_tiles(points, z, lon_col, lat_col)
-    joined = SJ.point_in_polygon_join(tiled, polygons, lon_col, lat_col)
-    cols = ["tile_id", "tile_x", "tile_y", "cell", "polygon_id", "region"] + lineage_cols
-    return joined.select(*[c for c in cols if c in joined.columns], *(
-        [c for c in points.columns if c in joined.columns and c not in cols]
-    ))
-

@@ -136,7 +136,9 @@ def build_wiki_entities_dim(
 def assert_wiki_dim(wiki: DataFrame) -> DataFrame:
     """Cheap plan-side contract check used by the validator: all
     consumed columns present (types are the source's responsibility via
-    `build_wiki_entities_dim`). Returns the input unchanged."""
+    `build_wiki_entities_dim`). Returns the input projected to the
+    contract's columns, so the validator caches and broadcasts nothing
+    outside it."""
     missing = [c for c in CONSUMED_COLUMNS if c not in set(wiki.columns)]
     if missing:
         raise ValueError(
@@ -144,7 +146,7 @@ def assert_wiki_dim(wiki: DataFrame) -> DataFrame:
             f"with sources.wiki_dim.build_wiki_entities_dim (contract: "
             f"{WIKI_DIM_SCHEMA})"
         )
-    return wiki
+    return wiki.select(*CONSUMED_COLUMNS)
 
 
 # ---------------------------------------------------------------------------

@@ -1,108 +1,16 @@
-"""Structured Streaming realization of the reference's incremental loop.
+"""Edit-rate quota for micro-batches (T8, SURVEY.md §2.10).
 
-The reference is batch-polling with watermarks (SURVEY.md §2.10): per
-area it asks Overpass for elements `newer:` than the stored max
-timestamp (`obtain_from_overpass.py:53-75`, `database.py:52-59`). The
-streaming-native equivalent: a file/rate source → event-time windowed
-aggregation with a watermark for late data → incremental sink.
-
-These wrappers are exercised by tests with a file source over the
-driver's events table re-written as micro-batch files; on a cluster
-the source would be Kafka/Iceberg-CDC, everything else unchanged.
+The reference bot throttles its edits with wall-clock sleeps
+(`osm_editor_bot_for_approved_tasks.py:393,405-406`). Here the budget
+is per micro-batch: `rate_limited_split` cuts a batch into the rows
+that reach the sink and the over-quota rows that are deferred, in one
+deterministic total order; `rate_limited_batch` and `rate_limited_sink`
+apply it to a batch DataFrame and to a `writeStream` trigger.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def stream_events_from_files(
-    spark: SparkSession, path: str, schema: str,
-    max_files_per_trigger: int = 1,
-) -> DataFrame:
-    """File-based micro-batch source (T8 throttling ↔
-    maxFilesPerTrigger)."""
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-
-
-def windowed_counts(events: DataFrame, window: str = "1 hour",
-                    watermark: str = "2 hours") -> DataFrame:
-    """Tumbling event-time window counts with late-data watermark (T1/T2:
-    late rows update their window until the watermark passes, then the
-    state is dropped — the streaming analog of the reference's
-    stale-report invalidation, `script.py:232-255`)."""
-    return (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-
-
-def latest_state_per_key(events: DataFrame, watermark: str = "2 hours",
-                         key: str = "user_id", ts_col: str = "ts") -> DataFrame:
-    """Streaming dedup-to-latest (W1/J2 as a stream): keep the
-    EVENT-TIME-NEWEST row per key via a max_by stateful aggregation.
-
-    dropDuplicatesWithinWatermark would keep the FIRST-ARRIVING row per
-    key, so out-of-order micro-batches would pin a stale row forever —
-    max_by keeps the event-time max regardless of arrival order. Run
-    with outputMode='update' (each batch emits keys whose latest row
-    changed; the sink upserts)."""
-    e = events.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withWatermark(
-        ts_col, watermark
-    )
-    others = [c for c in e.columns if c != key]
-    return (
-        e.groupBy(key)
-        .agg(F.max_by(F.struct(*others), F.col(ts_col)).alias("_s"))
-        .select(key, "_s.*")
-    )
-
-
-def run_stream_to_memory(stream_df: DataFrame, query_name: str,
-                         timeout_sec: float = 60.0, output_mode: str = "append"):
-    """Drive a streaming query to completion of all available input
-    (processAllAvailable) into an in-memory sink table; returns the
-    final table DataFrame. Test/bench harness helper."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return stream_df.sparkSession.table(query_name)
-
-
-def stream_image_features(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 1
-) -> DataFrame:
-    """Streaming MULTIMODAL ingest: file-source micro-batches of image
-    rows (opaque `bytes` binary column + typed metadata) → Arrow-batched
-    decode + feature extraction via the SAME mapInPandas operator the
-    batch path uses (`images_ops.extract_features`) — one operator
-    implementation serves both execution modes, which is the Structured
-    Streaming contract (same DataFrame plan, incremental execution).
-    On a cluster the source is Kafka/Iceberg-CDC of image pointers or
-    payloads; maxFilesPerTrigger is the ingest throttle (T8)."""
-    from ..datagen.world import IMAGES_SCHEMA
-    from ..operators.images_ops import extract_features
-
-    stream = (
-        spark.readStream.schema(IMAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(path)
-    )
-    return extract_features(stream)
+from pyspark.sql import DataFrame, functions as F
 
 
 def rate_limited_batch(batch_df: DataFrame, quota: int,
@@ -113,16 +21,15 @@ def rate_limited_batch(batch_df: DataFrame, quota: int,
     The reference throttles actuation with wall-clock sleeps (2 s per
     edit, 60 s per changeset — `osm_editor_bot_for_approved_tasks.py:
     393,405-406`; 60 s per download `obtain_from_overpass.py:73-74`).
-    The streaming-native budget is per-trigger: ingest is bounded by
-    maxFilesPerTrigger (`stream_events_from_files`), actuation by this
-    cap inside foreachBatch, and wall-time by a processingTime trigger —
-    together they bound actions/second exactly like the sleeps, without
-    idling executors. The overflow count is returned for the caller's
-    ledger; the over-quota remainder must be RE-ENQUEUED by the caller
-    (Spark's file/Kafka sources commit each batch exactly-once and
-    never re-deliver it — "wait for the next poll" is not a semantics
-    the source provides; the reference gets re-delivery by re-reading
-    its pending table every loop,
+    The streaming-native budget is per-trigger: actuation is bounded by
+    this cap inside foreachBatch and wall-time by a processingTime
+    trigger (`rate_limited_sink`) — together they bound actions/second
+    like the sleeps, without idling executors. The overflow count is
+    returned for the caller's ledger; the over-quota remainder must be
+    RE-ENQUEUED by the caller (Spark's file/Kafka sources commit each
+    batch exactly-once and never re-deliver it — "wait for the next
+    poll" is not a semantics the source provides; the reference gets
+    re-delivery by re-reading its pending table every loop,
     `osm_editor_bot_for_approved_tasks.py:488-512`).
     `rate_limited_sink`'s `defer_fn` is that re-enqueue hook."""
     take, _ = rate_limited_split(batch_df, quota, order_cols)

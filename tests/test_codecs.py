@@ -141,14 +141,6 @@ def test_dct8_encode_batch_identity_across_batch_sizes():
     assert one == small == large == codecs.dct8_encode(imgs[0])
 
 
-@pytest.mark.parametrize("fmt", ["png", "jpeg", "dct8"])
-def test_encode_image_ex_matches_encode_then_decode(fmt):
-    img = _stack(1, 16, 24, seed=19)[0]
-    data, dec = codecs.encode_image_ex(img, fmt)
-    assert data == codecs.encode_image(img, fmt)
-    np.testing.assert_array_equal(dec, codecs.decode_image(data, fmt))
-
-
 @pytest.mark.parametrize("h,w", [(8, 8), (16, 24), (64, 48)])
 def test_ahash64_batch_identical_to_scalar(h, w):
     imgs = _stack(6, h, w, seed=23)

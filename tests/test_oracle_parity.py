@@ -22,7 +22,7 @@ _QUERIES = OQ.queries()
 
 def _duck(sql: str) -> pd.DataFrame:
     con = duckdb.connect()
-    for t in ["customer", "events", "nation", "orders", "supplier"]:
+    for t in ["customer", "events", "nation", "orders"]:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
     return con.execute(sql).fetchdf()
 

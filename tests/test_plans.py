@@ -152,16 +152,3 @@ def test_image_lineage_join_is_shuffle_hash_never_broadcast(spark):
     assert any("element_id" in s for s in sh), plan[:4000]
     bh = [seg for seg in plan.split("\n") if "BroadcastHashJoin" in seg]
     assert not any("element_id" in s for s in bh), plan[:4000]
-
-
-def test_reference_compare_join_is_shuffle_hash(spark):
-    """images_ops.compare_against_reference joins two byte-carrying
-    fact tables full-outer on image_id — must stay shuffled-hash for
-    the same broadcast-of-bytes reason."""
-    from osm_wikipedia_tag_validator_spark.operators import images_ops as IO
-
-    imgs = W.spark_images(spark, 60)
-    plan = _plan(IO.compare_against_reference(imgs, imgs))
-    sh = [seg for seg in plan.split("\n") if "ShuffledHashJoin" in seg]
-    assert any("image_id" in s for s in sh), plan[:4000]
-    assert "BroadcastHashJoin" not in plan

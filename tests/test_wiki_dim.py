@@ -100,3 +100,19 @@ def test_validator_consumes_normalized_dim(spark):
     a = V.validate(elements, WD.build_wiki_entities_dim(raw), regions).count()
     b = V.validate(elements, raw, regions).count()
     assert a == b and a > 0
+
+
+def test_validator_caches_only_contract_columns(spark):
+    """A raw dim with columns outside the contract (the generator's
+    `lat`/`lon`/`has_coord`) is projected before the validator caches
+    its pre-joined wiki dim, so none of them is cached or broadcast."""
+    from osm_wikipedia_tag_validator_spark import session as S
+    from osm_wikipedia_tag_validator_spark.operators import validator as V
+
+    raw = W.spark_wiki_entities(spark, n=80)
+    extra = {"lat", "lon", "has_coord"}
+    assert extra <= set(raw.columns)
+    V.validate(W.spark_elements(spark, 80), raw, W.spark_regions(spark))
+    dim = S._SNAPSHOT_MEMOS["wiki_dim"][3]
+    assert set(WD.CONSUMED_COLUMNS) <= set(dim.columns)
+    assert not extra & set(dim.columns)
